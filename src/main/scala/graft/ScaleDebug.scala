@@ -44,7 +44,7 @@ object ScaleDebug {
       // from the loop-invariant checkpoint.
       val edges = graft.queries.TextOps.jaccardPairs(spark, dir)
         .select(col("da").as("u"), col("db").as("v"))
-      val (e, degn) = graft.queries.TextOps.prGraph(edges)
+      val (e, degn) = graft.queries.TextOps.prGraph(graft.queries.Lineage.cut(edges))
       val pr0 = graft.queries.TextOps.prInit(degn)
         .localCheckpoint(eager = false)
       val one = graft.queries.TextOps.prStepBody(pr0, e, degn)
@@ -141,12 +141,12 @@ object ScaleDebug {
       // count; the clique-of-replicas shape mirrors what near-dup
       // clustering actually feeds these loops) plus one 2047-node
       // chain so star contraction's round count exercises its
-      // log-diameter term, not just clique depth-1. Set
-      // GRAFT_CC_DEBUG/GRAFT_PR_DEBUG for per-round times — flat
-      // per-round cost is the checkpointFresh stats-reset claim at
-      // 2-3x the shipped loops' round counts; round counts staying
-      // near the sf1 measurements (6 cc / 17-47 pr) is the
-      // mixing-bound claim (pagerank's rate is the 0.85 damping
+      // log-diameter term, not just clique depth-1. Set GRAFT_CC_DEBUG
+      // for per-round times — flat per-round cost is the
+      // checkpointFresh stats-reset claim at 2-3x the shipped loops'
+      // round counts; round counts staying near the sf1 measurements
+      // (6 cc / 17-47 pr; pagerank's round is on its INFO log line) is
+      // the mixing-bound claim (pagerank's rate is the 0.85 damping
       // factor, graph-size-free; contraction is log-diameter).
       val nc = args.lift(2).map(_.toInt).getOrElse(520000)
       val k = 11
@@ -609,9 +609,8 @@ object ScaleDebug {
       // converge2 but not its step body or stop scale. Same edge set as
       // synthfix (520k 11-cliques + one 2047-chain = 28.6M edges); seeds
       // are doc_id % 10 == 0, ~10% of nodes, exactly the shipped rule.
-      // Set GRAFT_PR_DEBUG=1 for per-round deltas; the claim under test
-      // is round count ≪ PPR_CAP=80 (mixing-bound, graph-size-free) and
-      // flat per-round cost.
+      // The claim under test is round count ≪ PPR_CAP=80 (mixing-bound,
+      // graph-size-free; the INFO log line reports the round reached).
       val nc = args.lift(2).map(_.toInt).getOrElse(520000)
       val k = 11
       val ij = spark.range(k).select(col("id").as("i"))
@@ -631,7 +630,7 @@ object ScaleDebug {
       spark.stop(); return
     }
     if (args.lift(1).contains("pagerank")) {
-      // One full q104 run (set GRAFT_PR_DEBUG=1 for per-round deltas):
+      // One full q104 run (the INFO log line reports the round reached):
       // confirms the convergence loop lands under PR_CAP at this scale
       // (iteration count is ~scale-free: both the initial delta and the
       // relative tolerance scale as 1/n).

@@ -35,6 +35,13 @@ import Lineage.LineageOps
   * later reference, so a round stays ONE job — an eager checkpoint
   * here would silently re-add the extra job per round that the r8
   * single-job-per-round optimization removed (ADVICE r9).
+  *
+  * q104/q158 take these cuts only on their DISTRIBUTED tier: the
+  * builders cut the pair list once and gate on one bounded collect of
+  * it, and a graph of at most `LocalRank.LocalMaxPairs` pairs iterates
+  * in the driver instead (`LocalRank`) — no per-round job, no
+  * checkpoint, no plan statistics to reset. Larger graphs run
+  * `TextOps.converge2` over this object's per-round checkpoints.
   */
 object Fixpoint {
   /** Timing caveat (round-10 measurement, q149): even with
@@ -67,7 +74,7 @@ object Fixpoint {
     * q65+q102+q143 at sf0.1 (tagged bench artifacts): 19.2 s total
     * with a reset every round vs 15.0 s with plain checkpoints vs
     * ~16.2 s amortized — and q104's per-round time is 0.3–0.4 s flat
-    * through 47 rounds under the amortized form (GRAFT_PR_DEBUG),
+    * through 47 rounds under the amortized form (round-10 measurement),
     * identical to the every-round-reset shape. The plain lazy
     * `localCheckpoint` keeps the partitioning but inherits compounding
     * stats; taking it RESET_EVERY−1 rounds out of RESET_EVERY bounds

@@ -2120,20 +2120,20 @@ object TextOps {
 
   /** The symmetrized graph: edge list + per-node degree/count table
     * (symmetrizing means every node has degree ≥ 1 — no dangling-mass
-    * term). */
-  private[graft] def prGraph(pairs: DataFrame): (DataFrame, DataFrame) = {
-    // EAGER checkpoint of the pair list BEFORE the symmetrizing union —
-    // the r11 degreeAssortativity lesson, which this builder never got:
-    // the union references `pairs` twice inside the one job that
-    // materializes `edges`, so the whole upstream jaccardPairs build
-    // (scan → shingle window → pair self-join → aggregate) ran TWICE
-    // per q104/q158 invocation (round-16 StageProbe: the two 7 s-cpuSum
-    // pair-agg stages and two document-scan stages, ~2 s wall of the
-    // warm 11.7 s). Eager, not lazy, because both branches sit in the
-    // same stage of the materializing job and a lazy persist lets their
-    // tasks race-compute the same source partitions (the measured
-    // degreeAssortativity A/B).
-    val p = pairs.cut()
+    * term).
+    *
+    * `p` is the pair list, already EAGERLY cut by the caller — the r11
+    * degreeAssortativity lesson: the union references the pairs twice
+    * inside the one job that materializes `edges`, so without the cut
+    * the whole upstream jaccardPairs build (scan → shingle window →
+    * pair self-join → aggregate) ran TWICE per q104/q158 invocation
+    * (round-16 StageProbe: two 7 s-cpuSum pair-agg stages). Eager, not
+    * lazy, because both branches sit in the same stage of the
+    * materializing job and a lazy persist lets their tasks race-compute
+    * the same source partitions (the measured degreeAssortativity A/B).
+    * The in-process tier's gate reads the same cut, so the pairs are
+    * materialized once whichever tier runs. */
+  private[graft] def prGraph(p: DataFrame): (DataFrame, DataFrame) = {
     val edges = p.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(p.select(col("v").as("src"), col("u").as("dst")))
       .cut(false)
@@ -2152,7 +2152,7 @@ object TextOps {
   /** Fixed-iteration damped PageRank — the unit-testable step semantics
     * (PipelineOpsSpec pins it against an independent local model). */
   private[graft] def pageRank(pairs: DataFrame, iters: Int): DataFrame = {
-    val (edges, degn) = prGraph(pairs)
+    val (edges, degn) = prGraph(pairs.cut())
     var pr = prInit(degn)
     for (i <- 1 to iters) pr = prStep(pr, edges, degn, i)
     pr
@@ -2170,17 +2170,32 @@ object TextOps {
     * recursion. An EXACT fixpoint stop would not terminate: the
     * quantized iteration settles into a few-quanta oscillation, which
     * is why the tolerance is relative and ≫ 1 quantum (max(1, …) guards
-    * a pathological n > PR_TOL_NUM_Q where the floor would reach 0). */
+    * a pathological n > PR_TOL_NUM_Q where the floor would reach 0).
+    *
+    * Two tiers behind one gate: the pair list is cut once, and one
+    * bounded collect (`LocalRank.collectBounded`) reads at most
+    * `localMax` + 1 rows of that cut. If the whole list came back, the
+    * loop runs in the driver and returns a LocalRelation (the in-process
+    * tier, [[LocalRank]]); otherwise `prGraph` + [[converge2]] run over
+    * the same cut (the distributed tier, one extra job for the gate).
+    * The tiers' iterates, stop round and cap failure are bit-identical;
+    * `localMax` = 0 forces the distributed tier. */
   private[graft] def pageRankConverged(pairs: DataFrame,
       cap: Int = PR_CAP,
-      unroll: Option[Int] = None): DataFrame = {
-    val (edges, degn) = prGraph(pairs)
-    val nRow = degn.select(col("n")).head(1)
-    val pr = prInit(degn)
-    if (nRow.isEmpty) return pr // empty graph: nothing to iterate
-    val tolQ = math.max(1L, PR_TOL_NUM_Q / nRow(0).getLong(0))
-    converge2(pr, prStepBody(_, edges, degn), tolQ, cap, "pr",
-      unroll.getOrElse(convergeUnroll(pairs.sparkSession)))
+      unroll: Option[Int] = None,
+      localMax: Int = LocalRank.LocalMaxPairs): DataFrame = {
+    val p = pairs.cut()
+    LocalRank.collectBounded(p, localMax) match {
+      case Some(rows) =>
+        val g = new LocalRank.Graph(rows)
+        g.frame(p, g.converge(g.ids.map(_ => true), cap, "pr"))
+      case None =>
+        val (edges, degn) = prGraph(p)
+        val n = degn.select(col("n")).head().getLong(0) // p is non-empty
+        val tolQ = math.max(1L, PR_TOL_NUM_Q / n)
+        converge2(prInit(degn), prStepBody(_, edges, degn), tolQ, cap, "pr",
+          unroll.getOrElse(convergeUnroll(pairs.sparkSession)), n)
+    }
   }
 
   /** Rounds materialized per convergence job (round 13; was 2 since
@@ -2232,20 +2247,23 @@ object TextOps {
     * fail-loud cap triggers exactly where the single-step loop would
     * have thrown (the q104 discipline). Iterates are bit-identical
     * (same integer-quanta step body, merely composed), so the unroll
-    * is invisible to every oracle. */
+    * is invisible to every oracle.
+    *
+    * This is the DISTRIBUTED tier of q104/q158: their builders run it
+    * only when the gate found more than `localMax` pairs; smaller graphs
+    * take the in-process twin `LocalRank.Graph.converge`, which repeats
+    * this loop's arithmetic, stop rule and cap failure in the driver.
+    * Both tiers log one INFO line per loop ([[logConverged]]), the only
+    * use of `nodes`. */
   private def converge2(init: DataFrame, stepBody: DataFrame => DataFrame,
-      tolQ: Long, cap: Int, tag: String, unroll: Int): DataFrame = {
+      tolQ: Long, cap: Int, tag: String, unroll: Int,
+      nodes: Long): DataFrame = {
     require(unroll >= 1, s"$tag: unroll must be >= 1, got $unroll")
-    val dbg = sys.env.contains("GRAFT_PR_DEBUG")
     var pr = init
     var k = 0
     var delta = Long.MaxValue
     while (delta > tolQ) {
-      if (k + 1 > cap) throw new IllegalStateException(
-        s"$tag failed to converge within $cap iterations " +
-          s"(delta=$delta quanta, tol=$tolQ) — raise the cap or loosen " +
-          "the tolerance")
-      val t0 = System.nanoTime
+      if (k + 1 > cap) throw capExceeded(tag, cap, delta, tolQ)
       val steps = math.min(unroll, cap - k) // ≥ 1 by the guard
       // inter(0) = carried state (round k); inter(i), i ≥ 1 = round k+i,
       // lazily checkpointed; the round k+steps output stays in-plan (the
@@ -2272,9 +2290,6 @@ object TextOps {
       }
       val row = out.agg(aggs.head, aggs.tail: _*).head()
       val ds = (0 until steps).map(row.getLong)
-      if (dbg) println(f"[$tag] rounds ${k + 1}..${k + steps}: " +
-        s"d=${ds.mkString(",")} tol=$tolQ " +
-        f"${(System.nanoTime - t0) / 1e9}%.1f s")
       val carried = (0 until steps).map(i => s"q$i")
       val firstOk = ds.indexWhere(_ <= tolQ) // 0-based: round k+firstOk+1
       if (firstOk >= 0) {
@@ -2288,15 +2303,37 @@ object TextOps {
         pr = out.drop(carried: _*)
       }
     }
+    logConverged(tag, "distributed", nodes, k, delta, tolQ)
     pr
   }
+
+  /** The fail-loud cap of both PageRank tiers — one message, so a cap
+    * failure reads the same whichever tier ran. */
+  private[queries] def capExceeded(tag: String, cap: Int, delta: Long,
+      tolQ: Long): IllegalStateException = new IllegalStateException(
+    s"$tag failed to converge within $cap iterations " +
+      s"(delta=$delta quanta, tol=$tolQ) — raise the cap or loosen " +
+      "the tolerance")
+
+  /** One INFO line per converged PageRank loop: which tier ran, over how
+    * many nodes, the round it stopped at and that round's max |Δ|. */
+  private[queries] def logConverged(tag: String, tier: String, nodes: Long,
+      round: Int, delta: Long, tolQ: Long): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"$tag: $tier tier converged over $nodes nodes at round $round " +
+        s"(delta=$delta quanta, tol=$tolQ)")
+
+  /** q158's fail-loud seedless case, shared by both tiers. */
+  private def noSeeds(): IllegalStateException = new IllegalStateException(
+    s"personalized pagerank: no seed nodes (doc_id % $PPR_SEED_MOD == 0) " +
+      "in the similarity graph — the teleport vector is undefined")
 
   /** q158: the PPR node table — prGraph's degn extended with the seed
     * indicator and the (broadcast) seed count. Fails loud on a seedless
     * graph: with |S| = 0 the teleport vector is undefined, and silently
     * returning the all-zero fixpoint would look like a result. */
-  private def pprGraph(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val (edges, degn) = prGraph(pairs)
+  private def pprGraph(p: DataFrame): (DataFrame, DataFrame) = {
+    val (edges, degn) = prGraph(p)
     val seeded = degn.withColumn("seed",
       (pmod(col("doc_id"), lit(PPR_SEED_MOD)) === 0).cast("long"))
     val degns = seeded
@@ -2326,19 +2363,31 @@ object TextOps {
 
   /** Convergence-based PPR — q104's loop discipline verbatim (carried
     * prev, one action per round, amortized checkpoint stats reset,
-    * fail-loud cap), over the seeded teleport vector. */
+    * fail-loud cap), over the seeded teleport vector, behind the same
+    * two-tier gate as [[pageRankConverged]]. */
   private[graft] def pprConverged(pairs: DataFrame,
       cap: Int = PPR_CAP,
-      unroll: Option[Int] = None): DataFrame = {
-    val (edges, degns) = pprGraph(pairs)
-    val head = degns.select(col("n"), col("ns")).head(1)
+      unroll: Option[Int] = None,
+      localMax: Int = LocalRank.LocalMaxPairs): DataFrame = {
+    val p = pairs.cut()
+    LocalRank.collectBounded(p, localMax) match {
+      case Some(rows) =>
+        val g = new LocalRank.Graph(rows)
+        val seed = g.ids.map(id => Math.floorMod(id, PPR_SEED_MOD) == 0L)
+        if (g.ids.nonEmpty && !seed.contains(true)) throw noSeeds()
+        g.frame(p, g.converge(seed, cap, "ppr"), Some(seed))
+      case None => pprDistributed(p, cap, unroll)
+    }
+  }
+
+  private def pprDistributed(p: DataFrame, cap: Int,
+      unroll: Option[Int]): DataFrame = {
+    val (edges, degns) = pprGraph(p)
+    val head = degns.select(col("n"), col("ns")).head() // p is non-empty
     val pr = degns.select(col("doc_id"), col("deg"), col("n"),
       col("seed"), col("ns"),
       expr(s"CASE WHEN seed = 1 THEN $PR_Q div ns ELSE 0L END").as("q"))
-    if (head.isEmpty) return pr // empty graph: nothing to iterate
-    if (head(0).getLong(1) == 0L) throw new IllegalStateException(
-      s"personalized pagerank: no seed nodes (doc_id % $PPR_SEED_MOD == 0) " +
-        "in the similarity graph — the teleport vector is undefined")
+    if (head.getLong(1) == 0L) throw noSeeds()
     // Tolerance relative to the PER-SEED mass scale 1/|S|, not q104's
     // uniform 1/n: PPR scores concentrate near the seed set (a typical
     // seed holds ~0.15/|S| at the fixpoint), so 1/n-relative stopping
@@ -2348,9 +2397,9 @@ object TextOps {
     // past any reasonable cap — at sf1's n/|S| ≈ 10 with n = 52k).
     // 1/|S|-relative keeps both the relative precision AND the round
     // count scale-stable (mixing-bound, like q104's).
-    val tolQ = math.max(1L, PR_TOL_NUM_Q / head(0).getLong(1))
+    val tolQ = math.max(1L, PR_TOL_NUM_Q / head.getLong(1))
     converge2(pr, pprStepBody(_, edges, degns), tolQ, cap, "ppr",
-      unroll.getOrElse(convergeUnroll(pairs.sparkSession)))
+      unroll.getOrElse(convergeUnroll(p.sparkSession)), head.getLong(0))
   }
 
   /** q29/q65 shared CTE chain: df-capped exact-Jaccard pairs, ending in

@@ -16,7 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * joined at 1—20 — converges in enough rounds (>8) that every unroll
   * in 1..5 exercises both interior and final-iterate stops across jobs,
   * and includes a second seed (20) so PPR's teleport split is
-  * non-trivial. */
+  * non-trivial.
+  *
+  * Every run passes the in-process bound 0: this graph is far below
+  * `LocalRank.LocalMaxPairs`, and the unroll, conf and cap contracts
+  * belong to the distributed tier (`converge2`). LocalRankSpec pins the
+  * in-process tier against it. */
 class ConvergeUnrollSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
@@ -26,14 +31,16 @@ class ConvergeUnrollSpec extends AnyFunSuite {
 
   private def prAt(unroll: Int, cap: Int = 200): Map[Long, Long] = {
     import s.implicits._
-    queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), cap, Some(unroll))
+    queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), cap, Some(unroll),
+      localMax = 0)
       .select("doc_id", "q").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   private def pprAt(unroll: Int, cap: Int = 200): Map[Long, Long] = {
     import s.implicits._
-    queries.TextOps.pprConverged(pairs.toDF("u", "v"), cap, Some(unroll))
+    queries.TextOps.pprConverged(pairs.toDF("u", "v"), cap, Some(unroll),
+      localMax = 0)
       .select("doc_id", "q").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
@@ -48,7 +55,7 @@ class ConvergeUnrollSpec extends AnyFunSuite {
     try {
       conf match { case Some(v) => s.conf.set(key, v)
                    case None => s.conf.unset(key) }
-      queries.TextOps.pageRankConverged(pairs.toDF("u", "v"))
+      queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), localMax = 0)
         .select("doc_id", "q").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     } finally {

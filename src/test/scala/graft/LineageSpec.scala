@@ -11,8 +11,8 @@ import graft.queries.Lineage
   * survive executor loss) instead of `localCheckpoint` (executor-local
   * blocks, non-recoverable). The spec exercises the reliable path — cut
   * results equal the uncut frame, checkpoint files actually land in the
-  * configured dir, and a real multi-cut query path (q104's prGraph
-  * chain) runs green under the flag — and pins the default-off identity
+  * configured dir, and a real multi-cut query path (q104, plus its
+  * forced distributed tier's prGraph chain) runs green under the flag — and pins the default-off identity
   * with localCheckpoint semantics (plan truncated to a LogicalRDD-backed
   * frame either way). */
 class LineageSpec extends AnyFunSuite {
@@ -65,5 +65,17 @@ class LineageSpec extends AnyFunSuite {
       SparkEntry.queries(name)(s, sfDir).collect().toSeq
     }
     assert(rel === base)
+  }
+
+  test("q104's distributed tier stays green and equal under the flag") {
+    // q104 runs in-process at this scale; bound 0 forces the cut-heavy
+    // distributed loop through the reliable checkpoints.
+    import s.implicits._
+    val pairs = Seq((10L, 1L), (1L, 2L), (2L, 3L), (1L, 20L), (20L, 21L))
+      .toDF("u", "v")
+    def run() = graft.queries.TextOps.pageRankConverged(pairs, localMax = 0)
+      .orderBy("doc_id").collect().toSeq
+    val base = run()
+    assert(withReliable(run()) === base)
   }
 }

@@ -43,6 +43,10 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     // late r6: decimal-pinned PageRank sums and the A-ES weighted ranks
     // must not depend on summation/merge order
     "q104_pagerank",
+    // q158 shares q104's pair build and loop, seeded by doc_id: neither
+    // may see the layout (at this scale both loops run in-process;
+    // LocalRankSpec varies the layout under the distributed tier)
+    "q158_personalized_pagerank",
     "q107_weighted_sample",
     // the broadcast as-of rebuilds its (ts, tie)-sorted index per TASK
     // from broadcast rows whose arrival order the layout controls — the

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** q158 personalized PageRank: the integer-quanta iteration pinned
   * against an independent BigInt model on a paper-checkable hand graph
   * (the PipelineOpsSpec discipline for q104), plus the seedless
-  * fail-loud contract.
+  * fail-loud contract. Both run the distributed tier (in-process bound
+  * 0); LocalRankSpec pins the in-process tier against it.
   */
 class PprSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -47,7 +48,7 @@ class PprSpec extends AnyFunSuite {
   test("pprConverged matches the BigInt model on the hand graph") {
     import s.implicits._
     val df = pairs.toDF("u", "v")
-    val got = queries.TextOps.pprConverged(df)
+    val got = queries.TextOps.pprConverged(df, localMax = 0)
       .select("doc_id", "q").collect()
       .map(r => r.getLong(0) -> BigInt(r.getLong(1))).toMap
     val want = localPpr(pairs)
@@ -65,7 +66,7 @@ class PprSpec extends AnyFunSuite {
     import s.implicits._
     val df = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
     val e = intercept[IllegalStateException] {
-      queries.TextOps.pprConverged(df).collect()
+      queries.TextOps.pprConverged(df, localMax = 0).collect()
     }
     assert(e.getMessage.contains("no seed nodes"))
   }
