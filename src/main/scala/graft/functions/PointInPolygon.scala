@@ -14,9 +14,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * `point_in_polygon(px, py, xs, ys)`: point (px,py) against the closed
   * polygon whose vertices are the parallel double arrays xs/ys (closing
-  * edge v[n-1]→v[0] implicit). The crossing formula is textually identical
-  * to the relational parity join (graft.queries.Poster) and the DuckDB
-  * oracle, so all three produce bit-identical booleans.
+  * edge v[n-1]→v[0] implicit). The crossing formula (`crossX` in the
+  * companion, which q46's scanline also uses) is textually identical to
+  * the relational parity join (graft.queries.Poster) and the DuckDB
+  * oracle, so all of them produce bit-identical booleans.
   *
   * Why it exists: the relational form fans every cell out to |edges| rows
   * through a join and regroups — correct, oracle-checkable, but at 400×400
@@ -66,7 +67,7 @@ case class PointInPolygon(first: Expression, second: Expression,
     while (i < n) {
       val x2 = xs.getDouble(i); val y2 = ys.getDouble(i)
       if (((y1 > q) != (y2 > q)) &&
-          p < x1 + (x2 - x1) * (q - y1) / (y2 - y1)) in = !in
+          p < PointInPolygon.crossX(x1, y1, x2, y2, q)) in = !in
       x1 = x2; y1 = y2
       i += 1
     }
@@ -88,7 +89,7 @@ case class PointInPolygon(first: Expression, second: Expression,
          |  for (int $i = 0; $i < $n; $i++) {
          |    double $x2 = $xs.getDouble($i); double $y2 = $ys.getDouble($i);
          |    if ((($y1 > $py) != ($y2 > $py)) &&
-         |        $px < $x1 + ($x2 - $x1) * ($py - $y1) / ($y2 - $y1)) {
+         |        $px < ${PointInPolygon.Ref}.crossX($x1, $y1, $x2, $y2, $py)) {
          |      $in = !$in;
          |    }
          |    $x1 = $x2; $y1 = $y2;
@@ -103,6 +104,63 @@ case class PointInPolygon(first: Expression, second: Expression,
       newFourth: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird,
       fourth = newFourth)
+}
+
+object PointInPolygon {
+
+  /** The companion as generated Java code names it. */
+  private val Ref = "graft.functions.PointInPolygon$.MODULE$"
+
+  /** Where edge (x1,y1)→(x2,y2) crosses the horizontal line y = q. The one
+    * crossing formula of every point-in-polygon path in the engine: the
+    * expression's eval and codegen, the scanline below, and textually the
+    * relational parity join (graft.queries.Poster) and the DuckDB oracles.
+    * Strict IEEE arithmetic in a fixed order, so every caller gets the same
+    * double. */
+  def crossX(x1: Double, y1: Double, x2: Double, y2: Double, q: Double): Double =
+    x1 + (x2 - x1) * (q - y1) / (y2 - y1)
+
+  /** Scanline form of the expression for one row y = q: writes into `out`
+    * the crossings of every edge that straddles the row, edges taken in the
+    * expression's order and direction (v[i-1]→v[i], closing edge first),
+    * sorted ascending; returns how many. A NaN crossing is dropped: the
+    * expression's `p < NaN` never toggles. `out` needs xs.length slots. */
+  def crossings(xs: Array[Double], ys: Array[Double], q: Double,
+      out: Array[Double]): Int = {
+    val n = xs.length
+    var m = 0
+    if (n > 0) {
+      var x1 = xs(n - 1); var y1 = ys(n - 1)
+      var i = 0
+      while (i < n) {
+        val x2 = xs(i); val y2 = ys(i)
+        if ((y1 > q) != (y2 > q)) {
+          val c = crossX(x1, y1, x2, y2, q)
+          if (!c.isNaN) { out(m) = c; m += 1 }
+        }
+        x1 = x2; y1 = y2
+        i += 1
+      }
+    }
+    java.util.Arrays.sort(out, 0, m)
+    m
+  }
+
+  /** Marks the row's inside cells: `out(off + x)` is set iff an odd number
+    * of the `m` sorted crossings lie strictly right of gx(x), which is the
+    * expression's parity for the point (gx(x), q). One sweep, so `gx` must
+    * be nondecreasing (a linspace with hi ≥ lo). */
+  def sweepRow(cross: Array[Double], m: Int, gx: Array[Double],
+      out: Array[Boolean], off: Int): Unit = {
+    var j = 0 // crossings at or left of gx(x)
+    var x = 0
+    while (x < gx.length) {
+      val p = gx(x)
+      while (j < m && !(p < cross(j))) j += 1
+      out(off + x) = ((m - j) & 1) == 1
+      x += 1
+    }
+  }
 }
 
 /** Session extension registering the graft native functions — wire with

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** The reference-core recast (SURVEY §7.3 step 2): everything the reference
   * actually computes — kernel construction (app.py:22-29), palette hsv→rgb
@@ -75,12 +76,40 @@ object Poster {
   /** Default fixture location (external consumers: PosterScale, specs). */
   val FX: String = Default.fx
 
-  private def fx(s: SparkSession, name: String,
+  /** The declared schema of the input fixture `name` that
+    * tools/gen_fixtures.py writes (every fixture dir has the same layout).
+    * Reading with it skips the Parquet schema-inference job a schema-less
+    * read runs per file; FixtureSchemaSpec pins each one to the inferred
+    * schema. None for any other file, such as a kernel a caller wrote from
+    * `kernel(s, sigma)` (its offsets are BIGINT, not INT): that one is
+    * read with inference. */
+  private[graft] def fixtureSchema(name: String): Option[StructType] = {
+    def fields(ts: (String, DataType)*) =
+      Some(StructType(ts.map { case (n, t) => StructField(n, t) }))
+    val D = DoubleType
+    name match {
+      case "blob_params" => fields("blob_id" -> LongType, "radius" -> D,
+        "wobble" -> D, "cx" -> D, "cy" -> D, "depth" -> D, "base_r" -> D,
+        "base_g" -> D, "base_b" -> D, "xmin" -> D, "xmax" -> D, "ymin" -> D,
+        "ymax" -> D, "cx_mean" -> D, "cy_mean" -> D, "dist_max64" -> D,
+        "light_min64" -> D, "light_max64" -> D)
+      case "blob_vertices" => fields("blob_id" -> LongType,
+        "idx" -> IntegerType, "angle" -> D, "rr" -> D, "x" -> D, "y" -> D)
+      case "palette" => fields("i" -> LongType, "h" -> D, "s" -> D, "v" -> D,
+        "r" -> D, "g" -> D, "b" -> D)
+      case "kernel_sigma2" | "kernel_sigma6" | "kernel_sigma3p2" =>
+        fields("offset" -> IntegerType, "weight" -> D)
+      case _ => None
+    }
+  }
+
+  private[queries] def fx(s: SparkSession, name: String,
       cfg: PosterCfg = Default): DataFrame = {
     // Defensive native-function registration — the session may not have
     // been built with the graft extensions conf (see GraftExtensions).
     graft.functions.GraftExtensions.ensureRegistered(s)
-    s.read.parquet(s"${cfg.fx}/$name.parquet")
+    fixtureSchema(name).fold(s.read)(t => s.read.schema(t))
+      .parquet(s"${cfg.fx}/$name.parquet")
   }
 
   private val N = 64 // oracle-gate grid (same function as 400, smaller domain)
@@ -94,7 +123,7 @@ object Poster {
     * it across all cores) and the 14-row params table is broadcast — the
     * other way round would funnel every downstream cell computation
     * through the params file's single input partition. */
-  private def grid(s: SparkSession, n: Int,
+  private[queries] def grid(s: SparkSession, n: Int,
       cfg: PosterCfg = Default): DataFrame =
     s.range(n.toLong * n)
       .select((col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))

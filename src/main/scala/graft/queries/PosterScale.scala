@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.PointInPolygon
 
 /** Scale tier of the poster pipeline: the codegen point_in_polygon
   * expression (graft.functions.PointInPolygon) replacing the relational
@@ -14,39 +17,229 @@ import org.apache.spark.sql.functions._
   * ≡ oracle bit-for-bit before the expression is trusted at scale.
   *
   * q46 is the honest Spark-vs-reference benchmark: full default-parameter
-  * poster (14 blobs, 400×400, σ=6 shadow blur), mask computed cell-local
-  * inside whole-stage codegen (no 280× join fan-out, no mask shuffle);
-  * the only shuffles are per-blob aggregates (≤14-row outputs) and the
-  * two blur regroups (~0.4 M rows). Output is one summary row per blob,
-  * so result size is O(blobs) regardless of grid resolution.
+  * poster (14 blobs, 400×400, σ=6 shadow blur), rasterized by scanline
+  * inside each (blob, row-tile) task. The 14-row params, the 3,920
+  * vertices and the 37-tap kernel are the small "query" side, collected
+  * once at construction; the data side is one row per (blob, tile), and
+  * each task computes its tile's mask, shade and blur with no shuffle in
+  * between (see [[tile]]). The only shuffle is the per-blob fold of ≤ 98
+  * tile rows. Output is one summary row per blob, so result size is
+  * O(blobs) regardless of grid resolution.
   */
 object PosterScale {
 
-  private def vertArrays(s: SparkSession): DataFrame = Poster.vertArrays(s)
+  /** q46's row-tile height and blur radius (σ=6 kernel: 2R + 1 = 37 taps);
+    * T > 2R, so each mask row feeds at most two tiles' halos. */
+  private val T = 64
+  private val R = 18
 
-  /** Range-streamed grid (params broadcast): the n² cell ids split across
-    * all cores; streaming the 14-row params file instead would leave the
-    * whole pre-shuffle pipeline on one input partition. */
-  private def grid(s: SparkSession, n: Int): DataFrame = {
-    graft.functions.GraftExtensions.ensureRegistered(s)
-    s.range(n.toLong * n)
-      .select((col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))
-      .join(broadcast(s.read.parquet(s"${Poster.FX}/blob_params.parquet")))
-      .select(col("blob_id"), col("y"), col("x"),
-        col("cx_mean"), col("cy_mean"), col("depth"),
-        col("xmin"), col("xmax"), col("ymin"), col("ymax"),
-        (col("xmin") + col("x").cast("double") *
-          ((col("xmax") - col("xmin")) / lit((n - 1).toDouble))).as("gx"),
-        (col("ymin") + col("y").cast("double") *
-          ((col("ymax") - col("ymin")) / lit((n - 1).toDouble))).as("gy"))
+  /** One blob as the tile pass reads it: the padded-grid bounds, depth, the
+    * per-blob shade normalizers, and the ordered polygon (v[i-1]→v[i],
+    * closing edge implicit, as for the expression). */
+  private[graft] final case class Blob(id: Long, xmin: Double, xmax: Double,
+      ymin: Double, ymax: Double, cxMean: Double, cyMean: Double,
+      depth: Double, distMax: Double, lightMin: Double, lightMax: Double,
+      xs: Array[Double], ys: Array[Double])
+
+  /** One (blob, row-tile)'s share of q46's per-blob sums, over the tile's
+    * own rows: mask cells, their shade in DECIMAL(28,12) units of 1e-12,
+    * and the blurred mask's mass. */
+  private[graft] final case class Tile(cells: Long, shadeUnits: Long,
+      mass: Double)
+
+  /** Spark's `CAST(d AS DECIMAL(28,12))`, as an unscaled count of 1e-12:
+    * the same `Decimal(d)` and half-up `changePrecision` the cast runs. A
+    * shade is in [0.3, 1], so a whole grid's sum stays far below 2^63. */
+  private[graft] def shadeUnits(d: Double): Long = {
+    val v = Decimal(d)
+    if (!v.changePrecision(28, 12))
+      throw new ArithmeticException(s"shade $d overflows DECIMAL(28,12)")
+    v.toUnscaledLong
   }
+
+  /** The reference's per-cell shade with the default light (-0.6, 0.8):
+    * the expressions of Poster's shade field in the same order, so the
+    * doubles are the ones Spark computes. dist_max > 0, so the clip's
+    * operand is never NaN and math.min/max agree with least/greatest. */
+  private def shade(b: Blob, gx: Double, gy: Double): Double = {
+    val nx = gx - b.cxMean
+    val ny = gy - b.cyMean
+    val dist = math.sqrt(nx * nx + ny * ny)
+    val light = nx * -0.6 + ny * 0.8
+    val radial = math.min(1.0, math.max(0.0, 1.0 - dist / b.distMax))
+    val lightn = (light - b.lightMin) / (b.lightMax - b.lightMin)
+    0.3 + 0.7 * (0.5 * radial + 0.5 * lightn)
+  }
+
+  /** Row-tile k of blob b on the n×n grid, tiles t rows high, blurred with
+    * the odd-length `kernel` (radius r = its length / 2). None when the
+    * tile's halo holds no mask cell.
+    *
+    * Mask: each halo row's edge crossings are computed once and swept
+    * along the row's x (PointInPolygon.crossings/sweepRow), the
+    * expression's parity with the expression's crossing formula, so every
+    * cell's bit is the one `point_in_polygon(gx, gy, xs, ys)` gives; gx and
+    * gy are the grid's linspace `lo + i * ((hi - lo) / (n - 1))`.
+    *
+    * Blur: the separable convolution runs on a dense array of the halo
+    * rows (kT − r … (k+1)T − 1 + r, clipped to the grid) over the band of
+    * the halo mask's x extent ± r, with zero padding; the vertical pass
+    * at an own row reads rows ± r, all inside the halo, so the tile's mass
+    * is the whole-grid blur's mass over its own rows. Per-task memory is
+    * O((t + 2r) × n), bounded by the tile, not the blob. */
+  private[graft] def tile(b: Blob, k: Int, n: Int, t: Int,
+      kernel: Array[Double]): Option[Tile] = {
+    val r = kernel.length / 2
+    // halo rows, clipped to the grid; own rows
+    val rLo = math.max(0, k * t - r)
+    val rHi = math.min(n - 1, (k + 1) * t - 1 + r)
+    val oLo = k * t
+    val oHi = math.min(n - 1, (k + 1) * t - 1)
+    val h = rHi - rLo + 1
+    val stepX = (b.xmax - b.xmin) / (n - 1).toDouble
+    val stepY = (b.ymax - b.ymin) / (n - 1).toDouble
+    val gx = Array.tabulate(n)(x => b.xmin + x.toDouble * stepX)
+    def gy(y: Int): Double = b.ymin + y.toDouble * stepY
+    val in = new Array[Boolean](h * n)
+    val cross = new Array[Double](b.xs.length)
+    var xLo = n; var xHi = -1
+    var yy = 0
+    while (yy < h) {
+      val m = PointInPolygon.crossings(b.xs, b.ys, gy(rLo + yy), cross)
+      if (m > 0) {
+        PointInPolygon.sweepRow(cross, m, gx, in, yy * n)
+        var x = 0
+        while (x < n) {
+          if (in(yy * n + x)) { if (x < xLo) xLo = x; if (x > xHi) xHi = x }
+          x += 1
+        }
+      }
+      yy += 1
+    }
+    if (xHi < 0) return None
+    var cells = 0L; var units = 0L
+    var y = oLo
+    while (y <= oHi) {
+      val row = (y - rLo) * n
+      val q = gy(y)
+      var x = 0
+      while (x < n) {
+        if (in(row + x)) {
+          cells += 1
+          units = Math.addExact(units, shadeUnits(shade(b, gx(x), q)))
+        }
+        x += 1
+      }
+      y += 1
+    }
+    // the blur band: the halo mask's x extent ± r, clipped to the grid
+    val bx0 = math.max(0, xLo - r); val bx1 = math.min(n - 1, xHi + r)
+    val w = bx1 - bx0 + 1
+    val m = new Array[Double](h * w)
+    yy = 0
+    while (yy < h) {
+      var xx = 0
+      while (xx < w) { if (in(yy * n + bx0 + xx)) m(yy * w + xx) = 1.0; xx += 1 }
+      yy += 1
+    }
+    // horizontal pass over every halo row (zero padding beyond the band;
+    // cells beyond the grid edge clip away exactly like the bounded join
+    // form of q20/q21)
+    val tmp = new Array[Double](h * w)
+    yy = 0
+    while (yy < h) {
+      var xx = 0
+      while (xx < w) {
+        var acc = 0.0; var o = -r
+        while (o <= r) {
+          val sxx = xx + o
+          if (sxx >= 0 && sxx < w) acc += kernel(o + r) * m(yy * w + sxx)
+          o += 1
+        }
+        tmp(yy * w + xx) = acc
+        xx += 1
+      }
+      yy += 1
+    }
+    // vertical pass + mass, own rows only
+    var mass = 0.0
+    var oy = oLo
+    while (oy <= oHi) {
+      var xx = 0
+      while (xx < w) {
+        var acc = 0.0; var o = -r
+        while (o <= r) {
+          val sy = oy + o
+          if (sy >= rLo && sy <= rHi) acc += kernel(o + r) * tmp((sy - rLo) * w + xx)
+          o += 1
+        }
+        mass += acc
+        xx += 1
+      }
+      oy += 1
+    }
+    Some(Tile(cells, units, mass))
+  }
+
+  /** q46's query side at grid n, read once with the declared fixture
+    * schemas: one job for the params with their shade normalizers, one for
+    * the vertices (ordered by idx on the driver).
+    *
+    * The reference normalizes dist/light over the whole padded raster —
+    * but dist is convex and light linear in (gx, gy), so over the sampled
+    * lattice both extremes sit at the 4 corner samples. The corner
+    * coordinates evaluate with the IDENTICAL linspace formula, so this
+    * 14-row computation is bit-identical to aggregating all 2.24 M cells
+    * (it replaces a full-grid scan with algebra — the kind of rewrite that
+    * matters when the grid is 100 TB). */
+  private def blobs(s: SparkSession, n: Int): Array[Blob] = {
+    val gx0 = col("xmin")
+    val gx1 = col("xmin") + lit((n - 1).toDouble) *
+      ((col("xmax") - col("xmin")) / lit((n - 1).toDouble))
+    val gy0 = col("ymin")
+    val gy1 = col("ymin") + lit((n - 1).toDouble) *
+      ((col("ymax") - col("ymin")) / lit((n - 1).toDouble))
+    def d(cx: Column, cy: Column) = {
+      val nx = cx - col("cx_mean"); val ny = cy - col("cy_mean")
+      sqrt(nx * nx + ny * ny)
+    }
+    def li(cx: Column, cy: Column) =
+      (cx - col("cx_mean")) * lit(-0.6) + (cy - col("cy_mean")) * lit(0.8)
+    val verts = Poster.fx(s, "blob_vertices")
+      .select("blob_id", "idx", "x", "y").collect()
+      .groupBy(_.getLong(0)).map { case (id, rs) =>
+        val o = rs.sortBy(_.getInt(1))
+        id -> (o.map(_.getDouble(2)), o.map(_.getDouble(3)))
+      }
+    Poster.fx(s, "blob_params")
+      .select(col("blob_id"), col("xmin"), col("xmax"), col("ymin"),
+        col("ymax"), col("cx_mean"), col("cy_mean"), col("depth"),
+        greatest(d(gx0, gy0), d(gx0, gy1), d(gx1, gy0), d(gx1, gy1)),
+        least(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1)),
+        greatest(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1)))
+      .collect().map { p =>
+        val (xs, ys) = verts.getOrElse(p.getLong(0),
+          (Array.emptyDoubleArray, Array.emptyDoubleArray))
+        Blob(p.getLong(0), p.getDouble(1), p.getDouble(2), p.getDouble(3),
+          p.getDouble(4), p.getDouble(5), p.getDouble(6), p.getDouble(7),
+          p.getDouble(8), p.getDouble(9), p.getDouble(10), xs, ys)
+      }
+  }
+
+  private val TileSchema = StructType(Seq(
+    StructField("blob_id", LongType, nullable = false),
+    StructField("tile", IntegerType, nullable = false),
+    StructField("cells", LongType, nullable = false),
+    StructField("shade", DecimalType(28, 12), nullable = false),
+    StructField("mass", DoubleType, nullable = false),
+    StructField("depth", DoubleType, nullable = false)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // P18b: the codegen expression at the oracle grid — same output (and
     // same oracle) as the relational q17, zero join fan-out.
     "q45_pip_expr" -> ((s, _) =>
-      grid(s, 64).join(broadcast(vertArrays(s)), "blob_id")
+      Poster.grid(s, 64).join(broadcast(Poster.vertArrays(s)), "blob_id")
         .select(col("blob_id"), col("y"), col("x"),
           expr("point_in_polygon(gx, gy, xs, ys)").as("inside"))
         .orderBy("blob_id", "y", "x")),
@@ -57,189 +250,36 @@ object PosterScale {
     // on top of q45 ≡ q17 ≡ oracle at 64 and the golden-fixture suite.
     "q46_poster_fullscale" -> ((s, _) => {
       val n = 400
-      val R = 18 // σ=6 kernel radius
-      val g = grid(s, n)
-        .withColumn("nx", col("gx") - col("cx_mean"))
-        .withColumn("ny", col("gy") - col("cy_mean"))
-        .withColumn("dist", sqrt(col("nx") * col("nx") + col("ny") * col("ny")))
-        .withColumn("light", col("nx") * lit(-0.6) + col("ny") * lit(0.8))
-      // The reference normalizes dist/light over the whole padded raster —
-      // but dist is convex and light linear in (gx, gy), so over the
-      // sampled lattice both extremes sit at the 4 corner samples. The
-      // corner coordinates evaluate with the IDENTICAL linspace formula,
-      // so this 14-row computation is bit-identical to aggregating all
-      // 2.24 M cells (it replaces a full-grid scan+shuffle with algebra —
-      // the kind of rewrite that matters when the grid is 100 TB).
-      val stats = {
-        val gx0 = col("xmin")
-        val gx1 = col("xmin") + lit((n - 1).toDouble) *
-          ((col("xmax") - col("xmin")) / lit((n - 1).toDouble))
-        val gy0 = col("ymin")
-        val gy1 = col("ymin") + lit((n - 1).toDouble) *
-          ((col("ymax") - col("ymin")) / lit((n - 1).toDouble))
-        def d(cx: Column, cy: Column) = {
-          val nx = cx - col("cx_mean"); val ny = cy - col("cy_mean")
-          sqrt(nx * nx + ny * ny)
-        }
-        def li(cx: Column, cy: Column) =
-          (cx - col("cx_mean")) * lit(-0.6) + (cy - col("cy_mean")) * lit(0.8)
-        s.read.parquet(s"${Poster.FX}/blob_params.parquet")
-          .select(col("blob_id"),
-            greatest(d(gx0, gy0), d(gx0, gy1), d(gx1, gy0), d(gx1, gy1))
-              .as("dist_max"),
-            least(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1))
-              .as("light_min"),
-            greatest(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1))
-              .as("light_max"))
-      }
-      // Per-blob polygon data in ONE broadcast: ordered vertex arrays for
-      // the expression plus the vertex bbox. The mask lives inside the
-      // bbox, so mask/shade/blur only ever need the bbox dilated by the
-      // kernel radius — every dropped cell provably contributes 0 to
-      // every output. Cuts PIP evaluations and blur rows ~3×.
-      // The ordered arrays come from the SHARED Poster.vertArrays (its
-      // idx-sort struct and NOT-NULL-pinning coalesce are what the
-      // PointInPolygon contract — and the proven q45==q17 equivalence —
-      // depend on); only the bbox aggregate is built here and joined on.
-      // Both are 14-row fixture aggregates, so the extra join is free.
-      val vbox = s.read.parquet(s"${Poster.FX}/blob_vertices.parquet")
-        .groupBy("blob_id").agg(
-          min("x").as("vx_min"), max("x").as("vx_max"),
-          min("y").as("vy_min"), max("y").as("vy_max"))
-      val vb = vertArrays(s).join(vbox, "blob_id")
-      // gsel keeps the padded-grid bounds so the cell-coordinate band
-      // bounds derive without another join.
-      val stepX = (col("xmax") - col("xmin")) / lit((n - 1).toDouble)
-      val stepY = (col("ymax") - col("ymin")) / lit((n - 1).toDouble)
-      val cells = g.join(broadcast(vb), "blob_id")
-        .where(
-          col("x") >= floor((col("vx_min") - col("xmin")) / stepX) - (R + 1)
-            && col("x") <= ceil((col("vx_max") - col("xmin")) / stepX) + (R + 1)
-            && col("y") >= floor((col("vy_min") - col("ymin")) / stepY) - (R + 1)
-            && col("y") <= ceil((col("vy_max") - col("ymin")) / stepY) + (R + 1))
-        .join(broadcast(stats), "blob_id")
-        .withColumn("inside", expr("point_in_polygon(gx, gy, xs, ys)"))
-        .withColumn("radial", least(lit(1.0),
-          greatest(lit(0.0), lit(1.0) - col("dist") / col("dist_max"))))
-        .withColumn("lightn", (col("light") - col("light_min")) /
-          (col("light_max") - col("light_min")))
-        .withColumn("shade", lit(0.3) +
-          lit(0.7) * (lit(0.5) * col("radial") + lit(0.5) * col("lightn")))
-      // Single downstream pass: shuffle the ~430k mask cells once, then
-      // run the separable σ=6 blur on a DENSE array inside mapGroups —
-      // the one place the declarative forms lose badly (the 37× kernel-
-      // join fan-out costs ~4 s here; the dense conv is ~100 M
-      // multiplies, milliseconds). This is the documented per-partition
-      // imperative escape hatch (preference order (d)) — the oracle-
-      // checked q20/q21 keep the declarative join form as the semantic
-      // reference.
-      //
-      // TILED (r4): the group key is (blob, row-tile of T rows), each
-      // mask cell replicated to every tile whose ±R halo needs its row
-      // (≤2 tiles for T > 2R). Per-task memory is O((T + 2R) × band
-      // width) — bounded by the TILE, not the blob, so a 100× grid
-      // resolution cannot blow a single executor core (the r3 form held
-      // one whole blob band: tens of GB at the 100× grid). Widening to
-      // 2-D (x-range) tiles is the same construction applied to columns
-      // if band width ever dominates. Horizontal conv needs only same-
-      // row data; vertical conv at output row o reads t-rows o±R, all
-      // inside the halo by construction, so tile results are exactly the
-      // single-band values.
-      val kernel = s.read.parquet(s"${Poster.FX}/kernel_sigma6.parquet")
-        .orderBy("offset").collect().map(_.getDouble(1))
-      val maskCells = cells.where(col("inside"))
-        .select(col("blob_id"), col("y").cast("int").as("y"),
-          col("x").cast("int").as("x"), col("shade"), col("depth"))
-      import s.implicits._
-      val T = 64 // tile height (rows); T > 2R so a cell lands in ≤2 tiles
-      val maxTile = (n - 1) / T
-      val tiled = maskCells.select("blob_id", "y", "x")
-        .as[(Long, Int, Int)]
-        .flatMap { case (blob, y, x) =>
-          // tile k needs row y iff kT−R ≤ y ≤ (k+1)T−1+R
-          val kLo = math.max(0, math.floorDiv(y - R, T))
-          val kHi = math.min(maxTile, math.floorDiv(y + R, T))
-          (kLo to kHi).map(k => (blob, k, y, x))
-        }
-      val tileMass = tiled
-        .groupByKey(c => (c._1, c._2))
-        .mapGroups { (key: (Long, Int), it: Iterator[(Long, Int, Int, Int)]) =>
-          val (blob, k) = key
-          val cs = it.toArray
-          // received rows: the tile's halo range, clipped to the grid
-          val rLo = math.max(0, k * T - R)
-          val rHi = math.min(n - 1, (k + 1) * T - 1 + R)
-          // output rows: the tile proper
-          val oLo = k * T
-          val oHi = math.min(n - 1, (k + 1) * T - 1)
-          var xLo = n; var xHi = -1
-          cs.foreach { c =>
-            if (c._4 < xLo) xLo = c._4; if (c._4 > xHi) xHi = c._4 }
-          val bx0 = math.max(0, xLo - R); val bx1 = math.min(n - 1, xHi + R)
-          val w = bx1 - bx0 + 1; val h = rHi - rLo + 1
-          val m = new Array[Double](h * w)
-          cs.foreach(c => m((c._3 - rLo) * w + (c._4 - bx0)) = 1.0)
-          // horizontal pass over every received row (zero padding beyond
-          // the band; cells beyond the grid edge clip away exactly like
-          // the bounded join form)
-          val t = new Array[Double](h * w)
-          var yy = 0
-          while (yy < h) {
-            var xx = 0
-            while (xx < w) {
-              var acc = 0.0; var o = -R
-              while (o <= R) {
-                val sxx = xx + o
-                if (sxx >= 0 && sxx < w) acc += kernel(o + R) * m(yy * w + sxx)
-                o += 1
-              }
-              t(yy * w + xx) = acc
-              xx += 1
-            }
-            yy += 1
-          }
-          // vertical pass + mass, output rows only
-          var shadowMass = 0.0
-          var oy = oLo
-          while (oy <= oHi) {
-            var xx = 0
-            while (xx < w) {
-              var acc = 0.0; var o = -R
-              while (o <= R) {
-                val sy = oy + o
-                if (sy >= rLo && sy <= rHi)
-                  acc += kernel(o + R) * t((sy - rLo) * w + xx)
-                o += 1
-              }
-              shadowMass += acc
-              xx += 1
-            }
-            oy += 1
-          }
-          (blob, k, shadowMass)
-        }
-        .toDF("blob_id", "tile", "mass")
-      // Fold tile masses in TILE ORDER (array_sort before aggregate) so
-      // the double summation is deterministic run-to-run; everything else
-      // is a plain per-blob aggregate off the same mask-cell shuffle.
-      val mass = tileMass.groupBy("blob_id")
-        .agg(aggregate(
-          transform(array_sort(collect_list(struct(col("tile"), col("mass")))),
-            v => v.getField("mass")),
-          lit(0.0), (acc, x) => acc + x).as("raw_mass"))
-      val perBlobAgg = maskCells.groupBy("blob_id").agg(
-        count(lit(1)).as("n_mask_cells"),
-        // decimal-pinned (review r7 #2): per-cell shade doubles are
-        // engine-identical, so a DECIMAL(28,12) cast before the sum makes
-        // the aggregate summation-order-free and hash-exact vs the oracle
-        // regardless of either engine's partition/thread order.
-        round(sum(col("shade").cast("decimal(28,12)")).cast("double"), 3)
-          .as("mask_shade_sum"),
-        round(lit(0.4) * count(lit(1))
-          + lit(0.6) * max("depth") * count(lit(1)), 3).as("alpha_sum"))
-      perBlobAgg.join(mass, "blob_id")
-        .select(col("blob_id"), col("n_mask_cells"), col("mask_shade_sum"),
-          col("alpha_sum"), round(col("raw_mass"), 3).as("shadow_mass"))
+      val bs = blobs(s, n)
+      val kernel = Poster.fx(s, "kernel_sigma6").collect()
+        .sortBy(_.getInt(0)).map(_.getDouble(1))
+      require(kernel.length == 2 * R + 1,
+        s"kernel_sigma6 has ${kernel.length} taps, want ${2 * R + 1}")
+      val nTiles = (n - 1) / T + 1
+      val total = bs.length * nTiles
+      val tiles = s.range(0, total, 1,
+          math.max(1, math.min(total, s.sparkContext.defaultParallelism)))
+        .flatMap { (id: java.lang.Long) =>
+          val b = bs((id / nTiles).toInt)
+          val k = (id % nTiles).toInt
+          tile(b, k, n, T, kernel).map(c => Row(b.id, k, c.cells,
+            java.math.BigDecimal.valueOf(c.shadeUnits, 12), c.mass, b.depth))
+        }(Encoders.row(TileSchema))
+      // Tile masses fold in TILE ORDER (array_sort before aggregate), so
+      // the double summation is deterministic run-to-run. The shade sum is
+      // exact: DECIMAL(28,12) per cell, summed per tile on the executor
+      // and per blob here, so it is summation-order-free and hash-exact vs
+      // the oracle. A blob with no mask has no tile row, so it has no
+      // output row.
+      tiles.groupBy("blob_id").agg(
+          sum("cells").as("n_mask_cells"),
+          round(sum("shade").cast("double"), 3).as("mask_shade_sum"),
+          round(lit(0.4) * sum("cells")
+            + lit(0.6) * max("depth") * sum("cells"), 3).as("alpha_sum"),
+          round(aggregate(
+            transform(array_sort(collect_list(struct(col("tile"), col("mass")))),
+              v => v.getField("mass")),
+            lit(0.0), (acc, x) => acc + x), 3).as("shadow_mass"))
         .orderBy("blob_id")
     }),
   )
@@ -260,7 +300,7 @@ object PosterScale {
     //    mass at each coordinate (in exact arithmetic; the 3-decimal
     //    round on both engines absorbs summation-order noise). No 2-D
     //    convolution in SQL, and the oracle independently cross-checks
-    //    the tiled mapGroups blur rather than re-implementing it.
+    //    the tile pass's dense blur rather than re-implementing it.
     // Normalizer stats aggregate the full padded raster — the reference
     // semantics — independently re-checking the Spark side's 4-corner
     // algebraic shortcut.

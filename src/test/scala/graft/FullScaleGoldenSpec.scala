@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.types.{ArrayType, Decimal, DecimalType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.PointInPolygon
+import graft.queries.PosterScale
+import graft.queries.PosterScale.{Blob, Tile}
 
 /** Golden pin for q46 — the ONE catalog query without a DuckDB oracle
   * (the 400×400 full-scale twin of the oracle-checked q22/q23 64-grid).
@@ -15,6 +21,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * 18 cells), so convolution conserves mass EXACTLY — shadow_mass must
   * equal n_mask_cells at 3 dp. A mis-normalized kernel or a tile halo
   * bug breaks conservation before it breaks anything visible.
+  *
+  * Third, the structure: q46 stays one tile-local pass (a job budget),
+  * and at a small grid its tile routine equals a per-cell
+  * point_in_polygon mask with a direct whole-grid dense blur.
   */
 class FullScaleGoldenSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -44,6 +54,104 @@ class FullScaleGoldenSpec extends AnyFunSuite {
     // mass conservation, stated as the law rather than via the literals
     got.foreach { case (blob, n, _, _, mass) =>
       assert(mass === n.toDouble, s"blob $blob: blur mass $mass ≠ mask $n")
+    }
+  }
+
+  test("q46 builds and runs in at most 7 Spark jobs") {
+    val jobs = TestSpark.jobsOf(
+      SparkEntry.queries("q46_poster_fullscale")(s, "unused").collect())
+    info(s"q46 ran $jobs jobs")
+    assert(jobs <= 7, s"q46 ran $jobs jobs")
+  }
+
+  test("shade units are Spark's CAST(shade AS DECIMAL(28,12)), both paths") {
+    val rnd = new scala.util.Random(28)
+    val ds = Seq(0.3, 1.0, 0.5000000000005, 0.7499999999995, 0.123456789012345) ++
+      Seq.fill(2000)(0.3 + 0.7 * rnd.nextDouble())
+    val t = DecimalType(28, 12)
+    ds.foreach { d =>
+      val want = Cast(Literal(d), t).eval().asInstanceOf[Decimal]
+      assert(PosterScale.shadeUnits(d) === want.toUnscaledLong, s"shade $d")
+    }
+    import s.implicits._
+    val coded = ds.toDF("d").selectExpr("d", "CAST(d AS DECIMAL(28,12)) AS c")
+      .collect()
+    coded.foreach { r =>
+      assert(PosterScale.shadeUnits(r.getDouble(0)) ===
+        r.getDecimal(1).unscaledValue.longValueExact, s"shade ${r.getDouble(0)}")
+    }
+  }
+
+  // The small grid: n = 40 on [0, 39]², so cell (x, y) sits at (x, y)
+  // exactly; tiles of 16 rows and a 7-tap kernel (r = 3), so tile 1's halo
+  // is rows 13…34.
+  private val n = 40
+  private val t = 16
+  private val kernel = {
+    val w = (-3 to 3).map(o => math.exp(-o * o / (2 * 1.3 * 1.3)))
+    w.map(_ / w.sum).toArray
+  }
+
+  private def blob(xs: Array[Double], ys: Array[Double]): Blob =
+    Blob(7L, 0.0, 39.0, 0.0, 39.0, 20.0, 20.0, 0.5, 30.0, -30.0, 30.0, xs, ys)
+
+  private def rect(x0: Double, x1: Double, y0: Double, y1: Double) =
+    blob(Array(x0, x1, x1, x0), Array(y0, y0, y1, y1))
+
+  /** Per tile: mask cells in its own rows (point_in_polygon per cell) and
+    * the mass of a direct dense blur of the whole-grid mask over those rows
+    * (zero padding beyond the grid). None when the tile's halo has no mask
+    * cell, as the tile routine answers. */
+  private def direct(b: Blob): Seq[Option[(Long, Double)]] = {
+    val r = kernel.length / 2
+    val arr = ArrayType(DoubleType, containsNull = false)
+    val in = Array.tabulate(n, n)((y, x) =>
+      PointInPolygon(Literal(x.toDouble), Literal(y.toDouble),
+        Literal.create(b.xs, arr), Literal.create(b.ys, arr))
+        .eval(null).asInstanceOf[Boolean])
+    def conv(v: Int => Double, i: Int) =
+      (-r to r).foldLeft(0.0) { (acc, o) =>
+        val j = i + o
+        if (j >= 0 && j < n) acc + kernel(o + r) * v(j) else acc
+      }
+    val hor = Array.tabulate(n, n)((y, x) =>
+      conv(j => if (in(y)(j)) 1.0 else 0.0, x))
+    val blur = Array.tabulate(n, n)((y, x) => conv(j => hor(j)(x), y))
+    (0 to (n - 1) / t).map { k =>
+      val own = k * t to math.min(n - 1, (k + 1) * t - 1)
+      val halo = math.max(0, k * t - r) to math.min(n - 1, (k + 1) * t - 1 + r)
+      if (!halo.exists(y => in(y).contains(true))) None
+      else Some((own.map(y => in(y).count(identity).toLong).sum,
+        own.foldLeft(0.0)((m, y) => (0 until n).foldLeft(m)(_ + blur(y)(_)))))
+    }
+  }
+
+  private def assertTilesMatch(b: Blob): Seq[Option[Tile]] = {
+    val got = (0 to (n - 1) / t).map(k => PosterScale.tile(b, k, n, t, kernel))
+    assert(got.map(_.map(c => (c.cells, c.mass))) === direct(b))
+    got
+  }
+
+  test("tile routine = per-cell mask + direct blur: mask only in a halo") {
+    // rows 5…13: tile 0 owns them all, tile 1 sees row 13 in its halo only
+    val got = assertTilesMatch(rect(10.5, 20.5, 4.5, 13.5))
+    assert(got(0).map(_.cells) === Some(90L))
+    assert(got(1).exists(c => c.cells == 0L && c.shadeUnits == 0L && c.mass > 0))
+    assert(got(2).isEmpty)
+  }
+
+  test("tile routine = per-cell mask + direct blur: empty mask, no row") {
+    for (b <- Seq(rect(50.0, 60.0, 5.0, 15.0), rect(10.2, 10.8, 5.0, 15.0),
+        blob(Array.emptyDoubleArray, Array.emptyDoubleArray),
+        blob(Array(5.0, 30.0), Array(5.0, 30.0))))
+      assert(assertTilesMatch(b).forall(_.isEmpty))
+  }
+
+  test("tile routine = per-cell mask + direct blur: mask at the grid edge") {
+    for (b <- Seq(rect(-5.0, 8.5, -5.0, 20.5), rect(30.5, 45.0, 25.5, 45.0))) {
+      val got = assertTilesMatch(b).flatten
+      // clipped at the edge: the blur loses mass beyond the grid
+      assert(got.map(_.mass).sum < got.map(_.cells).sum.toDouble)
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.GraftListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
@@ -135,33 +133,17 @@ class LocalRankSpec extends AnyFunSuite {
     assert(!isLocal(pr(df(pairs), TextOps.PR_CAP, n - 1)))
   }
 
-  /** Spark jobs started while `body` runs (the listener bus drained
-    * before reading, so late events are not missed). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    GraftListenerDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { body; GraftListenerDrain.drain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
-  }
-
   test("the gate is one job over a multi-partition cut, either side") {
     val p = Lineage.cut(df(pairs).repartition(4))
     assert(p.rdd.getNumPartitions === 4)
     for (bound <- Seq(0, pairs.size - 1, pairs.size, local))
-      assert(jobsOf(LocalRank.collectBounded(p, bound)) === 1, s"bound $bound")
+      assert(TestSpark.jobsOf(LocalRank.collectBounded(p, bound)) === 1, s"bound $bound")
   }
 
   test("the in-process tier runs two jobs in all: the cut and the gate") {
     val p = Lineage.cut(df(pairs).repartition(4))
-    assert(jobsOf(pr(p, TextOps.PR_CAP, local).collect()) === 2)
-    assert(jobsOf(ppr(p, TextOps.PPR_CAP, local).collect()) === 2)
+    assert(TestSpark.jobsOf(pr(p, TextOps.PR_CAP, local).collect()) === 2)
+    assert(TestSpark.jobsOf(ppr(p, TextOps.PPR_CAP, local).collect()) === 2)
   }
 
   test("ppr: a seedless graph fails loud in the in-process tier") {

@@ -7,7 +7,8 @@ import graft.functions.PointInPolygon
 
 /** Unit tests for the point_in_polygon codegen expression (SURVEY §5.4):
   * hand-checkable triangle cases, agreement between interpreted eval and
-  * the SQL/codegen path, and the closing-edge semantics. */
+  * the SQL/codegen path, the closing-edge semantics, and the scanline
+  * form (crossings + sweepRow, q46's mask) against the expression. */
 class PointInPolygonSpec extends AnyFunSuite {
 
   private def pip(px: Double, py: Double,
@@ -55,6 +56,67 @@ class PointInPolygonSpec extends AnyFunSuite {
       assert(got((px, py)) === pip(px, py, triX, triY),
         s"mismatch at ($px,$py)")
     }
+  }
+
+  /** The scanline mask of row y = q at the sorted xs `gx`. */
+  private def scanRow(q: Double, gx: Array[Double],
+      xs: Array[Double], ys: Array[Double]): Array[Boolean] = {
+    val cross = new Array[Double](xs.length)
+    val m = PointInPolygon.crossings(xs, ys, q, cross)
+    val out = new Array[Boolean](gx.length)
+    PointInPolygon.sweepRow(cross, m, gx, out, 0)
+    out
+  }
+
+  /** Scanline ≡ expression, cell for cell, on rows at every vertex y plus a
+    * lattice, and columns at every vertex x plus a lattice (so points land
+    * exactly on vertices, edges and crossings). */
+  private def assertScanlineAgrees(xs: Array[Double], ys: Array[Double],
+      tag: String): Unit = {
+    val lattice = (0 to 24).map(i => -0.1 + i * (1.2 / 24))
+    val gx = (lattice ++ xs).sorted.toArray
+    for (q <- (lattice ++ ys).distinct) {
+      val row = scanRow(q, gx, xs, ys)
+      gx.indices.foreach { i =>
+        assert(row(i) === pip(gx(i), q, xs, ys),
+          s"$tag: (${gx(i)}, $q) on ${xs.zip(ys).mkString(" ")}")
+      }
+    }
+  }
+
+  test("scanline row mask equals the expression on random polygons") {
+    val rnd = new scala.util.Random(46)
+    for (trial <- 0 until 300) {
+      val n = rnd.nextInt(13)
+      // a coarse coordinate set makes shared ys (horizontal edges, rows
+      // through vertices) common rather than measure-zero
+      def coord() =
+        if (rnd.nextBoolean()) rnd.nextInt(9) / 8.0 else rnd.nextDouble()
+      val xs = Array.fill(n)(coord())
+      val ys = Array.fill(n)(coord())
+      assertScanlineAgrees(xs, ys, s"trial $trial")
+    }
+  }
+
+  test("scanline row mask equals the expression on degenerate polygons") {
+    val cases = Seq(
+      "no vertex" -> (Array.emptyDoubleArray, Array.emptyDoubleArray),
+      "one vertex" -> (Array(0.5), Array(0.5)),
+      "two vertices" -> (Array(0.2, 0.8), Array(0.1, 0.9)),
+      "triangle" -> (triX, triY),
+      "vertex on a sample row" -> (Array(0.0, 1.0, 0.5), Array(0.0, 0.5, 1.0)),
+      "horizontal edges" ->
+        (Array(0.0, 1.0, 1.0, 0.5, 0.5, 0.0), Array(0.0, 0.0, 0.5, 0.5, 1.0, 1.0)),
+      "repeated vertices" ->
+        (Array(0.0, 0.0, 1.0, 1.0, 1.0, 0.0), Array(0.0, 0.0, 0.0, 1.0, 1.0, 1.0)),
+      "self-intersecting bowtie" ->
+        (Array(0.0, 1.0, 0.0, 1.0), Array(0.0, 1.0, 1.0, 0.0)),
+      "self-intersecting star" -> {
+        val k = (0 until 5).map(i => i * 2 % 5)
+        (k.map(i => 0.5 + 0.5 * math.cos(i * 2 * math.Pi / 5)).toArray,
+          k.map(i => 0.5 + 0.5 * math.sin(i * 2 * math.Pi / 5)).toArray)
+      })
+    for ((tag, (xs, ys)) <- cases) assertScanlineAgrees(xs, ys, tag)
   }
 
   test("degenerate horizontal edges do not crash or miscount") {
