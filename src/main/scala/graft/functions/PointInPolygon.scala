@@ -169,11 +169,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.entries.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => VecDotRewrite)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    GraftExtensions.strategies.foreach(st => e.injectPlannerStrategy(_ => st))
   }
 }
 
 object GraftExtensions {
+  private val strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    Seq(graft.plans.AsOfJoinStrategy, graft.plans.SmallSortStrategy)
+
   private val entries = Seq(
     (new FunctionIdentifier("point_in_polygon"),
       new ExpressionInfo(classOf[PointInPolygon].getName, "point_in_polygon"),
@@ -214,8 +217,9 @@ object GraftExtensions {
     val exp = spark.experimental
     if (!exp.extraOptimizations.contains(VecDotRewrite))
       exp.extraOptimizations = exp.extraOptimizations :+ VecDotRewrite
-    // same runtime-mutable escape hatch for the planner strategy
-    if (!exp.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    // same runtime-mutable escape hatch for the planner strategies
+    strategies.filterNot(exp.extraStrategies.contains).foreach { st =>
+      exp.extraStrategies = exp.extraStrategies :+ st
+    }
   }
 }

@@ -251,8 +251,8 @@ object PosterScale {
     "q46_poster_fullscale" -> ((s, _) => {
       val n = 400
       val bs = blobs(s, n)
-      val kernel = Poster.fx(s, "kernel_sigma6").collect()
-        .sortBy(_.getInt(0)).map(_.getDouble(1))
+      val kernel = Poster.fx(s, "kernel_sigma6").orderBy("offset").collect()
+        .map(_.getDouble(1))
       require(kernel.length == 2 * R + 1,
         s"kernel_sigma6 has ${kernel.length} taps, want ${2 * R + 1}")
       val nTiles = (n - 1) / T + 1

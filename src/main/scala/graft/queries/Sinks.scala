@@ -1,8 +1,36 @@
 package graft.queries
 
+import java.io.File
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
+
+/** The temp paths one run hands out, `<root>/<stem>_<token>`. Each is
+  * remembered, so [[cleanup]] deletes exactly those paths and any
+  * `<path>_<suffix>` sibling a caller derived from one (per-build index
+  * dirs), and nothing else under `root`. */
+private[graft] final class RunPaths(root: String, token: String) {
+  private val issued = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  def path(stem: String): String = {
+    val name = stem + "_" + token
+    issued.add(name)
+    root + "/" + name
+  }
+
+  def cleanup(): Unit = {
+    val names = issued.toArray(Array.empty[String])
+    Option(new File(root).listFiles).getOrElse(Array.empty[File])
+      .filter(f => names.exists(n =>
+        f.getName == n || f.getName.startsWith(n + "_")))
+      .foreach(FileUtils.deleteQuietly)
+  }
+}
 
 /** The engine's WRITE surface over real tables (SURVEY §2.1's sink side):
   * until r5 the only sink was Verify's flat parquet dump — this adds the
@@ -32,9 +60,30 @@ object Sinks {
     java.lang.Long.toHexString(
       ProcessHandle.current().pid() ^ (System.nanoTime() << 16))
 
-  /** A tmpdir path unique to this run: `<tmpdir>/<stem>_<runToken>`. */
-  private[graft] def runPath(stem: String): String =
-    sys.props("java.io.tmpdir") + "/" + stem + "_" + runToken
+  private lazy val runPaths =
+    new RunPaths(sys.props("java.io.tmpdir"), runToken)
+
+  /** The context whose application end deletes [[runPaths]]. */
+  private val cleanupOn = new AtomicReference[SparkContext]
+
+  private val cleanup = new SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+      runPaths.cleanup()
+  }
+
+  /** A tmpdir path unique to this run: `<tmpdir>/<stem>_<runToken>`. It,
+    * and every `<path>_*` a caller derives from it, is deleted when the
+    * application ends: the first runPath of each SparkContext registers
+    * the one listener that does it. */
+  private[graft] def runPath(stem: String): String = {
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext).foreach { sc =>
+        val prev = cleanupOn.get
+        if ((prev ne sc) && cleanupOn.compareAndSet(prev, sc))
+          sc.addSparkListener(cleanup)
+      }
+    runPaths.path(stem)
+  }
 
   /** TextOps.h48 (the canonical engine-independent md5-derived 48-bit
     * hash). NOTE: a plain signed-64 SUM of these has only ~2¹⁶

@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.functions.desc
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.GraftExtensions
+import graft.plans.SmallSortStrategy
 
 /** The driver contract hands SparkEntry an EXTERNALLY-built session:
   * no graft extensions conf, no nanosAsLong, nothing. This spec
@@ -33,5 +39,30 @@ class BareSessionSpec extends AnyFunSuite {
     assert(SparkEntry.queries("q77_asof_native")(bare, sf).count() > 0)
     // flagship driver smoke
     assert(SparkEntry.entry(bare).count() > 0)
+  }
+
+  /** A session on the shared context built with NO extensions at all:
+    * `newSession()` would inherit the context's `spark.sql.extensions`,
+    * so this goes through the constructor the builder uses. */
+  private def withoutExtensions(): SparkSession = {
+    val parent = TestSpark.spark.asInstanceOf[classic.SparkSession]
+    val ctor = classOf[classic.SparkSession].getDeclaredConstructors
+      .find(_.getParameterCount == 6).get
+    ctor.setAccessible(true)
+    ctor.newInstance(parent.sparkContext, Some(parent.sharedState), None,
+      new SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[SparkSession]
+  }
+
+  test("ensureRegistered installs the small-sort strategy exactly once") {
+    val bare = withoutExtensions()
+    // descending: Range already reports a range partitioning ascending
+    def ranged(): Boolean = bare.range(0, 10, 1, 3).orderBy(desc("id"))
+      .queryExecution.executedPlan.toString.contains("rangepartitioning")
+    assert(ranged(), "the bare session must start without the strategy")
+    GraftExtensions.ensureRegistered(bare)
+    GraftExtensions.ensureRegistered(bare)
+    assert(bare.experimental.extraStrategies.count(_ eq SmallSortStrategy) === 1)
+    assert(!ranged())
   }
 }

@@ -57,11 +57,13 @@ class FullScaleGoldenSpec extends AnyFunSuite {
     }
   }
 
-  test("q46 builds and runs in at most 7 Spark jobs") {
+  test("q46 builds and runs in at most 5 Spark jobs") {
+    // 3 to build (vertices, params, kernel taps), the tile aggregate's
+    // map job, and the result job: the final 14-row sort is one task
     val jobs = TestSpark.jobsOf(
       SparkEntry.queries("q46_poster_fullscale")(s, "unused").collect())
     info(s"q46 ran $jobs jobs")
-    assert(jobs <= 7, s"q46 ran $jobs jobs")
+    assert(jobs <= 5, s"q46 ran $jobs jobs")
   }
 
   test("shade units are Spark's CAST(shade AS DECIMAL(28,12)), both paths") {

@@ -21,6 +21,11 @@ class KernelAndBlurSpec extends AnyFunSuite {
     rows.foreach { case (o, w) => assert(math.abs(w - fx(o)) < 1e-11) }
   }
 
+  test("q13 runs in 3 Spark jobs: the total, its broadcast, the sorted taps") {
+    val jobs = TestSpark.jobsOf(Poster.queries("q13_kernel")(s, "").collect())
+    assert(jobs === 3, s"q13 ran $jobs jobs")
+  }
+
   test("5-tap 1-D convolution of a point mass, zero-pad edge semantics") {
     import s.implicits._
     // mask: single cell at x=0 on a 5-wide row; kernel [.1,.2,.4,.2,.1]

@@ -146,6 +146,14 @@ class LocalRankSpec extends AnyFunSuite {
     assert(TestSpark.jobsOf(ppr(p, TextOps.PPR_CAP, local).collect()) === 2)
   }
 
+  test("the in-process frame sorts by doc_id in one job") {
+    val d = pr(df(pairs), TextOps.PR_CAP, local)
+    assert(isLocal(d))
+    var rows = Seq.empty[Row]
+    assert(TestSpark.jobsOf { rows = sorted(d) } === 1)
+    assert(rows.map(_.getAs[Long]("doc_id")) === rows.map(_.getAs[Long]("doc_id")).sorted)
+  }
+
   test("ppr: a seedless graph fails loud in the in-process tier") {
     val e = intercept[IllegalStateException](
       ppr(df(Seq((1L, 2L), (2L, 3L))), TextOps.PPR_CAP, local).collect())
