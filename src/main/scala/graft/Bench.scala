@@ -35,16 +35,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     runBench(spark, sfDir,
       only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
         .map(_.split(",").map(_.trim).toSet),
@@ -57,9 +49,11 @@ object Bench {
   /** The whole sweep, parameterized ONLY so BenchContractSpec can run it
     * in-process and pin the stdout contract (VERDICT r16 #8: the driver
     * parses the LAST stdout line; BENCH_r15.json had parsed:null). The
-    * sampling protocol, statistics and record strings are verbatim the
-    * round-16 main body — `main` above passes exactly the env values it
-    * always read. Nothing may print to `out` after the summary line. */
+    * sampling protocol, statistics and summary line are verbatim the
+    * round-16 main body (the full record adds an `errors` map: each
+    * failed query's first "Class: message") — `main` above passes
+    * exactly the env values it always read. Nothing may print to `out`
+    * after the summary line. */
   private[graft] def runBench(spark: SparkSession, sfDir: String,
       only: Option[Set[String]], repoDir: String, tag0: Option[String],
       out: java.io.PrintStream): Unit = {
@@ -67,7 +61,8 @@ object Bench {
     def run(name: String): Either[String, Unit] =
       try Right(SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save())
-      catch { case e: Throwable => Left(e.getClass.getSimpleName) }
+      catch { case e: Throwable =>
+        Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
 
     // Warm-up: one cheap query end-to-end (JIT, codegen cache, FS metadata).
     run("q01_pricing_summary")
@@ -98,8 +93,8 @@ object Bench {
         val ok = run(name)
         samples :+= (((System.nanoTime() - t0) / 1e9, la, ok))
       }
-      samples.collectFirst { case (_, _, Left(err)) => err }.foreach(err =>
-        System.err.println(s"[bench] $name FAILED: $err"))
+      val err = samples.collectFirst { case (_, _, Left(err)) => err }
+      err.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
       val ts = samples.map(_._1).sorted
       // true median: average the two middles on even counts (the
       // upper-middle alone biases even-count queries upward)
@@ -108,10 +103,9 @@ object Bench {
         else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
       val min = ts.head
       val meanLoad = samples.map(_._2).sum / samples.size
-      (name, median, min, meanLoad, samples.size,
-        samples.forall(_._3.isRight))
+      (name, median, min, meanLoad, samples.size, err)
     }
-    def m(f: ((String, Double, Double, Double, Int, Boolean)) => String) =
+    def m(f: ((String, Double, Double, Double, Int, Option[String])) => String) =
       results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
     val qs = m(r => r._2.toString)
     val qmin = m(r => r._3.toString)
@@ -120,11 +114,16 @@ object Bench {
     val loads = m(r =>
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(r._4)))
     val nsamp = m(r => r._5.toString)
-    val failed = results.filterNot(_._6).map(r => "\"" + r._1 + "\"")
+    val failed = results.filter(_._6.isDefined).map(r => "\"" + r._1 + "\"")
       .mkString("[", ",", "]")
+    // the first failure's "Class: message" per failed query
+    val errors = results.collect { case (n, _, _, _, _, Some(e)) =>
+      Verify.jsonString(n) + ":" + Verify.jsonString(e) }
+      .mkString("{", ",", "}")
+    val nFailed = results.count(_._6.isDefined)
     val total = results.map(_._2).sum
     val totalMin = results.map(_._3).sum
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmin,"total_min":$totalMin,"load":$loads,"n_samples":$nsamp,"n_failed":${results.count(!_._6)},"failed":$failed,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qmin,"total_min":$totalMin,"load":$loads,"n_samples":$nsamp,"n_failed":$nFailed,"failed":$failed,"errors":$errors,"sf":"$sfDir"}"""
 
     // The driver records only a ~2 KB TAIL of stdout and parses the last
     // line (VERDICT r6 #2: every BENCH_r*.json so far has parsed:null
@@ -177,6 +176,6 @@ object Bench {
     // THE FINAL LINE on `out` — the driver parses the last stdout line,
     // so nothing may print to `out` after this (BenchContractSpec pins
     // the property end-to-end; main() only calls spark.stop() after).
-    out.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$slow,"queries_stat":"min","total_min":$totalMin,"n_queries":${results.size},"n_failed":${results.count(!_._6)},"failed":$failed,"queries_full":"$artifact","sf":"$sfDir"}""")
+    out.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$slow,"queries_stat":"min","total_min":$totalMin,"n_queries":${results.size},"n_failed":$nFailed,"failed":$failed,"queries_full":"$artifact","sf":"$sfDir"}""")
   }
 }

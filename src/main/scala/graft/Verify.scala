@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,8 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -36,20 +27,22 @@ object Verify {
   }
 
   /** The oracle map as a JSON object — shared with ScaledCheckerSpec so
-    * the CI dump and the driver dump serialize identically.
-    * JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private[graft] def oracleJson(m: Map[String, String]): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+    * the CI dump and the driver dump serialize identically. */
+  private[graft] def oracleJson(m: Map[String, String]): String =
+    m.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+
+  /** `s` as a quoted JSON string literal (also Bench's error messages).
+    * Escapes backslash, quote, and ALL control chars (<0x20) — a tab or
+    * CR in builder-authored SQL would otherwise make the driver's
+    * json.load fail and silently zero the round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

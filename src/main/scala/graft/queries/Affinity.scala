@@ -63,19 +63,14 @@ object Affinity {
     b.join(ok, Seq("user_id"), "left_semi")
   }
 
-  /** ScaleDebug-only (SCALE.md #10 audit): q150's fan-out stream exactly
-    * as the (i, j) pair aggregate consumes it — the capped-basket
-    * self-join output, pre-aggregation. Also the catalog query's own
-    * pair subtree (one definition, base-parameterized round 16 — the
-    * house `…Of(base)` pattern — so the catalog query can feed both
-    * self-join sides and its support counts from ONE materialized
-    * basket relation; the old per-call build planned the events
+  /** q150's pair subtree: the capped-basket self-join as the (i, j) pair
+    * aggregate consumes it. Base-parameterized (round 16 — the house
+    * `…Of(base)` pattern) so the catalog query can feed both self-join
+    * sides and its support counts from ONE materialized basket
+    * relation; the old per-call build planned the events
     * scan+distinct+cap subtree four times, and the i/j column pruning
-    * kept AQE's stage cache from deduping the legs). */
-  private[graft] def q150FanOutDebug(s: SparkSession, dir: String)
-      : DataFrame = q150FanOutDebugOf(cappedBaskets(s, dir))
-
-  private[graft] def q150FanOutDebugOf(cb: DataFrame): DataFrame =
+    * kept AQE's stage cache from deduping the legs. */
+  private def basketPairsOf(cb: DataFrame): DataFrame =
     cb.select(col("user_id"), col("item").as("i"))
       .join(cb.select(col("user_id"), col("item").as("j")), "user_id")
       .where(col("i") < col("j"))
@@ -102,7 +97,7 @@ object Affinity {
       // the symmetrizing union references the pair aggregate twice and
       // its i/j pruning splits the legs for the stage cache — cut it
       // once too (bounded by C(CAP,2)·|users|, far below the fan-out)
-      val pr = q150FanOutDebugOf(cb)
+      val pr = basketPairsOf(cb)
         .groupBy("i", "j").agg(count(lit(1)).as("n_both"))
         .cut()
       val sym = pr.select(col("i").as("item"), col("j").as("co_item"),

@@ -118,17 +118,12 @@ object Components {
     // labels — measured in the r8 scale sweep (SCALE.md).
     val nodes = undirected(e0).select(col("u").as("doc_id")).distinct()
     var e = e0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime
     var prevSig = sig(e)
-    if (dbg) println(f"[cc] init(edges+ckpt): ${(System.nanoTime - t0) / 1e9}%.1f s, sig=$prevSig")
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      t0 = System.nanoTime
       val next = Fixpoint.checkpointRound(smallStar(largeStar(e)), iter + 1)
       val nextSig = sig(next)
-      if (dbg) println(f"[cc] round ${iter + 1}: ${(System.nanoTime - t0) / 1e9}%.1f s, sig=$nextSig")
       converged = nextSig == prevSig
       prevSig = nextSig
       e = next
@@ -268,17 +263,12 @@ object Components {
         greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct())
-    val dbg = sys.env.contains("GRAFT_KCORE_DEBUG")
-    val tInit = System.nanoTime
     var n = edges.count()
-    if (dbg) println(f"[kcore] init: $n%d edges materialized " +
-      f"${(System.nanoTime - tInit) / 1e9}%.1f s")
     var round = 0
     var converged = n == 0L
     while (!converged) {
       round += 1
       require(round <= cap, s"kCore: still peeling after $cap rounds")
-      val t0 = System.nanoTime
       val alive = undirected(edges)
         .groupBy(col("u").as("x")).agg(count(lit(1)).as("d"))
         .where(col("d") >= k)
@@ -289,13 +279,10 @@ object Components {
           .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
           .select("u", "v"), round)
       val m = next.count()
-      if (dbg) println(f"[kcore] round $round: edges $n%d -> $m%d " +
-        f"${(System.nanoTime - t0) / 1e9}%.1f s")
       converged = m == n
       n = m
       edges = next
     }
-    if (dbg) println(s"[kcore] loop done @${System.currentTimeMillis / 1000}")
     undirected(edges)
       .groupBy(col("u").as("doc_id")).agg(count(lit(1)).as("core_deg"))
   }

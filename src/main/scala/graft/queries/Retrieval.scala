@@ -255,8 +255,8 @@ object Retrieval {
     * cost-sharing is by CONSTRUCTION (one lineage → one exchange), not by
     * ReuseExchange happening to canonicalize two hand-built copies, and
     * so the two rankers can never drift in tokenization. */
-  private[graft] def tfAndQt(s: SparkSession, dir: String,
-      qmod: Int = QMOD): (DataFrame, DataFrame) = {
+  private[graft] def tfAndQt(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val toks = docs(s, dir)
       .select(col("doc_id"),
         explode(split(col("text"), " ")).as("tok"))
@@ -264,7 +264,7 @@ object Retrieval {
     // tf already holds ONE row per (doc, term): the query vocabulary
     // comes from it directly — no distinct, and no second corpus scan
     // (2× the IO at 100 TB for an identical result).
-    val qt = tf.where(col("doc_id") % qmod === 0)
+    val qt = tf.where(col("doc_id") % QMOD === 0)
       .select(col("doc_id").as("qid"), col("tok"))
     (tf, qt)
   }
@@ -280,19 +280,17 @@ object Retrieval {
     * ReuseExchange could no longer dedup a recompute. One cut, three
     * readers. Still build-every-time: the cut is per-construction, not
     * memoized — Bench times it inside every sample. */
-  private[graft] def bm25TopK(s: SparkSession, dir: String,
-      qmod: Int = QMOD): DataFrame = {
+  private[graft] def bm25TopK(s: SparkSession, dir: String): DataFrame = {
     val (frozen, parts) = postingLayout(s, dir)
-    bm25TopKFromTf(tfAndQt(s, dir, qmod)._1.cut(), qmod,
-      frozen, parts)
+    bm25TopKFromTf(tfAndQt(s, dir)._1.cut(), frozen, parts)
   }
 
   /** [[bm25TopK]] over a caller-materialized tf (checkpoint or parquet)
     * — q131 shares ONE tf cut across both fusion arms through this. */
-  private[graft] def bm25TopKFromTf(tf: DataFrame, qmod: Int,
+  private[graft] def bm25TopKFromTf(tf: DataFrame,
       frozenSortedLayout: Boolean = true,
       postingParts: Int = 0): DataFrame = {
-    val qt = tf.where(col("doc_id") % qmod === 0)
+    val qt = tf.where(col("doc_id") % QMOD === 0)
       .select(col("doc_id").as("qid"), col("tok"))
     bm25Score(tf, qt, tf.groupBy("doc_id").agg(sum("tf").as("dl")),
       frozenSortedLayout = frozenSortedLayout,
@@ -459,15 +457,6 @@ object Retrieval {
   private val bm25IdxMemo =
     new BuildOnceMemo[(String, String)]("graft_bm25_index")
 
-  /** ScaleDebug-only accessor for the probe decomposition. */
-  private[graft] def bm25IndexDebug(s: SparkSession, dir: String)
-      : (String, String) = bm25Index(s, dir)
-
-  /** ScaleDebug-only: the computed tf relation, for A/B against the
-    * parquet-read one. */
-  private[graft] def tfAndQtDebug(s: SparkSession, dir: String): DataFrame =
-    tfAndQt(s, dir)._1
-
   private def bm25Index(s: SparkSession, dir: String): (String, String) = {
     bm25IdxMemo.getOrBuild(s, dir) {
       val stem = bm25IdxMemo.nextPath(dir)
@@ -493,24 +482,18 @@ object Retrieval {
     }
   }
 
-  /** q131 core, qmod-parameterized like [[bm25TopK]] (VERDICT r10 #3) so
-    * ScaleDebug's `rrffixed` leg can hold the QUERY SET fixed across
-    * sf0.1/sf1 and measure the corpus term of the scaling alone — the
-    * sweep's 16.9× conflates a 10× query set with the 10× corpus, same
-    * confound q120's `bm25fixed` leg resolved. The catalog entry calls
-    * this with the default QMOD, so the driver-visible plan and hash are
-    * unchanged. */
-  private[graft] def rrfFusion(s: SparkSession, dir: String,
-      qmod: Int = QMOD): DataFrame = {
+  /** q131 core: reciprocal-rank fusion of the BM25 and Jaccard arms over
+    * one shared tf cut. */
+  private[graft] def rrfFusion(s: SparkSession, dir: String): DataFrame = {
       // ONE eager tf cut feeds BOTH fusion arms (each arm's fan-out
       // branch now lives in its own checkpointed lineage, so the old
       // ReuseExchange dedup across arms no longer applies — without the
       // shared cut the tokenize pass would run once per arm).
       val (frozen, parts) = postingLayout(s, dir)
-      val dt = tfAndQt(s, dir, qmod)._1.cut()
-      val qset = dt.where(col("doc_id") % qmod === 0)
+      val dt = tfAndQt(s, dir)._1.cut()
+      val qset = dt.where(col("doc_id") % QMOD === 0)
         .select(col("doc_id").as("qid"), col("tok"))
-      val a = bm25TopKFromTf(dt, qmod, frozen, parts).select(col("qid"),
+      val a = bm25TopKFromTf(dt, frozen, parts).select(col("qid"),
         col("doc_id"), col("rnk").as("ra"))
       val nd = dt.groupBy("doc_id").agg(count(lit(1)).as("nd"))
       // doc-cluster + doc-sort before the query fan-out — the bm25Score
@@ -568,10 +551,8 @@ object Retrieval {
   private[graft] val CONTAIN_DF_CAP = 1000
   private[graft] val CONTAIN_TOPK = 20
 
-  /** q123's fan-out subtree (capped positioned-less shingle self-join),
-    * factored so the catalog query and the ScaleDebug SCALE.md #10
-    * locality audit time the IDENTICAL stream. Output keeps the x/y
-    * qualifiers the downstream aggregate expects. */
+  /** q123's fan-out subtree (capped positioned-less shingle self-join).
+    * Output keeps the x/y qualifiers the downstream aggregate expects. */
   private[graft] def q123FanOut(s: SparkSession, dir: String): DataFrame = {
     // eager checkpoint: p feeds both self-join sides (round-16 audit —
     // the un-checkpointed form re-planned the shingle+windows subtree
@@ -884,8 +865,7 @@ object Retrieval {
     // the distinct posting table (no rejoin), df-capped lists, ordered
     // pairs from the shingle-keyed self-join carrying the LEFT side's
     // size, then one grouped count. Top-k under a total order.
-    // (fan-out subtree factored to q123FanOut — shared with the
-    // ScaleDebug SCALE.md #10 locality audit. The repartition is the
+    // (fan-out subtree factored to q123FanOut. The repartition is the
     // round-12 single-pass-aggregate fix: this pair agg reduces 293M →
     // 241M at sf1, so map-side combine is pure overhead — pre-
     // clustering on the pair key's first component measured min 42.1 s

@@ -23,13 +23,14 @@ private[graft] final class RunPaths(root: String, token: String) {
     root + "/" + name
   }
 
-  def cleanup(): Unit = {
-    val names = issued.toArray(Array.empty[String])
+  /** Whether `f` is a handed-out path or a `<path>_*` sibling of one. */
+  def owns(f: File): Boolean =
+    f.getParentFile == new File(root) && issued.stream.anyMatch(n =>
+      f.getName == n || f.getName.startsWith(n + "_"))
+
+  def cleanup(): Unit =
     Option(new File(root).listFiles).getOrElse(Array.empty[File])
-      .filter(f => names.exists(n =>
-        f.getName == n || f.getName.startsWith(n + "_")))
-      .foreach(FileUtils.deleteQuietly)
-  }
+      .filter(owns).foreach(FileUtils.deleteQuietly)
 }
 
 /** The engine's WRITE surface over real tables (SURVEY §2.1's sink side):
@@ -60,7 +61,7 @@ object Sinks {
     java.lang.Long.toHexString(
       ProcessHandle.current().pid() ^ (System.nanoTime() << 16))
 
-  private lazy val runPaths =
+  private[graft] lazy val runPaths =
     new RunPaths(sys.props("java.io.tmpdir"), runToken)
 
   /** The context whose application end deletes [[runPaths]]. */

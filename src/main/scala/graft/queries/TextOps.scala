@@ -345,39 +345,11 @@ object TextOps {
       .orderBy("lang")
   }
 
-  /** q29 core (shared with q65): exact shingle-Jaccard pairs over the
-    * df-capped posting lists — pairs sharing ≥2 shingles, similarity
-    * ≥ 0.05, columns (da, db, jaccard). The df cap rides the same sh-hash
-    * partitioning the self-join consumes (count-over-window, no rejoin);
-    * no cache — ReuseExchange dedupes the distinct scan. */
-  /** The q29 df-capped shingle relation — shared by [[jaccardPairs]] and
-    * the ScaleDebug fan-out-locality audit (SCALE.md #10) so the audit
-    * times the EXACT shipped subtree. */
-  private def cappedSh(s: SparkSession, dir: String): DataFrame =
-    cappedShOf(shingles(docs(s, dir)))
-
   private def cappedShOf(shBase: DataFrame): DataFrame =
     shBase
       .withColumn("df", count(lit(1)).over(Window.partitionBy("sh")))
       .where(col("df") <= DF_CAP)
       .select("doc_id", "sh")
-
-  /** ScaleDebug-only (SCALE.md #10 audit): q29's fan-out stream exactly
-    * as the pair aggregate consumes it — the capped shingle self-join
-    * output, pre-aggregation. */
-  /** Dev-only (StatsCheck): the frames cutBounded gates, exposed so the
-    * size-estimate calibration at each SF is a one-command check. */
-  private[graft] def statsDebugCappedSh(s: SparkSession, dir: String): DataFrame =
-    cappedShOf(shingles(Extras.spreadNarrowScan(docs(s, dir))))
-  private[graft] def statsDebugMhSh(s: SparkSession, dir: String): DataFrame =
-    shingles(docs(s, dir)).withColumn("hb", mhBase(col("sh")))
-
-  private[graft] def q29FanOutDebug(s: SparkSession, dir: String): DataFrame = {
-    val sh = cappedSh(s, dir)
-    sh.as("a").join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-  }
 
   // spread a narrow documents scan before the shingle pass (round 17):
   // the tokenize + 3-gram transform + explode map ran as the pairs
@@ -395,6 +367,11 @@ object TextOps {
   // q27's mhStage worse in both pairs, q122/q139/q176 flat — their first
   // consumer is an eager cut or a doc_id-keyed window, not the
   // sh-distinct exchange that amortizes the spread here.
+  /** q29 core (shared with q65): exact shingle-Jaccard pairs over the
+    * df-capped posting lists — pairs sharing ≥2 shingles, similarity
+    * ≥ 0.05, columns (da, db, jaccard). The df cap rides the same sh-hash
+    * partitioning the self-join consumes (count-over-window, no rejoin);
+    * no cache — ReuseExchange dedupes the distinct scan. */
   private[graft] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     jaccardPairsOf(shingles(Extras.spreadNarrowScan(docs(s, dir))))
 

@@ -1,13 +1,12 @@
 package org.apache.spark
 
-/** Dev-tooling shim (used only by graft.ScaleDebug, never by catalog
-  * queries): SparkListener events are delivered asynchronously on the
-  * listener bus, so a measurement harness that reads per-leg stage
-  * totals right after an action can mis-attribute late events to the
-  * next leg (ADVICE r12 on ScaleDebug.fanoutsort). LiveListenerBus
-  * exposes exactly the needed barrier — waitUntilEmpty — but it is
-  * private[spark]; this object lives in the org.apache.spark package
-  * solely to re-export it. */
+/** Measurement shim (used by graft.TestSpark.jobsOf and graft.Explain's
+  * `stages` mode, never by catalog queries): SparkListener events are
+  * delivered asynchronously on the listener bus, so a harness that reads
+  * per-run stage or job totals right after an action can mis-attribute
+  * late events to the next run. LiveListenerBus exposes exactly the
+  * needed barrier — waitUntilEmpty — but it is private[spark]; this
+  * object lives in the org.apache.spark package solely to re-export it. */
 object GraftListenerDrain {
   /** Block until every queued listener event has been delivered (or the
     * timeout elapses — waitUntilEmpty throws TimeoutException then,

@@ -59,4 +59,40 @@ class BenchContractSpec extends AnyFunSuite {
     // the first stdout line IS that full record
     assert(JsonMethods.parse(lines.head) === full)
   }
+
+  test("a failed query's record names its exception class and message") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val out = new java.io.PrintStream(buf, true, "UTF-8")
+    val repo = java.nio.file.Files.createTempDirectory("graft_bench_spec_")
+    // q01 reads the sf dir's tables, so a missing dir fails every sample
+    val q = "q01_pricing_summary"
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    try {
+      Bench.runBench(s, repo.resolve("no_such_sf").toString,
+        only = Some(Set(q)), repoDir = repo.toString,
+        tag0 = Some("failure_spec"), out = out)
+      out.flush()
+      val lines = buf.toString("UTF-8").split("\n")
+      val full = JsonMethods.parse(lines.head)
+      assert((full \ "n_failed") === JInt(1))
+      assert((full \ "failed") === JArray(List(JString(q))))
+      val err = (full \ "errors" \ q) match {
+        case JString(e) => e
+        case other => fail(s"no error recorded for $q: $other")
+      }
+      // "Class: message", and the message names the missing path
+      assert(err.startsWith("AnalysisException: "), err)
+      assert(err.contains("no_such_sf"), err)
+      // the artifact carries the same record; the summary keeps its keys
+      val summary = JsonMethods.parse(lines.last)
+      val art = summary \ "queries_full" match {
+        case JString(p) => p
+        case other => fail(s"queries_full not a string: $other")
+      }
+      assert(JsonMethods.parse(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(art))) === full)
+      assert((summary \ "errors") === JNothing)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(repo.toFile)
+  }
 }

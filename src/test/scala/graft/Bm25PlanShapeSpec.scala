@@ -49,7 +49,7 @@ class Bm25PlanShapeSpec extends AnyFunSuite {
 
   test("scoredPostings: c above the LEFT dim join, doc_id exchange, " +
       "surviving doc_id sort") {
-    val tf = graft.queries.Retrieval.tfAndQtDebug(s, sfDir)
+    val tf = graft.queries.Retrieval.tfAndQt(s, sfDir)._1
     val qt = tf.where(org.apache.spark.sql.functions.col("doc_id") % 100 === 0)
       .select(org.apache.spark.sql.functions.col("doc_id").as("qid"),
         org.apache.spark.sql.functions.col("tok"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Lineage
+import graft.queries.{Lineage, RunPaths, Sinks}
 
 /** The cluster-deployment lineage-cut switch (VERDICT r16 #4): with
   * `spark.graft.lineage.reliable=true`, every `Lineage.cut` site routes
@@ -56,6 +56,28 @@ class LineageSpec extends AnyFunSuite {
         finally stream.close()
       assert(nFiles > 0, s"no checkpoint files under $dir")
     }
+  }
+
+  test("with no dir set, reliable cuts checkpoint under a run path") {
+    s.conf.unset(Lineage.DIR_KEY)
+    val dir = new java.io.File(Lineage.checkpointDir(s))
+    assert(dir.getName === "graft_ckpt_" + Sinks.runToken)
+    // registered with the run's paths, so application end deletes it
+    assert(Sinks.runPaths.owns(dir))
+    // cleanup of that registration removes a dir laid out as Spark's
+    // checkpoint writer leaves it (<dir>/<uuid>/rdd-<id>/part-*)
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_root_")
+      .toFile
+    try {
+      val run = new RunPaths(root.getPath, Sinks.runToken)
+      val ckpt = new java.io.File(run.path("graft_ckpt"))
+      val rdd = new java.io.File(ckpt, "3f2a/rdd-7")
+      assert(rdd.mkdirs())
+      assert(new java.io.File(rdd, "part-00000").createNewFile())
+      run.cleanup()
+      assert(!ckpt.exists)
+      assert(root.list.isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(root)
   }
 
   test("a multi-cut query path stays green and equal under the flag") {

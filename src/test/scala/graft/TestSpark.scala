@@ -4,21 +4,10 @@ import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Shared test session — one JVM-wide session matching the Verify/Bench
-  * builder configuration (UTC, nanosAsLong, graft extensions). */
+/** Shared test session — one JVM-wide session built as Verify and Bench
+  * build theirs ([[Sessions.local]]) on 4 cores. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 
   /** Spark jobs started on the shared session while `body` runs (the
     * listener bus drained before reading, so late events are not missed). */
