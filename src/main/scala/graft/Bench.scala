@@ -53,10 +53,11 @@ object Bench {
     * round-16 main body (the full record adds an `errors` map: each
     * failed query's first "Class: message") — `main` above passes
     * exactly the env values it always read. Nothing may print to `out`
-    * after the summary line. */
+    * after the summary line; failures are reported on `err`. */
   private[graft] def runBench(spark: SparkSession, sfDir: String,
       only: Option[Set[String]], repoDir: String, tag0: Option[String],
-      out: java.io.PrintStream): Unit = {
+      out: java.io.PrintStream,
+      err: java.io.PrintStream = System.err): Unit = {
 
     def run(name: String): Either[String, Unit] =
       try Right(SparkEntry.queries(name)(spark, sfDir)
@@ -64,8 +65,15 @@ object Bench {
       catch { case e: Throwable =>
         Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
 
-    // Warm-up: one cheap query end-to-end (JIT, codegen cache, FS metadata).
-    run("q01_pricing_summary")
+    // `only` set: a targeted re-timing; unset: the full sweep.
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+
+    // Warm-up: the first selected query end-to-end (JIT, codegen cache,
+    // FS metadata), so a targeted run warms up on what it times.
+    names.headOption.foreach { q =>
+      run(q).left.foreach(e => err.println(s"[bench] $q WARMUP FAILED: $e"))
+    }
 
     val MinSamples = 3
     val MaxSamples = 7
@@ -76,9 +84,6 @@ object Bench {
     // (the r6 quiet sweep used ~30) while bounding the worst one.
     var extraBudget = 100
 
-    // Dev-only targeted re-timing (unset on the driver → full sweep).
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     val results = names.map { name =>
       var samples = Vector.empty[(Double, Double, Either[String, Unit])]
       def spreadOk = {
@@ -93,8 +98,8 @@ object Bench {
         val ok = run(name)
         samples :+= (((System.nanoTime() - t0) / 1e9, la, ok))
       }
-      val err = samples.collectFirst { case (_, _, Left(err)) => err }
-      err.foreach(e => System.err.println(s"[bench] $name FAILED: $e"))
+      val failure = samples.collectFirst { case (_, _, Left(e)) => e }
+      failure.foreach(e => err.println(s"[bench] $name FAILED: $e"))
       val ts = samples.map(_._1).sorted
       // true median: average the two middles on even counts (the
       // upper-middle alone biases even-count queries upward)
@@ -103,7 +108,7 @@ object Bench {
         else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
       val min = ts.head
       val meanLoad = samples.map(_._2).sum / samples.size
-      (name, median, min, meanLoad, samples.size, err)
+      (name, median, min, meanLoad, samples.size, failure)
     }
     def m(f: ((String, Double, Double, Double, Int, Option[String])) => String) =
       results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")

@@ -7,11 +7,10 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
   * `graft.queries`; every entry has a DuckDB oracle unless the operator is
   * genuinely not SQL-expressible (those get the driver's rows-only check).
   *
-  * Session contract for externally-built sessions: running any `events`
-  * query sets `spark.sql.legacy.parquet.nanosAsLong=true` for the REST of
-  * the session (required by parquet timestamp[ns] data and not scopeable —
-  * see Tables.events). The session timeZone, by contrast, is only pinned
-  * to UTC DURING query construction and restored on exit (see `queries`).
+  * Session contract for externally-built sessions: tables are read with
+  * declared schemas (Tables.schema), so building a query sets no parquet
+  * conf. The session timeZone is pinned to UTC only DURING query
+  * construction and restored on exit (see `queries`).
   * Queries register graft's native functions/rules idempotently via
   * GraftExtensions.ensureRegistered.
   */

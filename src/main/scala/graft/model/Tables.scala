@@ -7,6 +7,13 @@ import org.apache.spark.sql.functions._
   * FIXTURES.md §1). Every query receives an `sfDir` and reads through here,
   * so scan options (vectorized parquet reader, pushdown) are centralized.
   *
+  * Every table is read with its declared schema ([[Tables.schema]]), so
+  * building a query starts no Parquet schema-inference job (a 1-task
+  * footer read per schema-less `spark.read.parquet`). There is no
+  * inference fallback: a file whose column types drift from the declared
+  * ones fails at the scan. TableSchemaSpec pins each declared schema to
+  * what inference gives on every shipped scale.
+  *
   * Scale note: at 100 TB the fact tables (`lineitem`, `orders`, `events`,
   * `documents`, `embeddings`) arrive partitioned; dimension tables
   * (`region`, `nation`, `customer`, `supplier`, `part`) stay broadcastable —
@@ -21,7 +28,7 @@ final case class Tables(spark: SparkSession, sfDir: String) {
   graft.functions.GraftExtensions.ensureRegistered(spark)
 
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(Tables.schema(name)).parquet(s"$sfDir/$name.parquet")
 
   /** Explicit broadcast hint for dimension-sized tables (SURVEY §2.3 J6). */
   def dim(df: DataFrame): DataFrame = broadcast(df)
@@ -34,39 +41,24 @@ final case class Tables(spark: SparkSession, sfDir: String) {
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
 
-  /** `events.ts` has shipped in two parquet physical types across driver
-    * testdata generations — timestamp[ns] (rounds 1–5) and timestamp[us]
-    * (round 6+) — so the loader dispatches on the type Spark actually
-    * inferred rather than assuming either one (see
-    * [[Tables.normalizeEventTs]]). The nanosAsLong conf is (re)asserted
-    * first because Spark 4.x refuses timestamp[ns] natively
-    * ([PARQUET_TYPE_ILLEGAL]); with it set, ns data arrives as a raw
-    * LongType and is truncated to microseconds. On timestamp[us] data the
-    * conf is a no-op.
-    *
-    * DELIBERATE SESSION-WIDE EFFECT: the conf stays set after this call.
-    * It CANNOT be scoped — parquet schema inference reads it at
-    * `spark.read` time and execution snapshots it again into the scan's
-    * hadoopConf at physical-planning time (there is no per-read option;
-    * probed on 4.1.2: `.option("nanosAsLong", true)` still throws
-    * PARQUET_TYPE_ILLEGAL), so a save/restore around this accessor would
-    * break the very query being built. Consequence for a shared session:
-    * any LATER parquet read of a timestamp[ns] column — graft or not —
-    * gets a LongType instead of an AnalysisException. Documented as the
-    * SparkEntry session contract; micro/milli/second timestamps and all
-    * other types are unaffected.
+  /** `events.ts` is declared as the `TIMESTAMP_NTZ` Spark infers from the
+    * shipped timestamp[us] files and normalized to session-zoned
+    * `TimestampType` by [[Tables.normalizeEventTs]]. Building an events
+    * query writes no session conf: with the schema declared, nothing is
+    * read at `spark.read` time, and `spark.sql.legacy.parquet.nanosAsLong`
+    * (which [[graft.Sessions.local]] still sets for the round 1–5
+    * timestamp[ns] files) plays no part in reading the shipped data.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The NTZ→timestamp cast in normalizeEventTs re-labels the naive wall
     // clock in the SESSION zone — the old ns path (timestamp_micros of a
     // raw long) was timezone-immune, so the externally-built-session
     // contract ("works without builder cooperation") requires UTC during
-    // query CONSTRUCTION (review r7 #1). Unlike nanosAsLong this one IS
-    // scopeable — the analyzer bakes the zone into every
-    // TimeZoneAwareExpression at analysis time, so restoring the host's
-    // zone after the DataFrame is built does not change its results —
-    // and the catalog boundary (SparkEntry.queries) wraps every entry in
+    // query CONSTRUCTION (review r7 #1). The zone IS scopeable — the
+    // analyzer bakes the zone into every TimeZoneAwareExpression at
+    // analysis time, so restoring the host's zone after the DataFrame is
+    // built does not change its results — and the catalog boundary
+    // (SparkEntry.queries) wraps every entry in
     // [[Tables.withUtcSession]], which restores the caller's zone on
     // exit (VERDICT r7 #7, proven by UtcScopeSpec). Direct Tables users
     // get the set-but-not-restored behavior, with a one-time warning.
@@ -79,7 +71,48 @@ final case class Tables(spark: SparkSession, sfDir: String) {
 }
 
 object Tables {
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+  import org.apache.spark.sql.types._
+
+  /** The declared schema of each shipped table: names, types and
+    * nullability exactly as Parquet inference gives them on the generated
+    * files (every column nullable; pyarrow's timestamp[us] columns are
+    * `TIMESTAMP_NTZ`, its list<float> is `ARRAY<FLOAT>`). Built field by
+    * field rather than parsed from DDL: a first DDL parse sets up the SQL
+    * parser (0.74 s on a 4-vCPU host) in a JVM that may not otherwise
+    * need it. Unknown names fail: every table read goes through a
+    * declared schema. */
+  def schema(name: String): StructType = {
+    def fields(ts: (String, DataType)*) =
+      StructType(ts.map { case (n, t) => StructField(n, t) })
+    val I = IntegerType; val L = LongType; val D = DoubleType
+    val S = StringType; val Ts = TimestampNTZType
+    name match {
+      case "region" => fields("r_regionkey" -> I, "r_name" -> S)
+      case "nation" =>
+        fields("n_nationkey" -> I, "n_name" -> S, "n_regionkey" -> I)
+      case "customer" => fields("c_custkey" -> L, "c_name" -> S,
+        "c_nationkey" -> I, "c_acctbal" -> D, "c_mktsegment" -> S)
+      case "supplier" => fields("s_suppkey" -> L, "s_name" -> S,
+        "s_nationkey" -> I, "s_acctbal" -> D)
+      case "part" => fields("p_partkey" -> L, "p_name" -> S, "p_brand" -> S,
+        "p_type" -> S, "p_size" -> I, "p_retailprice" -> D)
+      case "orders" => fields("o_orderkey" -> L, "o_custkey" -> L,
+        "o_orderstatus" -> S, "o_totalprice" -> D, "o_orderdate" -> Ts,
+        "o_orderpriority" -> S)
+      case "lineitem" => fields("l_orderkey" -> L, "l_partkey" -> L,
+        "l_suppkey" -> L, "l_linenumber" -> I, "l_quantity" -> D,
+        "l_extendedprice" -> D, "l_discount" -> D, "l_tax" -> D,
+        "l_returnflag" -> S, "l_linestatus" -> S, "l_shipdate" -> Ts)
+      case "events" => fields("event_id" -> L, "ts" -> Ts, "user_id" -> L,
+        "event_type" -> S, "value" -> D, "props" -> S)
+      case "documents" => fields("doc_id" -> L, "text" -> S, "lang" -> S,
+        "source" -> S, "n_chars" -> L)
+      case "embeddings" => fields("vec_id" -> L,
+        "embedding" -> ArrayType(FloatType), "label" -> I)
+      case _ => throw new IllegalArgumentException(
+        s"no declared schema for table $name")
+    }
+  }
 
   private val warnedZones =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -122,10 +155,7 @@ object Tables {
     * plan. Downstream zone-aware transformations that need UTC must be
     * wrapped in their own withUtcSession (SparkEntry.queries entries are
     * closed outputs — ORDER BY + final projection — so the catalog
-    * never composes this way; the caveat is for external callers).
-    *
-    * `spark.sql.legacy.parquet.nanosAsLong` is deliberately NOT restored
-    * here — see the events scaladoc for why it cannot be scoped. */
+    * never composes this way; the caveat is for external callers). */
   def withUtcSession[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.getOption("spark.sql.session.timeZone")
     assertUtc(spark)

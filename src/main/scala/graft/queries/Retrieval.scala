@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.model.Tables
 import Lineage.LineageOps
 
@@ -455,10 +456,13 @@ object Retrieval {
     * catalog run exercises the probe arithmetic, and the short-query
     * serving case gets the pruning.) */
   private val bm25IdxMemo =
-    new BuildOnceMemo[(String, String)]("graft_bm25_index")
+    new BuildOnceMemo[(String, StructType, StructType)]("graft_bm25_index")
 
-  private def bm25Index(s: SparkSession, dir: String): (String, String) = {
-    bm25IdxMemo.getOrBuild(s, dir) {
+  /** The index's (postings, dl) frames, read back with the schemas they
+    * were written with: a probe runs no schema-inference job. */
+  private def bm25Index(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val (stem, postingsSchema, dlSchema) = bm25IdxMemo.getOrBuild(s, dir) {
       val stem = bm25IdxMemo.nextPath(dir)
       // one eager checkpoint: the tokenize+count pass feeds BOTH the
       // postings write and the dl aggregation (the q161 fan-out lesson)
@@ -470,16 +474,18 @@ object Retrieval {
       // the multi-scan plan re-opening them; 64 clustered files probe in
       // seconds). Sort within partitions by term so row groups are
       // term-local (zone-map pruning on the probe's term semi-join).
-      tf.withColumn("bkt",
+      val postings = tf.withColumn("bkt",
           pmod(TextOps.h48("bm25bkt:", col("tok")), lit(64L)).cast("int"))
-        .repartition(col("bkt"))
+      postings.repartition(col("bkt"))
         .sortWithinPartitions("tok")
         .write.mode("overwrite").partitionBy("bkt").parquet(s"$stem/postings")
-      tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-        .coalesce(8)
+      val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
+      dl.coalesce(8)
         .write.mode("overwrite").parquet(s"$stem/dl")
-      (s"$stem/postings", s"$stem/dl")
+      (stem, postings.schema, dl.schema)
     }
+    (s.read.schema(postingsSchema).parquet(s"$stem/postings"),
+      s.read.schema(dlSchema).parquet(s"$stem/dl"))
   }
 
   /** q131 core: reciprocal-rank fusion of the BM25 and Jaccard arms over
@@ -648,8 +654,8 @@ object Retrieval {
     // verbatim (the q145/q62 shared-oracle pattern: serving-shape
     // equivalence is hash-checked every round).
     "q178_bm25_prebuilt" -> ((s, dir) => {
-      val (pPath, dPath) = bm25Index(s, dir)
-      val tf = s.read.parquet(pPath).select("doc_id", "tok", "tf")
+      val (postings, dl) = bm25Index(s, dir)
+      val tf = postings.select("doc_id", "tok", "tf")
       val qt = tf.where(col("doc_id") % QMOD === 0)
         .select(col("doc_id").as("qid"), col("tok"))
       // The serving path freezes BY DEFAULT at every corpus size (round
@@ -664,7 +670,7 @@ object Retrieval {
       // bench_only_sf0.1_r13_layout*: frozen 1.96 vs gated 2.19 s
       // min-of-mins); hash-identical paths, q120's shared oracle proves
       // it at the gate every round.
-      bm25Score(tf, qt, s.read.parquet(dPath),
+      bm25Score(tf, qt, dl,
           frozenSortedLayout = servingLayoutFrozen(s),
           postingParts = postingPartitionsFor(s, dir))
         .select(col("qid"), col("rnk").cast("long").as("rnk"),
@@ -688,11 +694,11 @@ object Retrieval {
     // index-pruned sparse pass. bm25_rnk rides along so the output
     // shows the re-ordering the dense stage actually performed.
     "q190_retrieve_rerank" -> ((s, dir) => {
-      val (pPath, dPath) = bm25Index(s, dir)
-      val tf = s.read.parquet(pPath).select("doc_id", "tok", "tf")
+      val (postings, dl) = bm25Index(s, dir)
+      val tf = postings.select("doc_id", "tok", "tf")
       val qt = tf.where(col("doc_id") % QMOD === 0)
         .select(col("doc_id").as("qid"), col("tok"))
-      val cand = bm25Score(tf, qt, s.read.parquet(dPath),
+      val cand = bm25Score(tf, qt, dl,
           frozenSortedLayout = servingLayoutFrozen(s),
           postingParts = postingPartitionsFor(s, dir),
           topK = RERANK_CAND)

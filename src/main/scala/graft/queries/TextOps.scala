@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.model.Tables
 import graft.functions.SimHashAgg
 import Lineage.LineageOps
@@ -1601,15 +1602,18 @@ object TextOps {
     * many — q174's bench samples after the first time the probe join
     * alone. The roundtrip is exact (string/long columns only), so the
     * oracle hash is unchanged vs. recomputing the loop in-plan. */
-  private val bpeStateMemo = new BuildOnceMemo[String]("graft_bpe_state")
+  private val bpeStateMemo =
+    new BuildOnceMemo[(String, StructType)]("graft_bpe_state")
 
+  /** Read back with the writer's schema: no schema-inference job. */
   private def bpeFinalToks(s: SparkSession, dir: String): DataFrame = {
-    val path = bpeStateMemo.getOrBuild(s, dir) {
+    val (path, schema) = bpeStateMemo.getOrBuild(s, dir) {
       val p = bpeStateMemo.nextPath(dir)
-      bpeTrain(docs(s, dir))._2.write.mode("overwrite").parquet(p)
-      p
+      val state = bpeTrain(docs(s, dir))._2
+      state.write.mode("overwrite").parquet(p)
+      (p, state.schema)
     }
-    s.read.parquet(path)
+    s.read.schema(schema).parquet(path)
   }
 
   /** q143/q174 core: the full BPE training loop. Returns (merge table,

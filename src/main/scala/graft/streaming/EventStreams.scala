@@ -473,11 +473,15 @@ object EventStreams {
       .parquet(outDir)
   }
 
+  /** What [[transitionGraphPartials]] writes: the (src, dst) item ids of
+    * [[itemTransitions]], the count, and the LONG batch id partition. */
+  private val TransitionPartials = "src LONG, dst LONG, n LONG, batch_id LONG"
+
   /** Merge-many read of [[transitionGraphPartials]] output: the serving
     * (src, dst, n) graph — one keyed aggregate over the partials, the
     * same shape the q136 sketch rollup reads with. */
   def mergedTransitionGraph(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dir)
+    s.read.schema(TransitionPartials).parquet(dir)
       .groupBy("src", "dst")
       .agg(sum("n").as("n"))
 

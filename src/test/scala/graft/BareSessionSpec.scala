@@ -14,7 +14,7 @@ import graft.plans.SmallSortStrategy
   * recreates that hostile session state (fresh sessionState with the
   * native functions dropped, the legacy parquet conf unset, and the
   * optimizer rule cleared) and asserts the catalog still works — the
-  * use-site conf re-assertion and idempotent function registration are
+  * declared table schemas and idempotent function registration are
   * regression-pinned, not just claimed (r3 ADVICE). */
 class BareSessionSpec extends AnyFunSuite {
 
@@ -28,7 +28,7 @@ class BareSessionSpec extends AnyFunSuite {
       bare.sessionState.functionRegistry.dropFunction(FunctionIdentifier(f))
     }
     val sf = "/root/testdata/sf0.001"
-    // events path: requires the nanosAsLong re-assert in Tables.events
+    // events path: the declared events schema needs no nanosAsLong
     assert(SparkEntry.queries("q39_tumbling_window")(bare, sf).count() > 0)
     // poster path: requires runtime point_in_polygon registration
     assert(SparkEntry.queries("q45_pip_expr")(bare, sf).count() > 0)

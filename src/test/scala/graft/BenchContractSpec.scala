@@ -18,10 +18,13 @@ class BenchContractSpec extends AnyFunSuite {
     val out = new java.io.PrintStream(buf, true, "UTF-8")
     val repo = java.nio.file.Files.createTempDirectory("graft_bench_spec_")
       .toAbsolutePath.toString
+    val errBuf = new java.io.ByteArrayOutputStream()
     Bench.runBench(s, "/root/testdata/sf0.001",
       only = Some(Set("q13_kernel")), repoDir = repo,
-      tag0 = Some("contract_spec"), out = out)
+      tag0 = Some("contract_spec"), out = out,
+      err = new java.io.PrintStream(errBuf, true, "UTF-8"))
     out.flush()
+    assert(errBuf.toString("UTF-8").isEmpty)
     val text = buf.toString("UTF-8")
     assert(text.endsWith("\n"), "summary line must be newline-terminated")
     val lines = text.split("\n", -1).dropRight(1) // trailing "" after last \n
@@ -68,11 +71,20 @@ class BenchContractSpec extends AnyFunSuite {
     val q = "q01_pricing_summary"
     import org.json4s._
     import org.json4s.jackson.JsonMethods
+    val errBuf = new java.io.ByteArrayOutputStream()
     try {
       Bench.runBench(s, repo.resolve("no_such_sf").toString,
         only = Some(Set(q)), repoDir = repo.toString,
-        tag0 = Some("failure_spec"), out = out)
+        tag0 = Some("failure_spec"), out = out,
+        err = new java.io.PrintStream(errBuf, true, "UTF-8"))
       out.flush()
+      // the warm-up runs the selected query, and its failure is reported
+      val errLines = errBuf.toString("UTF-8").split("\n").toSeq
+      assert(errLines.size === 2, errLines)
+      assert(errLines.head.startsWith(
+        s"[bench] $q WARMUP FAILED: AnalysisException: "), errLines.head)
+      assert(errLines.head.contains("no_such_sf"), errLines.head)
+      assert(errLines(1).startsWith(s"[bench] $q FAILED: AnalysisException: "))
       val lines = buf.toString("UTF-8").split("\n")
       val full = JsonMethods.parse(lines.head)
       assert((full \ "n_failed") === JInt(1))

@@ -15,8 +15,12 @@ class FkAuditSpec extends AnyFunSuite {
   private lazy val dir: String = {
     import s.implicits._
     val d = Files.createTempDirectory("graft_fk_audit").toString
-    def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-      df.coalesce(1).write.parquet(s"$d/$name.parquet")
+    // each column takes its table's declared type, as in the shipped files
+    def w(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val t = graft.model.Tables.schema(name)
+      df.select(df.columns.toSeq.map(c => df(c).cast(t(c).dataType).as(c)): _*)
+        .coalesce(1).write.parquet(s"$d/$name.parquet")
+    }
     w("region", Seq(Tuple1(1L)).toDF("r_regionkey"))
     // nation 2 points at region 99 (orphan dim key)
     w("nation", Seq((1L, 1L), (2L, 99L)).toDF("n_nationkey", "n_regionkey"))

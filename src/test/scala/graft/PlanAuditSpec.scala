@@ -8,22 +8,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * turns a capped candidate join into |corpus|² work at scale. The
   * intentional cross joins in the catalog (grid constructors, kernel
   * neighbor joins, bounded query sets) are all broadcast nested-loop
-  * joins against tiny sides, which this audit permits.
+  * joins against tiny sides, which this audit permits. The same pass
+  * fails on any Parquet schema-inference job a query's construction
+  * starts outside Sinks: every other read declares its schema.
   */
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
   test("every catalog query plans without a CartesianProduct") {
+    val inferring = Seq.newBuilder[String]
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         // sparkPlan = the pre-AQE physical plan; building it exercises
         // analysis + optimization without executing anything.
-        val plan = fn(s, sfDir).queryExecution.sparkPlan.toString
+        var plan = ""
+        inferring ++= TestSpark.inferenceJobsOf {
+          plan = fn(s, sfDir).queryExecution.sparkPlan.toString
+        }.map(site => s"$name: $site")
         if (plan.contains("CartesianProduct")) Some(name) else None
     }
     assert(offenders.isEmpty,
       s"queries planning a CartesianProduct: ${offenders.mkString(", ")}")
+    val inferred = inferring.result()
+    assert(inferred.isEmpty,
+      s"schema-inference jobs outside Sinks: ${inferred.mkString(", ")}")
   }
 
   // ---- scan-level scale guarantees (the brief's "a scan that reads all

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -9,19 +14,42 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local(4)
 
-  /** Spark jobs started on the shared session while `body` runs (the
-    * listener bus drained before reading, so late events are not missed). */
-  def jobsOf(body: => Unit): Int = {
+  /** Calls `f` on each Spark job started on the shared session while
+    * `body` runs (the listener bus drained before returning, so late
+    * events are not missed). */
+  private def onJobStart(body: => Unit)(f: SparkListenerJobStart => Unit)
+      : Unit = {
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = f(e)
     }
     GraftListenerDrain.drain(sc)
     sc.addSparkListener(l)
     try { body; GraftListenerDrain.drain(sc) }
     finally sc.removeSparkListener(l)
+  }
+
+  /** Spark jobs started on the shared session while `body` runs. */
+  def jobsOf(body: => Unit): Int = {
+    val n = new AtomicInteger
+    onJobStart(body)(_ => n.incrementAndGet())
     n.get
+  }
+
+  /** The stage names (`parquet at Tables.scala:24`) of the Parquet
+    * schema-inference jobs `body` starts outside `graft.queries.Sinks`,
+    * whose format round trips read back on inference on purpose. Such a
+    * job's callsite is a schema-less `DataFrameReader.parquet`: the top
+    * frame of its stage details, with the caller on the next line. */
+  def inferenceJobsOf(body: => Unit): Seq[String] = {
+    val found = new ConcurrentLinkedQueue[String]
+    onJobStart(body) { e =>
+      val stage = e.stageInfos.maxBy(_.stageId)
+      val frames = stage.details.linesIterator.take(2).toSeq
+      if (frames.headOption.exists(_.contains("DataFrameReader.parquet(")) &&
+          !frames.lift(1).exists(_.startsWith("graft.queries.Sinks")))
+        found.add(stage.name)
+    }
+    found.asScala.toSeq
   }
 }

@@ -58,6 +58,12 @@ WORDS = ["batch", "part", "spark", "line", "column", "order", "small", "sort",
 
 
 def write(name, table):
+    # graft reads each table with a declared schema (Tables.schema), pinned
+    # to the sf0.1 files by TableSchemaSpec; a drifted sf1 table would fail
+    # at the scan, so it fails here instead, before anything is written
+    src = pq.read_schema(os.path.join(SRC, f"{name}.parquet"))
+    assert table.schema.equals(src), \
+        f"{name}: schema\n{table.schema}\ndiffers from {SRC}:\n{src}"
     os.makedirs(OUT, exist_ok=True)
     pq.write_table(table, os.path.join(OUT, f"{name}.parquet"))
     print(f"scaledata/sf1/{name}.parquet rows={table.num_rows}")
