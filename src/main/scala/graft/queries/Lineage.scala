@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The house lineage-cut routed through ONE switch (VERDICT r16 #4).
   *
@@ -37,14 +38,25 @@ object Lineage {
   private def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.get(RELIABLE_KEY, "false").toBoolean
 
+  /** A frame whose optimized plan is already a LocalRelation (an
+    * in-process tier's output, such as `LocalJaccard.pairs`) comes back
+    * unchanged under either flag: it has no lineage to truncate and
+    * nothing to materialize, so no job runs and no checkpoint dir is
+    * set. */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (!reliable(df)) df.localCheckpoint(eager)
+    if (isLocal(df)) df
+    else if (!reliable(df)) df.localCheckpoint(eager)
     else {
       val sc = df.sparkSession.sparkContext
       if (sc.getCheckpointDir.isEmpty)
         sc.setCheckpointDir(checkpointDir(df.sparkSession))
       df.checkpoint(eager)
     }
+
+  /** Whether `df` plans as a LocalRelation: driver-held rows, read with
+    * no job. */
+  private[graft] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** The reliable cut's checkpoint dir: the session's [[DIR_KEY]], else
     * a run path that application end deletes. */

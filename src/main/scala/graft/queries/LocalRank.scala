@@ -57,10 +57,14 @@ private[graft] object LocalRank {
     * `limit(n).collect()` scans partitions in rounds (1, then ×4 …), one
     * job each, until it holds n rows or runs out — 2+ jobs on a small
     * multi-partition list. One task reads the cached blocks in order and
-    * stops at max + 1 rows. */
+    * stops at max + 1 rows. A LocalRelation list (the in-process
+    * `jaccardPairs` tier's) is read with no job at all. */
   def collectBounded(pairs: DataFrame, max: Int): Option[Array[Row]] = {
     require(max >= 0, s"the in-process pair bound must be >= 0, got $max")
-    val rows = pairs.select("u", "v").coalesce(1).limit(max + 1).collect()
+    val uv = pairs.select("u", "v")
+    val rows =
+      if (Lineage.isLocal(pairs)) uv.collect()
+      else uv.coalesce(1).limit(max + 1).collect()
     if (rows.length <= max) Some(rows) else None
   }
 

@@ -72,6 +72,11 @@ object TextOps {
     * element_at aligns with DuckDB list indexing in the oracle. Shared
     * with Retrieval's q123 (positionless containment). */
   private[queries] def shingles(d: DataFrame): DataFrame =
+    shingleMap(d).distinct()
+
+  /** The narrow map under [[shingles]]: one (doc_id, sh) row per 3-gram
+    * occurrence, repeats kept. */
+  private[graft] def shingleMap(d: DataFrame): DataFrame =
     d.select(col("doc_id"), split(col("text"), " ").as("toks"))
       // guard: Spark's sequence(1, 0) DESCENDS; docs under 3 tokens must
       // yield an empty shingle array, matching DuckDB's empty range().
@@ -80,7 +85,6 @@ object TextOps {
           i => concat_ws(" ", element_at(col("toks"), i),
             element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
         .otherwise(array().cast("array<string>"))).as("sh"))
-      .distinct()
 
   // Tiny stopword profile for the language/quality heuristics. The corpus
   // vocabulary is shared across langs (verified in the data), so this is a
@@ -91,7 +95,7 @@ object TextOps {
   /** Posting-list document-frequency cap for the exact-Jaccard join (q29):
     * above the current corpus max df (25) so the output is value-identical
     * with the guard active. Must match the literal in the q29 oracle. */
-  private val DF_CAP = 1000
+  private[graft] val DF_CAP = 1000
 
   /** 48-bit hash from the first 12 hex chars of md5(prefix || s) — the
     * engine-independent hash family (Spark `conv(…,16,10)` ≡ DuckDB
@@ -368,13 +372,27 @@ object TextOps {
   // q27's mhStage worse in both pairs, q122/q139/q176 flat — their first
   // consumer is an eager cut or a doc_id-keyed window, not the
   // sh-distinct exchange that amortizes the spread here.
-  /** q29 core (shared with q65): exact shingle-Jaccard pairs over the
-    * df-capped posting lists — pairs sharing ≥2 shingles, similarity
-    * ≥ 0.05, columns (da, db, jaccard). The df cap rides the same sh-hash
-    * partitioning the self-join consumes (count-over-window, no rejoin);
-    * no cache — ReuseExchange dedupes the distinct scan. */
-  private[graft] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    jaccardPairsOf(shingles(Extras.spreadNarrowScan(docs(s, dir))))
+  /** q29 core, shared by the twelve pair-list consumers (q29, q65, q81,
+    * q102, q104, q148, q149, q158, q161, q167, q172, q181): exact
+    * shingle-Jaccard pairs over the df-capped posting lists — pairs
+    * sharing ≥2 shingles, similarity ≥ 0.05, columns (da, db, jaccard).
+    *
+    * Two tiers behind one gate ([[LocalJaccard.pairs]]): one bounded
+    * collect of the narrow (doc_id, sh) shingle map, Spark still
+    * tokenizing. If it holds at most `maxRows` rows and its capped
+    * posting-list fan-out is at most `maxFanOut`, the driver builds the
+    * list and it comes back as a LocalRelation — one Spark job in all,
+    * and the consumers' cuts and gates read it with none. Otherwise the
+    * distributed chain ([[jaccardPairsOf]]) runs unchanged over a
+    * spread scan. The tiers return the same rows and schema; bound 0
+    * forces the distributed tier. */
+  private[graft] def jaccardPairs(s: SparkSession, dir: String,
+      maxRows: Int = LocalJaccard.MaxShingleRows,
+      maxFanOut: Long = LocalJaccard.MaxFanOut): DataFrame = {
+    val d = docs(s, dir)
+    LocalJaccard.pairs(shingleMap(d), DF_CAP, maxRows, maxFanOut).getOrElse(
+      jaccardPairsOf(shingles(Extras.spreadNarrowScan(d))))
+  }
 
   /** Base-parameterized form (round 16): q130 shares ONE checkpointed
     * distinct-shingle relation between this exact-truth chain and the
@@ -2160,7 +2178,9 @@ object TextOps {
     * tier, [[LocalRank]]); otherwise `prGraph` + [[converge2]] run over
     * the same cut (the distributed tier, one extra job for the gate).
     * The tiers' iterates, stop round and cap failure are bit-identical;
-    * `localMax` = 0 forces the distributed tier. */
+    * `localMax` = 0 forces the distributed tier. A LocalRelation pair
+    * list (the in-process `jaccardPairs` tier's) is neither cut nor read
+    * by a job, so q104 builds with the pair-list gate as its only job. */
   private[graft] def pageRankConverged(pairs: DataFrame,
       cap: Int = PR_CAP,
       unroll: Option[Int] = None,

@@ -31,6 +31,27 @@ class LineageSpec extends AnyFunSuite {
     }
   }
 
+  test("a LocalRelation is returned uncut with no job, under either flag") {
+    import s.implicits._
+    val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+    val rows = df.collect().toSeq
+    def cutsOf(d: org.apache.spark.sql.DataFrame) =
+      Seq(Lineage.cut(d), Lineage.cut(d, eager = false), Lineage.cutBounded(d))
+    var cuts = Seq.empty[org.apache.spark.sql.DataFrame]
+    assert(TestSpark.jobsOf { cuts = cutsOf(df) } === 0)
+    assert(cuts.forall(_ eq df))
+    assert(TestSpark.jobsOf(assert(cuts.forall(_.collect().toSeq == rows))) === 0)
+    val before = s.sparkContext.getCheckpointDir
+    withReliable {
+      assert(TestSpark.jobsOf { cuts = cutsOf(df) } === 0)
+      assert(cuts.forall(_ eq df))
+      // no checkpoint dir was set up: on a context without one, a reliable
+      // cut would create it (with its uuid subdir) under the configured dir
+      assert(new java.io.File(s.conf.get(Lineage.DIR_KEY)).list().isEmpty)
+    }
+    assert(s.sparkContext.getCheckpointDir === before)
+  }
+
   test("default off: cut is localCheckpoint (plan truncated, same rows)") {
     val df = s.range(100).select(col("id"), (col("id") % 7).as("k"))
     val cutDf = Lineage.cut(df)
@@ -93,8 +114,10 @@ class LineageSpec extends AnyFunSuite {
     // q104 runs in-process at this scale; bound 0 forces the cut-heavy
     // distributed loop through the reliable checkpoints.
     import s.implicits._
+    // repartitioned, so the list is not a LocalRelation and the loop's
+    // first cut really checkpoints it
     val pairs = Seq((10L, 1L), (1L, 2L), (2L, 3L), (1L, 20L), (20L, 21L))
-      .toDF("u", "v")
+      .toDF("u", "v").repartition(2)
     def run() = graft.queries.TextOps.pageRankConverged(pairs, localMax = 0)
       .orderBy("doc_id").collect().toSeq
     val base = run()

@@ -140,6 +140,19 @@ class LocalRankSpec extends AnyFunSuite {
       assert(TestSpark.jobsOf(LocalRank.collectBounded(p, bound)) === 1, s"bound $bound")
   }
 
+  test("a LocalRelation pair list is cut and gated with no job") {
+    // the in-process jaccardPairs tier hands q104/q158 such a list
+    for (bound <- Seq(0, pairs.size - 1, pairs.size, local)) {
+      var rows: Option[Array[Row]] = None
+      assert(TestSpark.jobsOf {
+        rows = LocalRank.collectBounded(Lineage.cut(df(pairs)), bound)
+      } === 0, s"bound $bound")
+      assert(rows.map(_.length) === Some(pairs.size).filter(_ <= bound))
+    }
+    assert(TestSpark.jobsOf(pr(df(pairs), TextOps.PR_CAP, local)) === 0)
+    assert(TestSpark.jobsOf(ppr(df(pairs), TextOps.PPR_CAP, local)) === 0)
+  }
+
   test("the in-process tier runs two jobs in all: the cut and the gate") {
     val p = Lineage.cut(df(pairs).repartition(4))
     assert(TestSpark.jobsOf(pr(p, TextOps.PR_CAP, local).collect()) === 2)

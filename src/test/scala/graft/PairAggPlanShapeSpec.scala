@@ -2,13 +2,17 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{LocalTableScanExec, RDDScanExec,
+  SparkPlan}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL,
   ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   SortMergeJoinExec}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.TextOps
 
 /** Pins the single-pass pair-aggregate plan shape (VERDICT r12 #1, the
   * Bm25PlanShapeSpec mold).
@@ -49,6 +53,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * fourth test proves q161 really does consume the audited subtree
   * through its construction-time checkpoint (RDD scan, no pair agg left
   * in the consuming plan).
+  *
+  * Every shipped scale up to sf0.1 builds the pair list in the driver
+  * (`LocalJaccard`), so the jaccardPairs, q29 and q161 checks run the
+  * distributed tier, forced with a shingle-row bound of 0, over the
+  * catalog entries' own expressions. A fifth test pins the in-process
+  * tier's shape: the consumers plan the pair list as a LocalTableScan
+  * and no pair aggregate.
   */
 class PairAggPlanShapeSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -114,16 +125,18 @@ class PairAggPlanShapeSpec extends AnyFunSuite {
         s"(repartitioning the fan-out stream):\n$plan")
   }
 
+  /** The pair list on its distributed tier. */
+  private def distPairs = TextOps.jaccardPairs(s, sfDir, maxRows = 0)
+
   test("jaccardPairs (the subtree q161/q65/q102 checkpoint-materialize) " +
       "keeps the single-pass pair aggregate") {
-    checkSinglePass("jaccardPairs",
-      graft.queries.TextOps.jaccardPairs(s, sfDir).queryExecution.sparkPlan)
+    checkSinglePass("jaccardPairs", distPairs.queryExecution.sparkPlan)
   }
 
   test("q29 catalog plan keeps the single-pass pair aggregate") {
+    // q29_jaccard_pairs' expression over the distributed tier
     checkSinglePass("q29",
-      SparkEntry.queries("q29_jaccard_pairs")(s, sfDir)
-        .queryExecution.sparkPlan)
+      distPairs.orderBy("da", "db").queryExecution.sparkPlan)
   }
 
   test("q123 catalog plan keeps the single-pass pair aggregate") {
@@ -138,11 +151,32 @@ class PairAggPlanShapeSpec extends AnyFunSuite {
     // consuming plan must carry an RDD scan and NO pair aggregate of its
     // own — the pair-agg shape q161 runs IS the jaccardPairs plan pinned
     // above, materialized at construction.
-    val plan = SparkEntry.queries("q161_degree_assortativity")(s, sfDir)
+    // q161_degree_assortativity's expression over the distributed tier
+    val plan = TextOps.degreeAssortativity(
+        distPairs.select(col("da").as("u"), col("db").as("v")))
       .queryExecution.sparkPlan
     assert(plan.collectFirst { case r: RDDScanExec => r }.isDefined,
       s"q161: expected the checkpointed pair list (RDD scan):\n$plan")
     assert(pairAggs(plan).isEmpty,
       s"q161: the consuming plan must not rebuild the pair aggregate")
+  }
+
+  test("the in-process tier: consumers plan the pair list as a " +
+      "LocalTableScan and no pair aggregate") {
+    // q29, q81 and q161 read the list in their plan; the loop consumers
+    // read it during construction and plan over their own cut state
+    val inPlan = Set("q29_jaccard_pairs", "q81_decontamination",
+      "q161_degree_assortativity")
+    for (q <- inPlan.toSeq.sorted ++ Seq("q65_dedup_clusters",
+        "q102_cluster_safe_split", "q104_pagerank", "q148_triangle_count",
+        "q149_kcore", "q158_personalized_pagerank", "q167_clustering_coeff",
+        "q172_bfs_layers", "q181_dedup_canonical")) {
+      val plan = SparkEntry.queries(q)(s, sfDir).queryExecution.sparkPlan
+      if (inPlan(q))
+        assert(plan.collectFirst { case l: LocalTableScanExec => l }.isDefined,
+          s"$q: expected the in-process pair list (LocalTableScan):\n$plan")
+      assert(pairAggs(plan).isEmpty,
+        s"$q: the in-process tier must plan no pair aggregate:\n$plan")
+    }
   }
 }
