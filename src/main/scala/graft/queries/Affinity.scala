@@ -152,8 +152,8 @@ object Affinity {
     // precedent). Scale shape: the transition relation is cut ONCE
     // (eager checkpoint, 2·ROUNDS consumers); each half-round is one
     // edge-shuffle + a map-side-combined groupBy + a 1-row broadcast
-    // max (J2); carried frames ride Fixpoint.checkpointRound so plan
-    // stats stay bounded at any depth. The final top-K is the
+    // max (J2); carried frames are lazy cuts, so plan stats stay
+    // bounded at any depth. The final top-K is the
     // distributed TakeOrderedAndProject (orderBy+limit, the q90/q118
     // convention) with rnk derived AFTER the limit, so the only rank
     // window runs over ≤ TOPK rows — never the node table (VERDICT
@@ -182,11 +182,10 @@ object Affinity {
       // only h is seeded (the oracle's h0); a exists purely as the
       // loop-carried output of round 1's first half (ROUNDS >= 1)
       var a: DataFrame = null
-      def normalized(raw: DataFrame, out: String, round: Int): DataFrame = {
-        val all = Fixpoint.checkpointRound(
-          nodes.join(raw, Seq("item"), "left")
-            .select(col("item"), coalesce(col("raw"), lit(0L)).as("raw")),
-          round)
+      def normalized(raw: DataFrame, out: String): DataFrame = {
+        val all = nodes.join(raw, Seq("item"), "left")
+          .select(col("item"), coalesce(col("raw"), lit(0L)).as("raw"))
+          .cut(false)
         all.crossJoin(broadcast(all.agg(max("raw").as("mx"))))
           .select(col("item"),
             expr(s"CAST(raw AS DECIMAL(38,0)) * $HITS_SCALE div mx")
@@ -199,21 +198,19 @@ object Affinity {
       // partial). Broadcast ceiling = |catalog| rows of (id, score) —
       // the bm25 dim-join story; a 10⁹-item catalog flips these to
       // plain shuffle joins and everything else survives.
-      for (r <- 1 to HITS_ROUNDS) {
+      for (_ <- 1 to HITS_ROUNDS) {
         a = normalized(
           t.join(broadcast(h.select(col("item").as("src"), col("hq"))),
               "src")
             .groupBy(col("dst").as("item"))
             .agg(sum(col("n").cast("decimal(38,0)") * col("hq"))
-              .as("raw")),
-          "aq", 2 * r - 1)
+              .as("raw")), "aq")
         h = normalized(
           t.join(broadcast(a.select(col("item").as("dst"), col("aq"))),
               "dst")
             .groupBy(col("src").as("item"))
             .agg(sum(col("n").cast("decimal(38,0)") * col("aq"))
-              .as("raw")),
-          "hq", 2 * r)
+              .as("raw")), "hq")
       }
       a.join(h, "item")
         .orderBy(col("aq").desc, col("hq").desc, col("item"))

@@ -32,9 +32,11 @@ import Lineage.LineageOps
   * signature — one single-row aggregate per round instead of an edge-set
   * anti-join (a xor collision across distinct DISTINCT-ed edge sets is
   * ~2⁻⁶⁴ and only ever INTERNAL: the result is oracle-checked; xor, not
-  * sum, because ANSI mode makes a hash sum overflow). Each round
-  * truncates lineage with localCheckpoint — the Pregel shape, same as
-  * the q68 Lloyd loop.
+  * sum, because ANSI mode makes a hash sum overflow). Each round's
+  * state is a lazy [[Lineage.cut]] — the Pregel shape, same as the q68
+  * Lloyd loop: the plan is truncated to the materialized state, and its
+  * clamped size estimate keeps a deep loop's planning flat. The loops here (`starContractionWithRounds`, `kCore`,
+  * `bfsLayers`) each keep their own stop rule and cap message.
   */
 object Components {
 
@@ -95,22 +97,16 @@ object Components {
     * external callers. */
   private[graft] def starContractionWithRounds(edges: DataFrame,
       maxIter: Int = 30): (DataFrame, Int) = {
-    // Lazy checkpoints + AMORTIZED STATS RESET (Fixpoint.checkpointRound,
-    // VERDICT r9 #2): the sig() aggregate is the action that materializes
-    // each round's edge set, so every round costs ONE job (an eager
-    // checkpoint + separate sig would cost two). Plain lazy checkpoints
-    // inherit plan statistics that compound across rounds (the q104
-    // stats-BigInt tax); resetting EVERY round (checkpointFresh) forgets
-    // the round's hash partitioning and re-shuffles per round instead —
-    // so the carried state resets every RESET_EVERY rounds, bounding the
-    // estimate while keeping the exchange-free round shape. The entry
-    // state resets unconditionally (it inherits the caller's whole
-    // pairs-build estimate).
-    val e0 = Fixpoint.checkpointFresh(edges
+    // Lazy cuts: the sig() aggregate is the action that materializes
+    // each round's edge set, so every round costs ONE job (an eager cut
+    // + separate sig would cost two). Each cut clamps its size estimate,
+    // so the estimates the rounds' self-joins multiply cannot compound
+    // (the q104 stats-BigInt tax).
+    val e0 = edges
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct().cut(false)
     // Node set from the CHECKPOINTED normalized edges, not the raw
     // `edges` arg: the caller's edge subtree (q65/q102: the whole q29
     // pairs build, ~40% of those queries' runtime at 10x scale) would
@@ -122,7 +118,7 @@ object Components {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val next = Fixpoint.checkpointRound(smallStar(largeStar(e)), iter + 1)
+      val next = smallStar(largeStar(e)).cut(false)
       val nextSig = sig(next)
       converged = nextSig == prevSig
       prevSig = nextSig
@@ -175,11 +171,11 @@ object Components {
     * because the wedge join reads it twice and the closing join a third
     * time. Output: (doc_id, n_tri) for every node in ≥ 1 triangle. */
   private[graft] def triangleCounts(pairs: DataFrame): DataFrame =
-    triangleCountsOf(Fixpoint.checkpointFresh(pairs
+    triangleCountsOf(pairs
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct()))
+      .distinct().cut(false))
 
   /** Census body over edges the CALLER already normalized (u < v,
     * deduped) and materialized — the house `…Of(base)` form (round 16):
@@ -253,16 +249,15 @@ object Components {
     * count. Round count = peel depth; a path is the worst case
     * (length/2 rounds for k=2) and the `cap` fails loudly rather than
     * returning a half-peeled subgraph (the r4 components lesson).
-    * Carried state routes through [[Fixpoint.checkpointRound]]: plan
-    * stats stay bounded at any depth, rounds stay exchange-free between
-    * the amortized resets. Output: (doc_id, core_deg) for the core's
+    * Carried state is a lazy [[Lineage.cut]], so plan stats stay
+    * bounded at any depth. Output: (doc_id, core_deg) for the core's
     * nodes — degrees WITHIN the core, each ≥ k by construction. */
   private[graft] def kCore(pairs: DataFrame, k: Int, cap: Int): DataFrame = {
-    var edges = Fixpoint.checkpointFresh(pairs
+    var edges = pairs
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct().cut(false)
     var n = edges.count()
     var round = 0
     var converged = n == 0L
@@ -274,10 +269,10 @@ object Components {
         .where(col("d") >= k)
         .select("x")
         .cut(false)
-      val next = Fixpoint.checkpointRound(
-        edges.join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
-          .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
-          .select("u", "v"), round)
+      val next = edges
+        .join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
+        .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
+        .select("u", "v").cut(false)
       val m = next.count()
       converged = m == n
       n = m
@@ -301,19 +296,19 @@ object Components {
     * except the edge probe, and the frontier is monotonically consumed
     * (total work across all rounds = O(m + n), the textbook BFS bound,
     * just bucketed by rounds). Round count = eccentricity of the seed
-    * set ≤ graph diameter; the cap fails loudly. Carried labels ride
-    * [[Fixpoint.checkpointRound]] so plan stats stay bounded at any
-    * depth. Convergence = empty new frontier — on a grow-only label set
+    * set ≤ graph diameter; the cap fails loudly. Carried labels are
+    * lazy [[Lineage.cut]]s, so plan stats stay bounded at any depth.
+    * Convergence = empty new frontier — on a grow-only label set
     * that is a proof, not a heuristic. Output: (doc_id, dist) for
     * REACHABLE nodes only (unreachable-from-seeds is q65's membership
     * question, not a distance). */
   private[graft] def bfsLayers(pairs: DataFrame, seedMod: Long,
       cap: Int): DataFrame = {
-    val edges = Fixpoint.checkpointFresh(pairs
+    val edges = pairs
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct().cut(false)
     val und = undirected(edges).cut(false)
     var labels = und.select(col("u").as("doc_id")).distinct()
       .where(pmod(col("doc_id"), lit(seedMod)) === 0)
@@ -325,15 +320,14 @@ object Components {
     while (!done) {
       round += 1
       require(round <= cap, s"bfsLayers: still expanding after $cap rounds")
-      val fresh = Fixpoint.checkpointRound(
-        frontier.select(col("doc_id").as("u"))
-          .join(und, Seq("u"))
-          .select(col("v").as("doc_id")).distinct()
-          .join(labels, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), lit(round.toLong).as("dist")), round)
+      val fresh = frontier.select(col("doc_id").as("u"))
+        .join(und, Seq("u"))
+        .select(col("v").as("doc_id")).distinct()
+        .join(labels, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), lit(round.toLong).as("dist")).cut(false)
       if (fresh.isEmpty) done = true
       else {
-        labels = Fixpoint.checkpointRound(labels.unionByName(fresh), round)
+        labels = labels.unionByName(fresh).cut(false)
         frontier = fresh
       }
     }

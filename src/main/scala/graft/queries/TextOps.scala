@@ -268,7 +268,7 @@ object TextOps {
     * once for its four class-sized consumers; metric divisions are
     * single casts of exact integers (< 2⁵³). */
   private[graft] def langidMetricsFrom(cm0: DataFrame): DataFrame = {
-    val cm = Fixpoint.checkpointFresh(cm0)
+    val cm = cm0.cut(false)
     val classes = cm.select(col("lang").as("cls"))
       .unionByName(cm.select(col("predicted").as("cls"))).distinct()
     val byTrue = cm.groupBy(col("lang").as("cls"))
@@ -305,7 +305,7 @@ object TextOps {
     * (lang, predicted, n) — see the catalog entry for the identity. */
   private[graft] def kappaFrom(cm0: DataFrame): DataFrame = {
     val D = "decimal(38,0)"
-    val cm = Fixpoint.checkpointFresh(cm0)
+    val cm = cm0.cut(false)
     val tot = cm.agg(sum("n").as("nn"),
       sum(when(col("lang") === col("predicted"), col("n"))
         .otherwise(lit(0L))).as("agree"))
@@ -1417,8 +1417,8 @@ object TextOps {
     // Scale: all state is ∝ VOCABULARY (distinct words × word length),
     // never corpus tokens — the q133 argument, now held through a whole
     // training loop. Each round is 3 bounded shuffles on the wid key +
-    // a 1-row argmax broadcast; rounds are driver-paced with lazy
-    // localCheckpoint (the q104/Components discipline).
+    // a 1-row argmax broadcast; rounds carry lazy cuts (the
+    // q104/Components discipline).
     "q143_bpe_train" -> ((s, dir) =>
       bpeTrain(docs(s, dir))._1.orderBy("round")),
 
@@ -1646,17 +1646,15 @@ object TextOps {
       .select(explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("wf"))
-    // Lazy checkpoints + amortized stats reset (Fixpoint
-    // .checkpointRound on the carried toks, VERDICT r9 #2): each
-    // round's best.head(1) is the single materializing action; the
-    // periodic reset bounds the per-round toks⋈m⋈m join estimates
-    // without paying checkpointFresh's re-shuffle every round.
-    // best/m are intra-round frames — plain lazy checkpoints.
-    var toks = Fixpoint.checkpointFresh(words
+    // Every frame a round carries or shares (toks, best, m) is a lazy
+    // cut: no round runs an action of its own (the merge-table count
+    // after the loop is the one), and the cuts' clamped estimates keep
+    // the toks⋈m⋈m join estimates from compounding across rounds.
+    var toks = words
         .select(col("w").as("wid"), col("wf"),
           posexplode(split(col("w"), "")).as(Seq("pos", "sym")))
         .select(col("wid"), col("pos").cast("long").as("pos"),
-          col("sym"), col("wf")))
+          col("sym"), col("wf")).cut(false)
       val merges = Seq.newBuilder[DataFrame]
       for (r <- 1 to BPE_ROUNDS) {
         val prs = toks.withColumn("nxt", lead(col("sym"), 1).over(wWin))
@@ -1688,7 +1686,7 @@ object TextOps {
           .select(col("wid").as("kwid"), col("pos").as("kpos"))
           .cut(false)
         val bestSym = best.select(concat(col("a"), col("b")).as("msym"))
-        toks = Fixpoint.checkpointRound(toks
+        toks = toks
           .join(m, col("wid") === col("kwid") && col("pos") === col("kpos"),
             "left")
           .join(m.select(col("kwid").as("pwid"), col("kpos").as("ppos")),
@@ -1702,7 +1700,7 @@ object TextOps {
             col("wf"))
           .withColumn("pos", row_number().over(
             Window.partitionBy("wid").orderBy("opos")).cast("long") - 1)
-          .select("wid", "pos", "sym", "wf"), r)
+          .select("wid", "pos", "sym", "wf").cut(false)
         merges += best.select(lit(r.toLong).as("round"),
           col("a").as("left_sym"), col("b").as("right_sym"),
           col("pair_count"))
@@ -1750,7 +1748,7 @@ object TextOps {
     // VALUE-propagating fixpoint instead of a label-collapsing one.
     // Determinism is the q82/q101 pattern — per-edge contributions are
     // computed in integer quanta of 1e-12 (floor division — exact and
-    // order-free at any partition layout AND any engine; see prStep for
+    // order-free at any partition layout AND any engine; see prStepBody for
     // the r9 finding that retired the decimal-rounded form), so every
     // iteration stays bit-identical to the oracle's unrolled CTE chain.
     // pr = q/1e12 surfaces only at the output boundary. Scale: one
@@ -1947,11 +1945,11 @@ object TextOps {
     * same list — a reversed duplicate must not inflate deg while the
     * census ignores it. */
   private[graft] def clusteringCoeff(pairs0: DataFrame): DataFrame = {
-    val pairs = Fixpoint.checkpointFresh(pairs0
+    val pairs = pairs0
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct().cut(false)
     // …Of form (round 16): pairs IS the census's normalized edge
     // relation — the (pairs) wrapper re-shuffled and re-materialized it
     val tri = Components.triangleCountsOf(pairs)
@@ -2076,14 +2074,7 @@ object TextOps {
     * Spark's BigDecimal HALF_UP and DuckDB's multiply-round-divide
     * disagree on values an ulp from a .5 tie, and 50k nodes × ~20 rounds
     * of round() calls made a tie hit near-certain at sf1 while sf0.1
-    * stayed green. Integer floor has no ties to disagree on.
-    *
-    * With `carryPrev` the output also keeps the incoming quanta as
-    * `prev`, letting the convergence loop read max|Δ| off the SAME
-    * materialized frame instead of re-joining the two iterates in a
-    * second job per round (VERDICT r8 #2). The extra join is on the
-    * already-shuffled doc_id key against the previous round's
-    * checkpoint, so it rides the same exchange. */
+    * stayed green. Integer floor has no ties to disagree on. */
   private[graft] def prStepBody(pr: DataFrame, edges: DataFrame,
       degn: DataFrame): DataFrame = {
     val contrib = pr
@@ -2095,26 +2086,6 @@ object TextOps {
       .select(col("doc_id"), col("deg"), col("n"),
         (expr(s"$PR_TELEPORT_Q div n")
           + expr("(17 * sc) div 20")).as("q"))
-  }
-
-  private def prStep(pr: DataFrame, edges: DataFrame,
-      degn: DataFrame, round: Int, carryPrev: Boolean = false): DataFrame = {
-    val stepped = prStepBody(pr, edges, degn)
-    val out =
-      if (!carryPrev) stepped
-      else stepped.join(
-          pr.select(col("doc_id").as("pdoc"), col("q").as("prev")),
-          col("doc_id") === col("pdoc"))
-        .drop("pdoc")
-    // Lazy checkpoint + AMORTIZED STATS RESET (see Fixpoint for the r9
-    // forensic and the r10 A/B): without any reset, inherited join-size
-    // estimates compound per round and the carried second `pr`
-    // reference makes the driver's stats BigInts double in digit count
-    // every round — exponential planning time from ~round 17. Resetting
-    // every round re-shuffles the already-partitioned state; every
-    // RESET_EVERY rounds bounds the digits at ≤ 2^8·d₀ (planner
-    // microseconds) and keeps the exchange-free round shape between.
-    Fixpoint.checkpointRound(out, round)
   }
 
   /** The symmetrized graph: edge list + per-node degree/count table
@@ -2153,7 +2124,7 @@ object TextOps {
   private[graft] def pageRank(pairs: DataFrame, iters: Int): DataFrame = {
     val (edges, degn) = prGraph(pairs.cut())
     var pr = prInit(degn)
-    for (i <- 1 to iters) pr = prStep(pr, edges, degn, i)
+    for (_ <- 1 to iters) pr = prStepBody(pr, edges, degn).cut(false)
     pr
   }
 
@@ -2161,7 +2132,7 @@ object TextOps {
     * max quanta movement drops under the integer tolerance
     * PR_TOL_NUM_Q div n (~0.1% of the uniform score), fail loud at
     * PR_CAP — the Components `sig()` fixpoint discipline (1-row driver
-    * check per round, lazy localCheckpoint keeps each round one job)
+    * check per round, a lazy cut keeps each round one job)
     * instead of a blind unrolled count. The stop rule is a deterministic
     * function of the (engine-identical) integer iterates, so the DuckDB
     * oracle reaches the SAME iteration by computing every round's delta
@@ -2183,7 +2154,7 @@ object TextOps {
     * by a job, so q104 builds with the pair-list gate as its only job. */
   private[graft] def pageRankConverged(pairs: DataFrame,
       cap: Int = PR_CAP,
-      unroll: Option[Int] = None,
+      unroll: Int = ConvergeUnroll,
       localMax: Int = LocalRank.LocalMaxPairs): DataFrame = {
     val p = pairs.cut()
     LocalRank.collectBounded(p, localMax) match {
@@ -2195,49 +2166,24 @@ object TextOps {
         val n = degn.select(col("n")).head().getLong(0) // p is non-empty
         val tolQ = math.max(1L, PR_TOL_NUM_Q / n)
         converge2(prInit(degn), prStepBody(_, edges, degn), tolQ, cap, "pr",
-          unroll.getOrElse(convergeUnroll(pairs.sparkSession)), n)
+          unroll, n)
     }
   }
 
-  /** Rounds materialized per convergence job (round 13; was 2 since
-    * round-10 session 2). The loops' cost is sequential-JOB latency,
-    * not data — deeper unroll amortizes scheduling + AQE planning over
-    * more rounds. 4 measured best at sf0.1 (see converge2 scaladoc for
-    * the A/B); past that the per-job plan depth starts paying back.
-    *
-    * Configured via the Spark conf below (round 14, VERDICT r13 #4 —
-    * the GRAFT_UNROLL env var was inconsistent with the layout knob
-    * `spark.graft.bm25.sortedLayout` and invisible to a session
-    * inspecting its own config; A/Bs set it per-JVM with
-    * `-Dspark.graft.converge.unroll=N`, which SparkConf folds into the
-    * session conf). An unusable value fails LOUDLY here (ADVICE r13):
-    * the old parse let 0/negatives through to converge2's runtime
-    * require while silently defaulting non-numeric strings — a typo'd
-    * A/B must not quietly measure the default. */
-  private[graft] val CONVERGE_UNROLL_KEY = "spark.graft.converge.unroll"
-  private[graft] def convergeUnroll(s: SparkSession): Int = {
-    // transition guard: the knob was the GRAFT_UNROLL env var through
-    // round 13 — a harness still exporting it would otherwise silently
-    // measure the default, the exact failure mode the fail-loud conf
-    // parse exists to prevent.
-    if (sys.env.contains("GRAFT_UNROLL")) throw new IllegalArgumentException(
-      "GRAFT_UNROLL was replaced in round 14 — set the Spark conf " +
-        s"$CONVERGE_UNROLL_KEY (e.g. -D$CONVERGE_UNROLL_KEY=N) instead")
-    s.conf.getOption(CONVERGE_UNROLL_KEY) match {
-      case None => 4
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"$CONVERGE_UNROLL_KEY must be an integer >= 1, got '$v'"))
-    }
-  }
+  /** Rounds materialized per convergence job (was 2 before round 13).
+    * The loops' cost is sequential-JOB latency, not data — deeper
+    * unroll amortizes scheduling + AQE planning over more rounds. 4
+    * measured best at sf0.1 (see converge2 scaladoc for the A/B); past
+    * that the per-job plan depth starts paying back. */
+  private[graft] val ConvergeUnroll = 4
 
-  /** The convergence driver, CONVERGE_UNROLL iterations per job
+  /** The convergence driver, `unroll` iterations per job
     * (round-10 session 2 introduced the 2-step unroll after the closing
     * profile put q104+q158 at ~40 s of a 216 s total — nearly all of it
     * sequential-round latency, not data; round 13 generalized it): one
     * job materializes rounds k+1 … k+s (each intermediate state is a
-    * lazy localCheckpoint inside the same DAG — its RDD computes once
-    * and both consumers of each step read the persisted partitions),
+    * lazy cut inside the same DAG — its RDD computes once and both
+    * consumers of each step read the persisted partitions),
     * and ONE action reads ALL s deltas off the carried q0…q_{s-1}
     * columns. Stop semantics are IDENTICAL to the one-round loop — and
     * therefore to the oracle's first-round-under-tolerance selection:
@@ -2248,7 +2194,10 @@ object TextOps {
     * fail-loud cap triggers exactly where the single-step loop would
     * have thrown (the q104 discipline). Iterates are bit-identical
     * (same integer-quanta step body, merely composed), so the unroll
-    * is invisible to every oracle.
+    * is invisible to every oracle. Lazy cuts persist rather than mark
+    * for checkpoint ([[Lineage]]), so none of the job's broadcast
+    * threads checkpoints loop state; their clamped estimates keep each
+    * job's plan the same size at any round depth.
     *
     * This is the DISTRIBUTED tier of q104/q158: their builders run it
     * only when the gate found more than `localMax` pairs; smaller graphs
@@ -2267,8 +2216,8 @@ object TextOps {
       if (k + 1 > cap) throw capExceeded(tag, cap, delta, tolQ)
       val steps = math.min(unroll, cap - k) // ≥ 1 by the guard
       // inter(0) = carried state (round k); inter(i), i ≥ 1 = round k+i,
-      // lazily checkpointed; the round k+steps output stays in-plan (the
-      // carried-frame checkpoint below owns its materialization).
+      // lazily cut; the round k+steps output stays in-plan (the carried
+      // frame's cut below owns its materialization).
       val inter = new Array[DataFrame](steps)
       inter(0) = pr
       for (i <- 1 until steps)
@@ -2279,11 +2228,9 @@ object TextOps {
           .join(inter(i).select(col("doc_id").as(s"p$i"),
             col("q").as(s"q$i")), col("doc_id") === col(s"p$i"))
           .drop(s"p$i")
-      // stride-aware reset (ADVICE r13): rounds advance by `steps` per
-      // job, so the reset must fire on CROSSING a RESET_EVERY multiple,
-      // not on landing on one — unroll values that don't divide
-      // RESET_EVERY would otherwise amortize over lcm(unroll, 8) rounds.
-      val out = Fixpoint.checkpointRound(joined, k + steps, k)
+      // the job's one action (below) materializes every cut of the job;
+      // their clamped estimates keep the next job's plan flat
+      val out = joined.cut(false)
       // d_i = max |q_i − q_{i−1}| for i = 1…steps (q_steps is "q").
       val aggs = (1 to steps).map { i =>
         val hi = if (i == steps) col("q") else col(s"q$i")
@@ -2345,7 +2292,7 @@ object TextOps {
 
   /** One PPR iteration in the q104 integer quanta: teleport mass lands
     * ONLY on seeds ((0.15·10¹²) div |S| each); the contribution term is
-    * identical to prStep except the join back to the node table is LEFT
+    * identical to prStepBody except the join back to the node table is LEFT
     * (pre-convergence, nodes beyond wave k have q = 0 and a node whose
     * whole neighborhood is still at 0 receives no contribution rows —
     * q104's uniform init never has this frontier). */
@@ -2363,12 +2310,11 @@ object TextOps {
   }
 
   /** Convergence-based PPR — q104's loop discipline verbatim (carried
-    * prev, one action per round, amortized checkpoint stats reset,
-    * fail-loud cap), over the seeded teleport vector, behind the same
+    * prev, one action per job, lazy cuts, fail-loud cap), over the seeded teleport vector, behind the same
     * two-tier gate as [[pageRankConverged]]. */
   private[graft] def pprConverged(pairs: DataFrame,
       cap: Int = PPR_CAP,
-      unroll: Option[Int] = None,
+      unroll: Int = ConvergeUnroll,
       localMax: Int = LocalRank.LocalMaxPairs): DataFrame = {
     val p = pairs.cut()
     LocalRank.collectBounded(p, localMax) match {
@@ -2381,8 +2327,7 @@ object TextOps {
     }
   }
 
-  private def pprDistributed(p: DataFrame, cap: Int,
-      unroll: Option[Int]): DataFrame = {
+  private def pprDistributed(p: DataFrame, cap: Int, unroll: Int): DataFrame = {
     val (edges, degns) = pprGraph(p)
     val head = degns.select(col("n"), col("ns")).head() // p is non-empty
     val pr = degns.select(col("doc_id"), col("deg"), col("n"),
@@ -2400,7 +2345,7 @@ object TextOps {
     // count scale-stable (mixing-bound, like q104's).
     val tolQ = math.max(1L, PR_TOL_NUM_Q / head.getLong(1))
     converge2(pr, pprStepBody(_, edges, degns), tolQ, cap, "ppr",
-      unroll.getOrElse(convergeUnroll(p.sparkSession)), head.getLong(0))
+      unroll, head.getLong(0))
   }
 
   /** q29/q65 shared CTE chain: df-capped exact-Jaccard pairs, ending in

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,7 +40,7 @@ class AffinityFuzzSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import s.implicits._
-    val d = Files.createTempDirectory("graft_affinity_fuzz").toString
+    val d = TestSpark.tempDir("graft_affinity_fuzz").toString
     rows.map { case (id, ts, u, tpe, it) =>
       (id, new Timestamp(ts / 1000L), u, tpe, 1.0, s"""{"k": $it}""")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class AffinitySpec extends AnyFunSuite {
     * returns the sf-dir path the catalog queries expect. */
   private lazy val dir: String = {
     import s.implicits._
-    val d = Files.createTempDirectory("graft_affinity").toString
+    val d = TestSpark.tempDir("graft_affinity").toString
     var id = 0L
     def ev(user: Long, tpe: String, item: Long, atMin: Long) = {
       id += 1

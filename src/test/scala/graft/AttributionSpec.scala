@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ class AttributionSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import s.implicits._
-    val d = Files.createTempDirectory("graft_attr").toString
+    val d = TestSpark.tempDir("graft_attr").toString
     var id = 0L
     def ev(user: Long, tpe: String, item: Long, atMin: Long, v: Double) = {
       id += 1

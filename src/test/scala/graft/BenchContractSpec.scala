@@ -16,7 +16,7 @@ class BenchContractSpec extends AnyFunSuite {
   test("final stdout line is the parseable driver summary JSON") {
     val buf = new java.io.ByteArrayOutputStream()
     val out = new java.io.PrintStream(buf, true, "UTF-8")
-    val repo = java.nio.file.Files.createTempDirectory("graft_bench_spec_")
+    val repo = TestSpark.tempDir("graft_bench_spec_")
       .toAbsolutePath.toString
     val errBuf = new java.io.ByteArrayOutputStream()
     Bench.runBench(s, "/root/testdata/sf0.001",
@@ -66,7 +66,7 @@ class BenchContractSpec extends AnyFunSuite {
   test("a failed query's record names its exception class and message") {
     val buf = new java.io.ByteArrayOutputStream()
     val out = new java.io.PrintStream(buf, true, "UTF-8")
-    val repo = java.nio.file.Files.createTempDirectory("graft_bench_spec_")
+    val repo = TestSpark.tempDir("graft_bench_spec_")
     // q01 reads the sf dir's tables, so a missing dir fails every sample
     val q = "q01_pricing_summary"
     import org.json4s._

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,7 @@ class BucketingSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    val dir = Files.createTempDirectory("graft_buckets").toString
+    val dir = TestSpark.tempDir("graft_buckets").toString
     val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       // force the sort-merge path (sf0.001 sides would otherwise broadcast)
@@ -51,7 +50,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("documents written partitioned(lang)+bucketed(doc_id) prune and join shuffle-free") {
-    val dir = Files.createTempDirectory("graft_docs_rt").toString
+    val dir = TestSpark.tempDir("graft_docs_rt").toString
     val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -57,8 +57,7 @@ class CodecSpec extends AnyFunSuite {
       (1L, "a <b> & \"c\" 'd' ]]> e", "xx"),
       (2L, "  padded  both  ends \n", "xx"))
       .toDF("doc_id", "text", "lang")
-    val hp = java.nio.file.Files
-      .createTempDirectory("graft_xml_hostile").toString
+    val hp = TestSpark.tempDir("graft_xml_hostile").toString
     hostile.write.mode("overwrite")
       .option("rootTag", "docs").option("rowTag", "doc").xml(hp)
     val back = s.read.schema(hostile.schema).option("rowTag", "doc")
@@ -85,8 +84,7 @@ class CodecSpec extends AnyFunSuite {
     import s2.implicits._
     val ctl = Seq((1L, "pre" + 1.toChar + "post", "xx"))
       .toDF("doc_id", "text", "lang")
-    val cp = java.nio.file.Files
-      .createTempDirectory("graft_xml_ctl").toString
+    val cp = TestSpark.tempDir("graft_xml_ctl").toString
     val e = intercept[org.apache.spark.SparkException] {
       ctl.write.mode("overwrite")
         .option("rootTag", "docs").option("rowTag", "doc").xml(cp)

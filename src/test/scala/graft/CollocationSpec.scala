@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +20,7 @@ class CollocationSpec extends AnyFunSuite {
     // doc3 "q": single token → a unigram but NO pair (the guard case:
     // the size≥2 filter must drop it before the slice/zip pair
     // extraction touches it)
-    val d = Files.createTempDirectory("graft_colloc").toString
+    val d = TestSpark.tempDir("graft_colloc").toString
     Seq((1L, "x y x y"), (2L, "x y z"), (3L, "q"))
       .toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$d/documents.parquet")

@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * non-trivial.
   *
   * Every run passes the in-process bound 0: this graph is far below
-  * `LocalRank.LocalMaxPairs`, and the unroll, conf and cap contracts
+  * `LocalRank.LocalMaxPairs`, and the unroll and cap contracts
   * belong to the distributed tier (`converge2`). LocalRankSpec pins the
   * in-process tier against it. */
 class ConvergeUnrollSpec extends AnyFunSuite {
@@ -31,7 +31,7 @@ class ConvergeUnrollSpec extends AnyFunSuite {
 
   private def prAt(unroll: Int, cap: Int = 200): Map[Long, Long] = {
     import s.implicits._
-    queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), cap, Some(unroll),
+    queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), cap, unroll,
       localMax = 0)
       .select("doc_id", "q").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -39,47 +39,16 @@ class ConvergeUnrollSpec extends AnyFunSuite {
 
   private def pprAt(unroll: Int, cap: Int = 200): Map[Long, Long] = {
     import s.implicits._
-    queries.TextOps.pprConverged(pairs.toDF("u", "v"), cap, Some(unroll),
+    queries.TextOps.pprConverged(pairs.toDF("u", "v"), cap, unroll,
       localMax = 0)
       .select("doc_id", "q").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  /** The conf-configured path (round 14: GRAFT_UNROLL env →
-    * spark.graft.converge.unroll, VERDICT r13 #4): run with the knob
-    * UNSET (callers pass no unroll, the default-4 path). */
-  private def prViaConf(conf: Option[String]): Map[Long, Long] = {
-    import s.implicits._
-    val key = queries.TextOps.CONVERGE_UNROLL_KEY
-    val saved = s.conf.getOption(key)
-    try {
-      conf match { case Some(v) => s.conf.set(key, v)
-                   case None => s.conf.unset(key) }
-      queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), localMax = 0)
-        .select("doc_id", "q").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally {
-      saved match { case Some(v) => s.conf.set(key, v)
-                    case None => s.conf.unset(key) }
-    }
   }
 
   test("pageRankConverged output is invariant in the unroll factor") {
     val ref = prAt(1)
     for (u <- 2 to 5)
       assert(prAt(u) === ref, s"unroll=$u diverged from the 1-step loop")
-  }
-
-  test("the spark.graft.converge.unroll conf drives the default path " +
-      "and unusable values fail loudly at read") {
-    val ref = prAt(1)
-    assert(prViaConf(None) === ref, "unset conf (default 4) diverged")
-    assert(prViaConf(Some("3")) === ref, "conf unroll=3 diverged")
-    // fail-loud validation (ADVICE r13): zero, negative, and
-    // non-numeric values all throw at conf READ, before any round runs
-    // — none may silently fall back to the default.
-    for (bad <- Seq("0", "-2", "six"))
-      intercept[IllegalArgumentException](prViaConf(Some(bad)))
   }
 
   test("pprConverged output is invariant in the unroll factor") {

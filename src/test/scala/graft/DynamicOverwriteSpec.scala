@@ -22,8 +22,7 @@ class DynamicOverwriteSpec extends AnyFunSuite {
 
   test("q91 overwrites only the en partition and leaves siblings byte-intact") {
     val docs = graft.model.Tables(s, sfDir).documents
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_dynpart_spec").toString
+    val root = TestSpark.tempDir("graft_dynpart_spec").toString
     docs.write.mode("overwrite").partitionBy("lang").parquet(root)
     val langs = docs.select("lang").distinct()
       .collect().map(_.getString(0)).sorted

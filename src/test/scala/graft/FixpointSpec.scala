@@ -1,21 +1,26 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Fixpoint
 
-/** Pins the Fixpoint.checkpointFresh contract that q104 (pagerank), q65
-  * (star contraction), and q143 (BPE training) rely on: a loop that
-  * checkpoints each round's state must NOT let plan-statistics estimates
-  * compound across rounds. `localCheckpoint` truncates execution lineage
-  * but inherits the origin plan's stats; a self-join step therefore
-  * SQUARES the inherited sizeInBytes each round (digit count doubles —
-  * the r9 forensic: seconds-long BigInt multiplications in the driver by
-  * round ~17). checkpointFresh's createDataFrame rebuild resets to fresh
-  * default stats, so the estimate is a round-independent constant.
+import graft.queries.Lineage
+
+/** Pins the plan-statistics contract the driver-paced loops (q104
+  * pagerank, q65 star contraction, q143 BPE training, k-core, BFS,
+  * HITS) rely on: a loop that cuts each round's state with
+  * `Lineage.cut` must NOT let plan-statistics estimates compound across
+  * rounds. `localCheckpoint` truncates execution lineage but inherits
+  * the origin plan's stats, and Catalyst estimates a join as the
+  * product of its sides, so a loop joining its state against a static
+  * side multiplies the inherited sizeInBytes every round (the r9
+  * forensic: seconds-long BigInt multiplications in the driver by round
+  * ~17). The cut clamps its estimate at `spark.sql.defaultSizeInBytes`,
+  * so a cut's estimate stays at most 19 digits at any round depth, and
+  * it keeps its input's partitioning.
   *
-  * The assertion is on the stats BigInt itself (deterministic), not on
+  * The assertions are on the stats BigInt itself (deterministic), not on
   * wall-clock — the digit count IS the planning-time driver. */
 class FixpointSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -29,17 +34,17 @@ class FixpointSpec extends AnyFunSuite {
       .select(col("lu").as("u"), col("v"))
   }
 
+  private def chain(n: Int): DataFrame =
+    s.range(n).select(col("id").as("u"), (col("id") + 1).as("v"))
+
   private def digits(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length
 
-  test("checkpointFresh keeps per-round plan-size estimates flat where " +
-      "plain localCheckpoint compounds them (VERDICT r9 #2)") {
-    val e0 = s.range(32).select(col("id").as("u"), (col("id") + 1).as("v"))
-    val rounds = 12 // ~2x the shipped loops' sf0.1 round counts (5-8)
-
-    // Foil: the inherited-stats path. Digit count must GROW — if Spark
-    // ever starts resetting stats in localCheckpoint, checkpointFresh's
-    // rebuild (and this spec) can be retired.
+  test("plain localCheckpoint compounds a loop's plan-size estimate") {
+    // The foil: if Spark ever starts resetting stats in localCheckpoint,
+    // the cut's clamp (and this spec) can be retired.
+    val e0 = chain(32)
+    val rounds = 12
     var plain = step(e0, e0).localCheckpoint(false)
     val d0 = digits(plain)
     var dPrev = d0
@@ -52,81 +57,58 @@ class FixpointSpec extends AnyFunSuite {
     }
     assert(grew && dPrev > 2 * d0,
       s"foil did not compound: round-1 $d0 digits, round-$rounds $dPrev")
-
-    // The shipped path: flat at the fresh-stats constant, every round.
-    var fresh = Fixpoint.checkpointFresh(step(e0, e0))
-    val f0 = digits(fresh)
-    for (r <- 2 to rounds) {
-      fresh = Fixpoint.checkpointFresh(step(fresh, e0))
-      assert(digits(fresh) == f0,
-        s"round $r estimate ${digits(fresh)} digits != round-1 $f0")
-    }
-
-    // and the loop still computes the right thing on the data path:
-    // u -> u+rounds edges survive all rounds for the surviving range
-    val got = fresh.orderBy("u").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == 32 - rounds)
-    assert(got.forall { case (u, v) => v == u + rounds + 1 })
   }
 
-  test("checkpointRound bounds estimates to the reset window at any " +
-      "depth (the shipped amortized form)") {
-    // The shipped loops use checkpointRound: plain lazy checkpoints
-    // (partitioning-preserving, no per-round exchange) with a full
-    // reset every RESET_EVERY rounds. The estimate must be PERIODIC —
-    // every round's digit count equals the same-phase round one window
-    // earlier — i.e. bounded forever, never compounding.
-    val e0 = s.range(64).select(col("id").as("u"), (col("id") + 1).as("v"))
-    val rounds = 26 // > 3 reset windows
-    var st = Fixpoint.checkpointRound(step(e0, e0), 1)
-    val ds = scala.collection.mutable.ArrayBuffer(digits(st))
-    for (r <- 2 to rounds) {
-      st = Fixpoint.checkpointRound(step(st, e0), r)
-      ds += digits(st)
+  test("Lineage.cut keeps a loop's estimate at most 19 digits") {
+    // 60 rounds, cut after every step and after every third step
+    val e0 = chain(128)
+    val rounds = 60
+    for (stride <- Seq(1, 3)) {
+      def job(st: DataFrame) =
+        (1 to stride).foldLeft(st)((d, _) => step(d, e0))
+      var st = Lineage.cut(job(e0), eager = false)
+      val ds = scala.collection.mutable.ArrayBuffer(digits(st))
+      for (_ <- 2 to rounds / stride) {
+        st = Lineage.cut(job(st), eager = false)
+        ds += digits(st)
+      }
+      assert(ds.forall(_ <= 19), s"stride $stride: estimates escaped: $ds")
+      // the clamp is doing the work: one more uncut job compounds past it
+      assert(digits(job(st)) > 19, s"stride $stride: clamp never bound: $ds")
+      // data path: 60 hops over the 128-chain
+      val got = st.orderBy("u").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.length == 128 - rounds, s"stride $stride")
+      assert(got.forall { case (u, v) => v == u + rounds + 1 },
+        s"stride $stride")
     }
-    val w = Fixpoint.RESET_EVERY
-    // compare full post-first-reset windows (phases align from round
-    // w+1 on; the pre-reset phase may differ at its entry point)
-    for (r <- 2 * w + 1 to rounds)
-      assert(ds(r - 1) == ds(r - 1 - w),
-        s"round $r estimate ${ds(r - 1)} digits != round ${r - w} " +
-          s"${ds(r - 1 - w)} — not window-periodic: $ds")
-    // growth within a window exists (it is the plain-checkpoint phase)
-    assert(ds.max > ds.min, s"expected within-window growth: $ds")
-    // data path: 26 hops over the 64-chain
-    val got = st.orderBy("u").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == 64 - rounds)
-    assert(got.forall { case (u, v) => v == u + rounds + 1 })
   }
 
-  test("the stride-aware form resets on CROSSING a window boundary for " +
-      "strides that don't divide RESET_EVERY (ADVICE r13)") {
-    // converge2 advances `unroll` rounds per job; with stride 3 the old
-    // round % RESET_EVERY == 0 test fired only every lcm(3, 8) = 24
-    // rounds. The stride form must keep the estimate bounded to the
-    // window at ANY depth: assert the digit count never exceeds the
-    // max seen in the first two windows (a compounding path would blow
-    // past it — the foil above doubles digits per round).
-    val e0 = s.range(128).select(col("id").as("u"), (col("id") + 1).as("v"))
-    val stride = 3
-    val jobs = 20 // 60 rounds ≈ 7.5 windows; lcm-aligned resets get 2
-    var st = Fixpoint.checkpointRound(step(step(step(e0, e0), e0), e0),
-      stride, 0)
-    val ds = scala.collection.mutable.ArrayBuffer(digits(st))
-    for (j <- 2 to jobs) {
-      st = Fixpoint.checkpointRound(
-        step(step(step(st, e0), e0), e0), j * stride, (j - 1) * stride)
-      ds += digits(st)
-    }
-    val w = Fixpoint.RESET_EVERY
-    val perWindow = (w + stride - 1) / stride // jobs per window, ceil
-    val bound = ds.take(2 * perWindow).max
-    assert(ds.forall(_ <= bound),
-      s"stride-$stride estimates escaped the two-window bound $bound: $ds")
-    // data path: 60 hops over the 128-chain
-    val rounds = jobs * stride
-    val got = st.orderBy("u").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == 128 - rounds)
-    assert(got.forall { case (u, v) => v == u + rounds + 1 })
+  private def exchanges(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
+      .size
+
+  test("a cut keeps its input's hash partitioning for a groupBy") {
+    // eager and lazy: a groupBy on the partitioning key adds no Exchange.
+    // Non-adaptive plans: an adaptive plan reports no partitioning, so
+    // under AQE neither a cut nor Spark's own checkpoint keeps any.
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = s.conf.getOption(aqe)
+    s.conf.set(aqe, "false")
+    try {
+      val df = s.range(1000)
+        .select((col("id") % 37).as("k"), col("id").as("x"))
+        .repartition(8, col("k"))
+      def agg(d: DataFrame) = d.groupBy("k").agg(sum("x").as("sx"))
+      val expected = agg(df).orderBy("k").collect().toSeq
+      for (eager <- Seq(true, false)) {
+        val c = Lineage.cut(df, eager)
+        assert(exchanges(agg(c)) === 0, s"eager=$eager")
+        assert(agg(c).orderBy("k").collect().toSeq === expected)
+      }
+      // foil: a Row round trip of the same rows forgets the partitioning
+      val c = Lineage.cut(df)
+      assert(exchanges(agg(s.createDataFrame(c.rdd, c.schema))) === 1)
+    } finally prev.fold(s.conf.unset(aqe))(s.conf.set(aqe, _))
   }
 }

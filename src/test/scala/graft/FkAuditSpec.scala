@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,7 @@ class FkAuditSpec extends AnyFunSuite {
 
   private lazy val dir: String = {
     import s.implicits._
-    val d = Files.createTempDirectory("graft_fk_audit").toString
+    val d = TestSpark.tempDir("graft_fk_audit").toString
     // each column takes its table's declared type, as in the shipped files
     def w(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val t = graft.model.Tables.schema(name)

@@ -20,7 +20,7 @@ class LineageSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def withReliable[A](body: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec_")
+    val dir = TestSpark.tempDir("graft_ckpt_spec_")
       .toAbsolutePath.toString
     s.conf.set(Lineage.RELIABLE_KEY, "true")
     s.conf.set(Lineage.DIR_KEY, dir)
@@ -87,7 +87,7 @@ class LineageSpec extends AnyFunSuite {
     assert(Sinks.runPaths.owns(dir))
     // cleanup of that registration removes a dir laid out as Spark's
     // checkpoint writer leaves it (<dir>/<uuid>/rdd-<id>/part-*)
-    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_root_")
+    val root = TestSpark.tempDir("graft_ckpt_root_")
       .toFile
     try {
       val run = new RunPaths(root.getPath, Sinks.runToken)

@@ -52,7 +52,7 @@ object LocalJaccardBound {
 
   /** A synthetic documents table under a fresh temp dir. */
   private def synthetic(docs: Long, tokens: Int, vocab: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jaccard_bound_")
+    val dir = TestSpark.tempDir("graft_jaccard_bound_")
       .toString
     val word = (i: org.apache.spark.sql.Column) => concat(lit("w"),
       pmod(xxhash64(col("id"), i), lit(vocab.toLong)).cast("string"))

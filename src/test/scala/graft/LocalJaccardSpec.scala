@@ -40,7 +40,7 @@ class LocalJaccardSpec extends AnyFunSuite {
     * allowed, written with the declared schema; deleted after `body`. */
   private def withCorpus[A](tag: String, docs: Seq[(java.lang.Long, String)])(
       body: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_jaccard_$tag")
+    val dir = TestSpark.tempDir(s"graft_jaccard_$tag")
     try {
       val rows = docs.map { case (id, text) =>
         Row(id, text, "en", "web",

@@ -1,5 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
@@ -27,9 +35,9 @@ class LocalRankSpec extends AnyFunSuite {
 
   private type Tier = (DataFrame, Int, Int) => DataFrame
   private val pr: Tier = (p, cap, bound) =>
-    TextOps.pageRankConverged(p, cap, Some(1), bound)
+    TextOps.pageRankConverged(p, cap, 1, bound)
   private val ppr: Tier = (p, cap, bound) =>
-    TextOps.pprConverged(p, cap, Some(1), bound)
+    TextOps.pprConverged(p, cap, 1, bound)
   private val local = LocalRank.LocalMaxPairs
 
   private def sorted(d: DataFrame): Seq[Row] =
@@ -125,6 +133,49 @@ class LocalRankSpec extends AnyFunSuite {
         assert(sorted(d) === rows)
       }
     } finally conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The messages of the "non-existent accumulator" errors the DAG
+    * scheduler logs while `body` runs: task updates to accumulators the
+    * driver has already dropped, such as the SQL metrics of a plan that
+    * was collected while its tasks still ran. */
+  private def orphanedAccumulators(body: => Unit): Seq[String] = {
+    // the root logger of the context Spark logs through (log4j picks
+    // one per class loader)
+    val ctx = LogManager
+      .getContext(classOf[org.apache.spark.SparkContext].getClassLoader, false)
+      .asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val seen = new ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("orphaned-accumulators", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        Option(e.getThrown).map(_.getMessage)
+          .filter(_.contains("non-existent accumulator")).foreach(seen.add)
+    }
+    capture.start()
+    root.addAppender(capture, null, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("the distributed tier's loop orphans no accumulator") {
+    // at the default unroll, as the catalog runs it: lazily checkpointed
+    // round state once had its plans' metrics dropped while other jobs'
+    // tasks still updated them
+    val found = orphanedAccumulators {
+      for (_ <- 1 to 3; p <- Seq(df(pairs), graph300(3))) {
+        TextOps.pageRankConverged(p, localMax = 0).collect()
+        TextOps.pprConverged(p, localMax = 0).collect()
+      }
+    }
+    assert(found.isEmpty, s"${found.size} orphaned: ${found.take(3)}")
   }
 
   test("the gate: up to the bound runs in-process, one pair over does not") {

@@ -69,8 +69,7 @@ class PosterCfgPropertySpec extends AnyFunSuite {
     * tiny 64² bbox grid. */
   private def mkCfg(n: Int, sigma: Double, light: (Double, Double)): (PosterCfg, Seq[Blob]) = {
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_cfg_prop_${n}_").toString
+    val dir = TestSpark.tempDir(s"graft_cfg_prop_${n}_").toString
     val blobs = (0 until n).map(mkBlob(n, _))
     val (lx, ly) = light
     val params = blobs.map { bl =>

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +14,7 @@ import graft.queries.RunPaths
 class RunPathsSpec extends AnyFunSuite {
 
   test("cleanup removes exactly the run's registered paths") {
-    val root = Files.createTempDirectory("runpaths").toFile
+    val root = TestSpark.tempDir("runpaths").toFile
     try {
       def touch(name: String): File = {
         val f = new File(root, name)

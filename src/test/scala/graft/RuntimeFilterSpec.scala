@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,7 +34,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("dynamic partition pruning: filtered dim join scans only matching partitions") {
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = TestSpark.tempDir("graft_dpp").toString
     val events = s.read.parquet(s"$sf/events.parquet")
     // fact partitioned on the join key (the 100 TB layout: events
     // partitioned by day/type so dim-driven queries prune the scan)

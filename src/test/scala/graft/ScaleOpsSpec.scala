@@ -95,8 +95,7 @@ class ScaleOpsSpec extends AnyFunSuite {
         val n = 1 + rnd.nextInt(40)
         (id, Seq.fill(n)("w").mkString(" "), "en", src)
       }
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_mix_fuzz_$seed").toString
+      val dir = TestSpark.tempDir(s"graft_mix_fuzz_$seed").toString
       rows.toDF("doc_id", "text", "lang", "source")
         .selectExpr("doc_id", "text", "lang", "source",
           "CAST(length(text) AS BIGINT) AS n_chars")
@@ -215,8 +214,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // keys 0..9 with 2 events and 3 orders each ⇒ 10·2·3 = 60; keys
     // 100.. on the orders side are unmatched and must add nothing to
     // the exact side while still entering the sketch.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_jsz").toString
+    val dir = TestSpark.tempDir("graft_jsz").toString
     (0L until 20L).map(i => (i, i * 1000000000L, i % 10, "e", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(2)
@@ -244,8 +242,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the sketch join is EMPTY — est_size must come back 0 (every depth
     // row present with est_r = 0 before the min) and never_undercounts
     // true, not a NULL pair from min-over-nothing (r6 review finding).
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_jsz_disjoint").toString
+    val dir = TestSpark.tempDir("graft_jsz_disjoint").toString
     Seq((1L, 1000000000L, 1L, "e", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(dir + "/events.parquet")

@@ -40,7 +40,7 @@ class ScaledCheckerSpec extends AnyFunSuite {
   // one shared dump for all four checkers (the expensive part — the
   // seven queries at sf0.01 — runs once per suite)
   private lazy val outDir: String = {
-    val d = Files.createTempDirectory("graft_scaled_checkers").toString
+    val d = TestSpark.tempDir("graft_scaled_checkers").toString
     covered.foreach { n =>
       SparkEntry.queries(n)(s, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$d/$n")

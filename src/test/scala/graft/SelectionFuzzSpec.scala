@@ -24,8 +24,7 @@ class SelectionFuzzSpec extends AnyFunSuite {
   private def writeVecs(seed: Int,
       rows: Seq[(Long, Array[Float], Int)]): String = {
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_selfuzz_v$seed").toString
+    val dir = TestSpark.tempDir(s"graft_selfuzz_v$seed").toString
     rows.map { case (id, e, l) => (id, e.toSeq, l) }
       .toDF("vec_id", "embedding", "label")
       .coalesce(2)
@@ -136,8 +135,7 @@ class SelectionFuzzSpec extends AnyFunSuite {
     // range AND null user_ids, both of which the join must drop
     // without touching the matched rows' counts or sums.
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_selfuzz_j").toString
+    val dir = TestSpark.tempDir("graft_selfuzz_j").toString
     val rnd = new scala.util.Random(51)
     val events = (0L until 200L).map { id =>
       val uid: java.lang.Long =

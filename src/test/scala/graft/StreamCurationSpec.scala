@@ -15,7 +15,7 @@ class StreamCurationSpec extends AnyFunSuite {
   private val SF_DIR = "/root/testdata/sf0.001"
 
   test("piiRedaction emits identical rows in batch and streaming execution") {
-    val dir = Files.createTempDirectory("graft_stream_curation")
+    val dir = TestSpark.tempDir("graft_stream_curation")
     Files.copy(Paths.get(s"$SF_DIR/documents.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
 
@@ -40,7 +40,7 @@ class StreamCurationSpec extends AnyFunSuite {
   }
 
   test("mix-resample keep decision is batch/stream identical (stream-static join)") {
-    val dir = Files.createTempDirectory("graft_stream_mix")
+    val dir = TestSpark.tempDir("graft_stream_mix")
     Files.copy(Paths.get(s"$SF_DIR/documents.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
 

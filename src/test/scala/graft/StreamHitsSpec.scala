@@ -46,7 +46,7 @@ class StreamHitsSpec extends AnyFunSuite {
     val cut2 = inter.indices.find(i => i > 2 * inter.length / 3 &&
       inter(i).ts != inter(i - 1).ts).get
 
-    val outDir = Files.createTempDirectory("graft_hits_graph").toString
+    val outDir = TestSpark.tempDir("graft_hits_graph").toString
     val in = MemoryStream[Interaction]
     val q = EventStreams.itemTransitions(in.toDS())
       .toDF("src", "dst")

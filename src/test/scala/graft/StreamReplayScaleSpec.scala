@@ -23,7 +23,7 @@ class StreamReplayScaleSpec extends AnyFunSuite {
   private val SF_DIR = "/root/testdata/sf0.1"
 
   private def stage(tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_replay_$tag")
+    val dir = TestSpark.tempDir(s"graft_replay_$tag")
     Files.copy(Paths.get(s"$SF_DIR/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString
@@ -158,7 +158,7 @@ class StreamReplayScaleSpec extends AnyFunSuite {
     val sf1 = "/root/repo/scaledata/sf1/events.parquet"
     assume(Files.exists(Paths.get(sf1)),
       "scaledata/sf1 not generated (python3 tools/gen_scale.py)")
-    val dir = Files.createTempDirectory("graft_replay_hll_sf1")
+    val dir = TestSpark.tempDir("graft_replay_hll_sf1")
     Files.copy(Paths.get(sf1), dir.resolve("part-0.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val fileSchema = s.read.parquet(dir.toString).schema

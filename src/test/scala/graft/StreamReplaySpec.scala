@@ -30,7 +30,7 @@ class StreamReplaySpec extends AnyFunSuite {
     // the per-user running totals accumulated before the stop. Sink is
     // foreachBatch (the recovery-capable sink for Update mode).
     import s.implicits._
-    val root = Files.createTempDirectory("graft_ckpt")
+    val root = TestSpark.tempDir("graft_ckpt")
     val inDir = root.resolve("in"); Files.createDirectories(inDir)
     val ckpt = root.resolve("ckpt").toString
     def ts(h: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
@@ -76,7 +76,7 @@ class StreamReplaySpec extends AnyFunSuite {
     // dynamic-overwrite sink must absorb the replay so the directory
     // holds each closed window exactly once with the exact counts.
     import s.implicits._
-    val root = Files.createTempDirectory("graft_eo")
+    val root = TestSpark.tempDir("graft_eo")
     val inDir = root.resolve("in"); Files.createDirectories(inDir)
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt")
@@ -129,7 +129,7 @@ class StreamReplaySpec extends AnyFunSuite {
 
   test("file-source replay closes exactly the watermark-passed windows") {
     // stage the single parquet file as a file-source directory
-    val dir = Files.createTempDirectory("graft_stream_replay")
+    val dir = TestSpark.tempDir("graft_stream_replay")
     Files.copy(Paths.get(s"$SF_DIR/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
 
@@ -183,7 +183,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("file-source replay: daily HLL sketch estimates equal the batch build") {
-    val dir = Files.createTempDirectory("graft_stream_hll")
+    val dir = TestSpark.tempDir("graft_stream_hll")
     Files.copy(Paths.get(s"$SF_DIR/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val fileSchema = s.read.parquet(dir.toString).schema
@@ -222,7 +222,7 @@ class StreamReplaySpec extends AnyFunSuite {
   test("file-source replay: Misra-Gries heavy hitters honor the N/k guarantee in O(k) state") {
     import s.implicits._
     val K = 8
-    val dir = Files.createTempDirectory("graft_stream_mg")
+    val dir = TestSpark.tempDir("graft_stream_mg")
     Files.copy(Paths.get(s"$SF_DIR/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val fileSchema = s.read.parquet(dir.toString).schema

@@ -73,7 +73,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, expr, lit}
     val SF = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("graft_stream_sessions")
+    val dir = TestSpark.tempDir("graft_stream_sessions")
     Files.copy(Paths.get(s"$SF/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val raw = s.read.parquet(dir.toString)
@@ -234,7 +234,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import org.apache.spark.sql.functions.{col, expr, lit}
     val SF = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("graft_stream_abandon")
+    val dir = TestSpark.tempDir("graft_stream_abandon")
     Files.copy(Paths.get(s"$SF/events.parquet"),
       dir.resolve("part-0.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val raw = s.read.parquet(dir.toString)

@@ -50,7 +50,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("ns and us parquet files of the same instants load identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts_norm")
+    val dir = TestSpark.tempDir("graft_ts_norm")
     // the us side: write TIMESTAMP_NTZ parquet (what pyarrow emits)
     val usDir = dir.resolve("us").toString
     Seq("2024-01-15 12:34:56.789012", "2024-01-15 12:34:57.789012")

@@ -12,8 +12,7 @@ object TestDocs {
   def write(s: SparkSession, tag: String,
       rows: Seq[(Long, String, String, String)]): String = {
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_docs_$tag").toString
+    val dir = TestSpark.tempDir(s"graft_docs_$tag").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .selectExpr("doc_id", "text", "lang", "source",
         "CAST(length(text) AS BIGINT) AS n_chars")

@@ -1,10 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -13,6 +15,20 @@ import org.apache.spark.sql.SparkSession
   * build theirs ([[Sessions.local]]) on 4 cores. */
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local(4)
+
+  private val tempDirs = {
+    val q = new ConcurrentLinkedQueue[Path]
+    sys.addShutdownHook(q.forEach(d => FileUtils.deleteQuietly(d.toFile)))
+    q
+  }
+
+  /** A fresh directory under java.io.tmpdir named `prefix` plus a random
+    * suffix, deleted with its contents when the test JVM exits. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
 
   /** Calls `f` on each Spark job started on the shared session while
     * `body` runs (the listener bus drained before returning, so late

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -80,7 +79,7 @@ class WarehouseSpec extends AnyFunSuite {
   test("q156 localizes a single-row change to exactly one leaf") {
     // Copy the orders table with ONE price bumped, rerun the manifest:
     // precisely that row's month leaf (and the root) may move.
-    val d = Files.createTempDirectory("graft_manifest").toString
+    val d = TestSpark.tempDir("graft_manifest").toString
     val orig = graft.model.Tables(s, sfDir).orders
     val victim = orig.select(min("o_orderkey")).head().getLong(0)
     orig.withColumn("o_totalprice",
@@ -106,7 +105,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   private def anomalyDir: String = {
     import s.implicits._
-    val d = Files.createTempDirectory("graft_anomaly").toString
+    val d = TestSpark.tempDir("graft_anomaly").toString
     val hourUs = 3600L * 1000000L
     // ts inside epoch-hour h (weekly cell = h % 168)
     def at(h: Long) = new Timestamp(h * hourUs / 1000L + 1000L)
@@ -251,7 +250,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("q160 surfaces a planted hot key") {
     import s.implicits._
-    val d = Files.createTempDirectory("graft_skew").toString
+    val d = TestSpark.tempDir("graft_skew").toString
     // 99 singleton users + ONE user with 901 rows → p99 = 1, max = 901,
     // hot_ppm = 901·10⁶/1000 = 901000
     val rows = (1L to 99L).map(u => (u, new Timestamp(1000L * u), u,
