@@ -1,11 +1,13 @@
 package graft
 import java.io.PrintStream
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -22,12 +24,14 @@ import org.apache.spark.sql.execution.FormattedMode
   *     only place AQE's runtime rewrites (ReusedExchange dedup, broadcast
   *     demotion, skew splits) are visible; the static plan duplicates
   *     common subtrees that execution actually shares;
-  *   - `stages`: run the query twice, cold and then warm (memos and
-  *     caches filled), and print each run's wall time and its 12 longest
-  *     stages with task count and summed task run time, then the `exec`
-  *     output. A plan can look right and still run its heavy stage on 2
-  *     tasks (the round-15 q78 probe collapse): `wall ≈ runSum/tasks`
-  *     with a tiny task count is the signature, invisible in a plan.
+  *   - `stages`: build and run the query twice, cold and then warm
+  *     (memos and caches filled). Each run prints its wall time, its
+  *     Spark jobs split into construction (building the DataFrame) and
+  *     execution (the noop write), and its 12 longest stages with task
+  *     count and summed task run time; then comes the `exec` output.
+  *     A plan can look right and still run its heavy stage on 2 tasks
+  *     (the round-15 q78 probe collapse): `wall ≈ runSum/tasks` with a
+  *     tiny task count is the signature, invisible in a plan.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -62,14 +66,18 @@ object Explain {
     }
   }
 
-  /** Runs `df` to a noop sink (Bench's sink) and prints its wall time and
-    * its longest stages. */
+  /** Builds `df` and runs it to a noop sink (Bench's sink), then prints
+    * the wall time of both, the Spark jobs each started, and the longest
+    * stages. */
   private def stages(spark: SparkSession, name: String, tag: String,
       df: => DataFrame, out: PrintStream): Unit = {
     val sc = spark.sparkContext
     // (stage id, wall ms, tasks, summed task run time ms)
     val done = new ConcurrentLinkedQueue[(Int, Long, Int, Long)]
+    val jobs = new AtomicInteger
     val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
         val wall = (for {a <- i.completionTime; b <- i.submissionTime}
@@ -79,14 +87,19 @@ object Explain {
     }
     GraftListenerDrain.drain(sc)
     sc.addSparkListener(l)
-    val secs = try {
+    val (secs, construct) = try {
       val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      val built = df
+      GraftListenerDrain.drain(sc)
+      val construct = jobs.get
+      built.write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t0) / 1e9
       GraftListenerDrain.drain(sc)
-      secs
+      (secs, construct)
     } finally sc.removeSparkListener(l)
-    out.println(f"[probe] $name $tag total $secs%.2f s")
+    val total = jobs.get
+    out.println(f"[probe] $name $tag total $secs%.2f s jobs $total " +
+      s"(construct $construct, exec ${total - construct})")
     done.asScala.toVector.sortBy(-_._2).take(12)
       .foreach { case (id, w, t, run) =>
         out.println(f"[stage] id=$id%-4d wall=${w / 1000.0}%8.2fs " +

@@ -103,6 +103,11 @@ object Poster {
     }
   }
 
+  /** Fixture `name` of `cfg`'s dir, as one partition. Each fixture is one
+    * small file, so its scan is one input partition already; the
+    * coalesce(1) only tells the planner so (SinglePartition). A group-by
+    * or window over a fixture then plans no exchange (vertArrays, edges,
+    * q18's vertex stats), which saves the shuffle's map job. */
   private[queries] def fx(s: SparkSession, name: String,
       cfg: PosterCfg = Default): DataFrame = {
     // Defensive native-function registration — the session may not have
@@ -110,6 +115,7 @@ object Poster {
     graft.functions.GraftExtensions.ensureRegistered(s)
     fixtureSchema(name).fold(s.read)(t => s.read.schema(t))
       .parquet(s"${cfg.fx}/$name.parquet")
+      .coalesce(1)
   }
 
   private val N = 64 // oracle-gate grid (same function as 400, smaller domain)
@@ -316,17 +322,30 @@ object Poster {
 
   /** S3+P1+A5: gaussian kernel from scratch as a function of sigma
     * (app.py:22-29): radius = int(3σ+0.5), taps = 2·radius+1, sequence
-    * source, elementwise gaussian, sum-normalize via 1-row-agg rejoin.
-    * exp() differs by ≤1 ulp between JVM and DuckDB libm → round(…,12). */
+    * source, elementwise gaussian, sum-normalize.
+    * exp() differs by ≤1 ulp between JVM and DuckDB libm → round(…,12).
+    *
+    * One job: the taps are one partition, collected into one array in
+    * offset order; the total is that array's left fold (the order a
+    * one-partition `sum` adds in) and each tap is divided by it inside
+    * the same row, then inlined back to rows. There is no 1-row total to
+    * broadcast and rejoin, and the root sort is one task (SmallSort).
+    * KernelAndBlurSpec checks the rows, schema and nullability against
+    * the agg-and-rejoin form at several sigmas and slice counts. */
   private[graft] def kernel(s: SparkSession, sigma: Double): DataFrame = {
     val radius = (3.0 * sigma + 0.5).toInt
-    val raw = s.range(2L * radius + 1)
-      .select((col("id") - radius).as("offset"))
-      .withColumn("w", exp(-(col("offset") * col("offset")).cast("double")
-        / lit(2.0 * sigma * sigma)))
-    val total = raw.agg(sum("w").as("total"))
-    raw.crossJoin(broadcast(total))
-      .select(col("offset"), round(col("w") / col("total"), 12).as("weight"))
+    val offset = col("id") - radius
+    s.range(0, 2L * radius + 1, 1, 1)
+      .select(struct(offset.as("offset"),
+        exp(-(offset * offset).cast("double") / lit(2.0 * sigma * sigma))
+          .as("w")).as("t"))
+      .agg(collect_list(col("t")).as("k"))
+      .select(col("k"),
+        aggregate(col("k"), lit(0.0), (acc, t) => acc + t.getField("w"))
+          .as("total"))
+      .select(inline(transform(col("k"), t => struct(
+        t.getField("offset").as("offset"),
+        round(t.getField("w") / col("total"), 12).as("weight")))))
       .orderBy("offset")
   }
 

@@ -20,11 +20,21 @@ import graft.functions.PointInPolygon
   * poster (14 blobs, 400×400, σ=6 shadow blur), rasterized by scanline
   * inside each (blob, row-tile) task. The 14-row params, the 3,920
   * vertices and the 37-tap kernel are the small "query" side, collected
-  * once at construction; the data side is one row per (blob, tile), and
-  * each task computes its tile's mask, shade and blur with no shuffle in
-  * between (see [[tile]]). The only shuffle is the per-blob fold of ≤ 98
-  * tile rows. Output is one summary row per blob, so result size is
-  * O(blobs) regardless of grid resolution.
+  * at construction in one job (see [[querySide]]); the data side is one
+  * row per (blob, tile), and each task computes its tile's mask, shade
+  * and blur with no shuffle in between (see [[tile]]). The only shuffle
+  * is the per-blob fold of ≤ 98 tile rows. Output is one summary row per
+  * blob, so result size is O(blobs) regardless of grid resolution.
+  *
+  * q46 runs 3 Spark jobs: the query-side collect, the tile stage in
+  * min(98, defaultParallelism) tasks, and the one-task fold and sort. The
+  * fold stays behind its shuffle on purpose. Folding per blob inside the
+  * tile tasks saves that job, but the root sort is small, so
+  * SmallSortStrategy's `Coalesce 1` then pulls the tile stage into its
+  * one task (measured on local[4], median of 21 warm noop writes in
+  * each of two JVMs: 4 tasks and 0.26–0.27 s here, 1 task and
+  * 0.39–0.47 s folded). FullScaleGoldenSpec pins the tile stage's task
+  * count.
   */
 object PosterScale {
 
@@ -181,9 +191,11 @@ object PosterScale {
     Some(Tile(cells, units, mass))
   }
 
-  /** q46's query side at grid n, read once with the declared fixture
-    * schemas: one job for the params with their shade normalizers, one for
-    * the vertices (ordered by idx on the driver).
+  /** q46's query side at grid n, read in one job with the declared
+    * fixture schemas: the params with their shade normalizers, the
+    * vertices and the kernel taps, each projected to one row shape
+    * (source, blob_id, index, values) and collected as one union. The
+    * driver orders each blob's vertices by idx and the taps by offset.
     *
     * The reference normalizes dist/light over the whole padded raster —
     * but dist is convex and light linear in (gx, gy), so over the sampled
@@ -192,7 +204,8 @@ object PosterScale {
     * 14-row computation is bit-identical to aggregating all 2.24 M cells
     * (it replaces a full-grid scan with algebra — the kind of rewrite that
     * matters when the grid is 100 TB). */
-  private def blobs(s: SparkSession, n: Int): Array[Blob] = {
+  private def querySide(s: SparkSession,
+      n: Int): (Array[Blob], Array[Double]) = {
     val gx0 = col("xmin")
     val gx1 = col("xmin") + lit((n - 1).toDouble) *
       ((col("xmax") - col("xmin")) / lit((n - 1).toDouble))
@@ -205,25 +218,34 @@ object PosterScale {
     }
     def li(cx: Column, cy: Column) =
       (cx - col("cx_mean")) * lit(-0.6) + (cy - col("cy_mean")) * lit(0.8)
-    val verts = Poster.fx(s, "blob_vertices")
-      .select("blob_id", "idx", "x", "y").collect()
-      .groupBy(_.getLong(0)).map { case (id, rs) =>
-        val o = rs.sortBy(_.getInt(1))
-        id -> (o.map(_.getDouble(2)), o.map(_.getDouble(3)))
-      }
-    Poster.fx(s, "blob_params")
-      .select(col("blob_id"), col("xmin"), col("xmax"), col("ymin"),
-        col("ymax"), col("cx_mean"), col("cy_mean"), col("depth"),
-        greatest(d(gx0, gy0), d(gx0, gy1), d(gx1, gy0), d(gx1, gy1)),
-        least(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1)),
-        greatest(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1)))
-      .collect().map { p =>
-        val (xs, ys) = verts.getOrElse(p.getLong(0),
-          (Array.emptyDoubleArray, Array.emptyDoubleArray))
-        Blob(p.getLong(0), p.getDouble(1), p.getDouble(2), p.getDouble(3),
-          p.getDouble(4), p.getDouble(5), p.getDouble(6), p.getDouble(7),
-          p.getDouble(8), p.getDouble(9), p.getDouble(10), xs, ys)
-      }
+    def shaped(src: Int, id: Column, i: Column, vs: Column*) = Seq(
+      lit(src).as("src"), id.as("blob_id"), i.as("i"), array(vs: _*).as("v"))
+    val params = Poster.fx(s, "blob_params").select(shaped(0, col("blob_id"),
+      lit(0), col("xmin"), col("xmax"), col("ymin"), col("ymax"),
+      col("cx_mean"), col("cy_mean"), col("depth"),
+      greatest(d(gx0, gy0), d(gx0, gy1), d(gx1, gy0), d(gx1, gy1)),
+      least(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1)),
+      greatest(li(gx0, gy0), li(gx0, gy1), li(gx1, gy0), li(gx1, gy1))): _*)
+    val verts = Poster.fx(s, "blob_vertices").select(shaped(1, col("blob_id"),
+      col("idx"), col("x"), col("y")): _*)
+    val taps = Poster.fx(s, "kernel_sigma6").select(shaped(2, lit(-1L),
+      col("offset"), col("weight")): _*)
+    val rows = params.union(verts).union(taps).collect()
+      .groupBy(_.getInt(0)).withDefaultValue(Array.empty)
+    def v(r: Row): Array[Double] = r.getSeq[Double](3).toArray
+    val polys = rows(1).groupBy(_.getLong(1)).map { case (id, rs) =>
+      val o = rs.sortBy(_.getInt(2))
+      id -> (o.map(v(_)(0)), o.map(v(_)(1)))
+    }
+    val blobs = rows(0).map { p =>
+      val Array(xmin, xmax, ymin, ymax, cxMean, cyMean, depth, distMax,
+        lightMin, lightMax) = v(p)
+      val (xs, ys) = polys.getOrElse(p.getLong(1),
+        (Array.emptyDoubleArray, Array.emptyDoubleArray))
+      Blob(p.getLong(1), xmin, xmax, ymin, ymax, cxMean, cyMean, depth,
+        distMax, lightMin, lightMax, xs, ys)
+    }
+    (blobs, rows(2).sortBy(_.getInt(2)).map(v(_).head))
   }
 
   private val TileSchema = StructType(Seq(
@@ -250,9 +272,7 @@ object PosterScale {
     // on top of q45 ≡ q17 ≡ oracle at 64 and the golden-fixture suite.
     "q46_poster_fullscale" -> ((s, _) => {
       val n = 400
-      val bs = blobs(s, n)
-      val kernel = Poster.fx(s, "kernel_sigma6").orderBy("offset").collect()
-        .map(_.getDouble(1))
+      val (bs, kernel) = querySide(s, n)
       require(kernel.length == 2 * R + 1,
         s"kernel_sigma6 has ${kernel.length} taps, want ${2 * R + 1}")
       val nTiles = (n - 1) / T + 1

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graft.Explain's three modes on q13 at sf0.001: every mode prints the
   * `========== <name> ==========` header tools/plan_audit.py splits on;
   * the default and `exec` modes print a plan; `stages` prints the cold
-  * and the warm run's stage lines and then the final adaptive plan. */
+  * and the warm run's job counts and stage lines and then the final
+  * adaptive plan. */
 class ExplainSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
@@ -42,6 +43,12 @@ class ExplainSpec extends AnyFunSuite {
       lines.slice(from + 1, until).filter(_.startsWith("[stage] id="))
     assert(stageLines(cold, warm).nonEmpty, lines.mkString("\n"))
     assert(stageLines(warm, plan).nonEmpty, lines.mkString("\n"))
+  }
+
+  test("stages mode reports q13's warm run as 1 Spark job") {
+    val warm = explain("stages").find(_.startsWith(s"[probe] $q warm total "))
+    assert(warm.exists(_.endsWith(" s jobs 1 (construct 0, exec 1)")),
+      warm.toString)
   }
 
   test("an unknown mode fails instead of printing a plan") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.types.{ArrayType, Decimal, DecimalType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,9 +23,10 @@ import graft.queries.PosterScale.{Blob, Tile}
   * equal n_mask_cells at 3 dp. A mis-normalized kernel or a tile halo
   * bug breaks conservation before it breaks anything visible.
   *
-  * Third, the structure: q46 stays one tile-local pass (a job budget),
-  * and at a small grid its tile routine equals a per-cell
-  * point_in_polygon mask with a direct whole-grid dense blur.
+  * Third, the structure: q46 stays one tile-local pass (a job budget)
+  * whose tiles run in parallel (a task count), and at a small grid its
+  * tile routine equals a per-cell point_in_polygon mask with a direct
+  * whole-grid dense blur.
   */
 class FullScaleGoldenSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -57,13 +59,29 @@ class FullScaleGoldenSpec extends AnyFunSuite {
     }
   }
 
-  test("q46 builds and runs in at most 5 Spark jobs") {
-    // 3 to build (vertices, params, kernel taps), the tile aggregate's
-    // map job, and the result job: the final 14-row sort is one task
-    val jobs = TestSpark.jobsOf(
-      SparkEntry.queries("q46_poster_fullscale")(s, "unused").collect())
-    info(s"q46 ran $jobs jobs")
-    assert(jobs <= 5, s"q46 ran $jobs jobs")
+  test("q46 builds and runs in at most 3 Spark jobs") {
+    // 1 to build (params, vertices and kernel taps in one union collect),
+    // the tile aggregate's map job, and the result job: the final 14-row
+    // sort is one task
+    var df: DataFrame = null
+    val built = TestSpark.jobsOf {
+      df = SparkEntry.queries("q46_poster_fullscale")(s, "unused")
+    }
+    val jobs = built + TestSpark.jobsOf(df.collect())
+    info(s"q46 ran $jobs jobs, $built to build")
+    assert(built === 1, s"q46 ran $built jobs to build")
+    assert(jobs <= 3, s"q46 ran $jobs jobs")
+  }
+
+  test("q46's tile stage runs in min(98, defaultParallelism) tasks") {
+    // 14 blobs × 7 row tiles. The tile stage is the run's one stage with
+    // no parent; its tasks must not collapse into the one-task sort
+    // (SmallSortStrategy's Coalesce 1 pulls in a child stage that ends
+    // in no exchange).
+    val df = SparkEntry.queries("q46_poster_fullscale")(s, "unused")
+    val leaves = TestSpark.stagesOf(df.collect()).filter(_.parentIds.isEmpty)
+    assert(leaves.map(_.numTasks) ===
+      Seq(math.min(98, s.sparkContext.defaultParallelism)))
   }
 
   test("shade units are Spark's CAST(shade AS DECIMAL(28,12)), both paths") {

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Poster
 
 /** Kernel construction and separable-blur semantics (SURVEY §5.3/§5.4):
   * normalization, symmetry, fixture agreement, hand-computed 5-tap
-  * convolution including the zero-pad edge, and mass conservation. */
+  * convolution including the zero-pad edge, and mass conservation; the
+  * one-job kernel against the agg-and-rejoin form it replaced. */
 class KernelAndBlurSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
@@ -21,9 +23,39 @@ class KernelAndBlurSpec extends AnyFunSuite {
     rows.foreach { case (o, w) => assert(math.abs(w - fx(o)) < 1e-11) }
   }
 
-  test("q13 runs in 3 Spark jobs: the total, its broadcast, the sorted taps") {
+  test("q13 runs in 1 Spark job") {
     val jobs = TestSpark.jobsOf(Poster.queries("q13_kernel")(s, "").collect())
-    assert(jobs === 3, s"q13 ran $jobs jobs")
+    assert(jobs === 1, s"q13 ran $jobs jobs")
+  }
+
+  /** The agg-and-rejoin form kernel() had before it ran in one job: a
+    * 1-row total over `slices` range partitions, broadcast and
+    * cross-joined back onto the taps. */
+  private def rejoinKernel(sigma: Double, slices: Int): DataFrame = {
+    val radius = (3.0 * sigma + 0.5).toInt
+    val raw = s.range(0, 2L * radius + 1, 1, slices)
+      .select((col("id") - radius).as("offset"))
+      .withColumn("w", exp(-(col("offset") * col("offset")).cast("double")
+        / lit(2.0 * sigma * sigma)))
+    val total = raw.agg(sum("w").as("total"))
+    raw.crossJoin(broadcast(total))
+      .select(col("offset"), round(col("w") / col("total"), 12).as("weight"))
+      .orderBy("offset")
+  }
+
+  test("kernel(σ) equals the agg-and-rejoin form: rows, schema, nullability") {
+    def bits(df: DataFrame) = df.collect().toSeq.map(r =>
+      (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+    for (sigma <- Seq(0.5, 2.0, 3.2, 6.0, 10.0, 20.0)) {
+      val k = Poster.kernel(s, sigma)
+      val got = bits(k)
+      assert(got.size === 2 * (3.0 * sigma + 0.5).toInt + 1, s"σ=$sigma")
+      for (slices <- Seq(1, 4, 8)) {
+        val old = rejoinKernel(sigma, slices)
+        assert(k.schema === old.schema, s"σ=$sigma, $slices slices")
+        assert(got === bits(old), s"σ=$sigma, $slices slices")
+      }
+    }
   }
 
   test("5-tap 1-D convolution of a point mass, zero-pad edge semantics") {

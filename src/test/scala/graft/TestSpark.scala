@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.GraftListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 
 /** Shared test session — one JVM-wide session built as Verify and Bench
@@ -30,19 +31,33 @@ object TestSpark {
     d
   }
 
-  /** Calls `f` on each Spark job started on the shared session while
-    * `body` runs (the listener bus drained before returning, so late
-    * events are not missed). */
-  private def onJobStart(body: => Unit)(f: SparkListenerJobStart => Unit)
-      : Unit = {
+  /** Runs `body` with `l` listening on the shared session (the listener
+    * bus drained before returning, so late events are not missed). */
+  private def listening(l: SparkListener)(body: => Unit): Unit = {
     val sc = spark.sparkContext
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = f(e)
-    }
     GraftListenerDrain.drain(sc)
     sc.addSparkListener(l)
     try { body; GraftListenerDrain.drain(sc) }
     finally sc.removeSparkListener(l)
+  }
+
+  /** Calls `f` on each Spark job started on the shared session while
+    * `body` runs. */
+  private def onJobStart(body: => Unit)(f: SparkListenerJobStart => Unit)
+      : Unit =
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = f(e)
+    })(body)
+
+  /** The stages that completed on the shared session while `body` runs
+    * (a skipped stage never runs, so it is not among them). */
+  def stagesOf(body: => Unit): Seq[StageInfo] = {
+    val done = new ConcurrentLinkedQueue[StageInfo]
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        done.add(e.stageInfo)
+    })(body)
+    done.asScala.toSeq
   }
 
   /** Spark jobs started on the shared session while `body` runs. */
