@@ -91,7 +91,7 @@ object Affinity {
       // support aggregate and BOTH self-join sides read it — the old
       // per-consumer rebuild planned the events scan+distinct+cap
       // subtree 4× (12 scans / 24 exchanges in the static plan). Same
-      // defect class as prGraph/triangleCounts, same remedy.
+      // defect class as the rank walk's graph/triangleCounts, same remedy.
       val cb = cappedBaskets(s, dir).cut()
       val supp = cb.groupBy("item").agg(count(lit(1)).as("n_item"))
       // the symmetrizing union references the pair aggregate twice and

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.PlanBridge
@@ -91,6 +91,25 @@ object Lineage {
     * no job. */
   private[graft] def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The gate of the in-process tiers (`LocalJaccard.pairs`,
+    * `LocalRank.collectBounded`): the `cols` rows of `df` if it holds at
+    * most `max` of them, else None — one bounded collect either way.
+    * The coalesce makes it exactly ONE job at any partition count: a
+    * bare `limit(n).collect()` scans partitions in rounds (1, then ×4 …),
+    * one job each, until it holds n rows or runs out — 2+ jobs on a
+    * small multi-partition frame. One task reads the partitions in order
+    * and stops at `max` + 1 rows. A LocalRelation frame is read with no
+    * job at all. */
+  private[graft] def collectBounded(df: DataFrame, cols: Seq[String],
+      max: Int): Option[Array[Row]] = {
+    require(max >= 0, s"an in-process bound must be >= 0, got $max")
+    val sel = df.select(cols.map(df.col): _*)
+    val rows =
+      if (isLocal(df)) sel.collect()
+      else sel.coalesce(1).limit(max + 1).collect()
+    if (rows.length <= max) Some(rows) else None
+  }
 
   /** The reliable cut's checkpoint dir: the session's [[DIR_KEY]], else
     * a run path that application end deletes. */

@@ -58,17 +58,15 @@ private[graft] object LocalJaccard {
   /** The gate and the kernel: the pair list of the shingle map `shMap`
     * (`doc_id`, `sh`, duplicates not yet removed) under posting-list cap
     * `dfCap`, or None when the map has more than `maxRows` rows or its
-    * capped fan-out exceeds `maxFanOut`. One Spark job either way: the
-    * coalesce makes the bounded collect one task that stops after
-    * `maxRows` + 1 rows. */
+    * capped fan-out exceeds `maxFanOut`. One Spark job either way, the
+    * bounded collect of [[Lineage.collectBounded]]. */
   def pairs(shMap: DataFrame, dfCap: Int, maxRows: Int,
       maxFanOut: Long): Option[DataFrame] = {
-    require(maxRows >= 0, s"the shingle-row bound must be >= 0, got $maxRows")
-    val rows = shMap.select("doc_id", "sh").coalesce(1).limit(maxRows + 1)
-      .collect()
-    if (rows.length > maxRows) {
-      log(s"distributed tier: more than $maxRows shingle rows")
-      return None
+    val rows = Lineage.collectBounded(shMap, Seq("doc_id", "sh"), maxRows) match {
+      case Some(r) => r
+      case None =>
+        log(s"distributed tier: more than $maxRows shingle rows")
+        return None
     }
     val k = new Kernel(rows, dfCap)
     if (k.fanOut > maxFanOut) {

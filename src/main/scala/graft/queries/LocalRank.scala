@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import TextOps.{PR_Q, PR_TELEPORT_Q, PR_TOL_NUM_Q}
 
-/** The in-process tier of the q104/q158 PageRank fixpoints.
+/** The in-process tier of `TextOps.seededWalk`, the one damped walk
+  * behind q104's PageRank (every node a seed) and q158's personalized
+  * PageRank (the seeds doc_id ≡ 0 mod 10).
   *
-  * The distributed loop (`TextOps.converge2`) pays one Spark job per
+  * The distributed tier (`TextOps.converge2`) pays one Spark job per
   * few rounds — ~125 ms of scheduling each — whatever the graph size,
   * and the similarity graphs these queries iterate run from a few dozen
   * pairs at sf0.01 to ~286k at sf1. Up to [[LocalMaxPairs]]
@@ -21,9 +23,11 @@ import TextOps.{PR_Q, PR_TELEPORT_Q, PR_TOL_NUM_Q}
   * same integer-quanta arithmetic (Java `/` on non-negative longs is
   * Spark's `div`; `Math.*Exact` throws where ANSI Spark would), over the
   * same symmetrized edge multiset (duplicates kept, as `unionByName`
-  * keeps them), with the same tolerance, first-round-under-tolerance
-  * stop and fail-loud cap message. LocalRankSpec pins both tiers
-  * against each other. */
+  * keeps them) and the same seeds (`seededWalk` derives the mask handed
+  * to [[Graph.converge]] and the distributed `seed` column from one
+  * rule), with the same tolerance, first-round-under-tolerance stop and
+  * fail-loud cap message. LocalRankSpec pins both tiers against each
+  * other. */
 private[graft] object LocalRank {
 
   /** Pair-count bound of the in-process tier, set by driver heap, not
@@ -52,25 +56,16 @@ private[graft] object LocalRank {
   val LocalMaxPairs: Int = 1 << 19
 
   /** The gate: the (u, v) rows of the cut pair list if it holds at most
-    * `max` of them, else None — one bounded collect either way. The
-    * coalesce makes it exactly ONE job at any partition count: a bare
-    * `limit(n).collect()` scans partitions in rounds (1, then ×4 …), one
-    * job each, until it holds n rows or runs out — 2+ jobs on a small
-    * multi-partition list. One task reads the cached blocks in order and
-    * stops at max + 1 rows. A LocalRelation list (the in-process
-    * `jaccardPairs` tier's) is read with no job at all. */
-  def collectBounded(pairs: DataFrame, max: Int): Option[Array[Row]] = {
-    require(max >= 0, s"the in-process pair bound must be >= 0, got $max")
-    val uv = pairs.select("u", "v")
-    val rows =
-      if (Lineage.isLocal(pairs)) uv.collect()
-      else uv.coalesce(1).limit(max + 1).collect()
-    if (rows.length <= max) Some(rows) else None
-  }
+    * `max` of them, else None ([[Lineage.collectBounded]]: one job, none
+    * for a LocalRelation list such as the in-process `jaccardPairs`
+    * tier's). */
+  def collectBounded(pairs: DataFrame, max: Int): Option[Array[Row]] =
+    Lineage.collectBounded(pairs, Seq("u", "v"), max)
 
   /** The symmetrized graph of a collected pair list: dense node indices
     * in doc_id order, both directions of every pair (so duplicates and
-    * degrees match `TextOps.prGraph`'s edge union). */
+    * degrees match the edge union of `TextOps.seededWalk`'s distributed
+    * tier). */
   final class Graph(rows: Array[Row]) {
     private val us = rows.map(_.getLong(0))
     private val vs = rows.map(_.getLong(1))

@@ -34,18 +34,13 @@ object TextOps {
   /** Session-memoized corpus SimHash index for q114 (the q78
     * build-once/probe-many serving pattern): banded 48-bit fingerprints
     * of the corpus slice (doc_id ≢ 0 mod 5), boilerplate buckets (>20
-    * members) pruned AT BUILD, persisted partitionBy(band). Keyed by
-    * (live session, sfDir) with stopped-session pruning; the path
-    * carries the run token plus a build id so concurrent sessions and
-    * rebuilds never collide (the VectorOps.ivfIndexMemo contract). */
-  private val simhashIdxMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private val simhashIdxBuildId = new java.util.concurrent.atomic.AtomicLong(0)
+    * members) pruned AT BUILD, persisted partitionBy(band). Lifecycle,
+    * paths and the one build per (live session, sfDir) live in the
+    * shared [[BuildOnceMemo]]. */
+  private val simhashIndexMemo = new BuildOnceMemo[String]("graft_simhash_index")
 
-  private def simhashIndex(s: SparkSession, dir: String): String = {
-    simhashIdxMemo.keysIterator.filter(_._1.sparkContext.isStopped)
-      .foreach(simhashIdxMemo.remove)
-    simhashIdxMemo.getOrElseUpdate((s, dir), {
+  private def simhashIndex(s: SparkSession, dir: String): String =
+    simhashIndexMemo.getOrBuild(s, dir) {
       val sim = udaf(SimHashAgg)
       val fps = docs(s, dir).where(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -60,13 +55,10 @@ object TextOps {
           count(lit(1)).over(Window.partitionBy("band", "sig")))
         .where(col("bsz") <= 20)
         .select(col("doc_id"), col("fp"), col("sig"), col("band"))
-      val path = Sinks.runPath("graft_simhash_index") + "_" +
-        java.lang.Integer.toHexString(dir.hashCode) + "_" +
-        simhashIdxBuildId.incrementAndGet()
+      val path = simhashIndexMemo.nextPath(dir)
       capped.write.mode("overwrite").partitionBy("band").parquet(path)
       path
-    })
-  }
+    }
 
   /** Distinct word-3-gram shingles per doc: (doc_id, sh). 1-based
     * element_at aligns with DuckDB list indexing in the oracle. Shared
@@ -1748,7 +1740,7 @@ object TextOps {
     // VALUE-propagating fixpoint instead of a label-collapsing one.
     // Determinism is the q82/q101 pattern — per-edge contributions are
     // computed in integer quanta of 1e-12 (floor division — exact and
-    // order-free at any partition layout AND any engine; see prStepBody for
+    // order-free at any partition layout AND any engine; see seededWalk for
     // the r9 finding that retired the decimal-rounded form), so every
     // iteration stays bit-identical to the oracle's unrolled CTE chain.
     // pr = q/1e12 surfaces only at the output boundary. Scale: one
@@ -1828,15 +1820,13 @@ object TextOps {
     // labeled slice" primitive of semi-supervised data curation: rank
     // the whole corpus by proximity to a trusted seed corpus and take
     // the high-PPR unlabeled docs as candidates. Same integer-quanta
-    // discipline as q104 (floor division has no cross-engine ties), same
-    // carried-prev two-rounds-per-job convergence loop, same amortized
-    // checkpoint stats reset; what changes is the teleport vector (all
-    // mass to seeds, so non-seeds hold exactly 0 until wave k reaches
-    // them — the left-join + COALESCE handles the zero-contribution
-    // frontier the uniform init of q104 never exhibits) and the cap
-    // (the concentrated init starts ~n/|S|× further from its fixpoint,
-    // so the 0.85-geometric argument needs ~log(n/|S|)/log(1/0.85) more
-    // rounds than q104 — 80 covers it where 60 would not).
+    // discipline as q104 (floor division has no cross-engine ties) and
+    // the same walk (`seededWalk`, both tiers); what changes is the
+    // teleport vector (all mass to seeds, so non-seeds hold exactly 0
+    // until wave k reaches them) and the cap (the concentrated init
+    // starts ~n/|S|× further from its fixpoint, so the 0.85-geometric
+    // argument needs ~log(n/|S|)/log(1/0.85) more rounds than q104 — 80
+    // covers it where 60 would not).
     "q158_personalized_pagerank" -> ((s, dir) => {
       val pairs = jaccardPairs(s, dir)
         .select(col("da").as("u"), col("db").as("v"))
@@ -2065,108 +2055,132 @@ object TextOps {
     * merges merging with each other on this vocabulary. */
   private[graft] val BPE_ROUNDS = 8
 
-  /** One damped-PageRank iteration (d = 0.85) in EXACT INTEGER QUANTA
-    * of 10⁻¹² (the `q` column; pr = q / 10¹²): contribution = q div deg,
-    * damping = (17·sc) div 20, teleport = 0.15·10¹² div n — floor
-    * division on positive longs, which every engine computes
-    * bit-identically at ANY scale. This replaced the r8 round(double,12)
+  /** q104's PageRank: the seeded walk of [[seededWalk]] with every node
+    * a seed, so |S| = n — uniform init and teleport, tolerance
+    * max(1, PR_TOL_NUM_Q div n) (~0.1% of the uniform score) — returning
+    * doc_id, deg, n and q. */
+  private[graft] def pageRankConverged(pairs: DataFrame,
+      cap: Int = PR_CAP,
+      unroll: Int = ConvergeUnroll,
+      localMax: Int = LocalRank.LocalMaxPairs): DataFrame =
+    seededWalk(pairs, None, cap, unroll, localMax, "pr")
+
+  /** q158's personalized PageRank: the seeded walk of [[seededWalk]]
+    * restarting into the seeds doc_id ≡ 0 mod PPR_SEED_MOD, returning
+    * doc_id, deg, n, seed, ns and q.
+    *
+    * Its tolerance is relative to the PER-SEED mass scale 1/|S|, not
+    * q104's uniform 1/n: PPR scores concentrate near the seed set (a
+    * typical seed holds ~0.15/|S| at the fixpoint), so 1/n-relative
+    * stopping would demand |S|/n× more precision than the scores carry —
+    * and since Δ₀ ≈ 1/|S| too, it would cost ~log(n/|S|)/log(1/0.85)
+    * EXTRA rounds at every scale (measured: 57 rounds vs 42 at sf0.01;
+    * ~99 — past any reasonable cap — at sf1's n/|S| ≈ 10 with n = 52k).
+    * 1/|S|-relative keeps both the relative precision AND the round
+    * count scale-stable (mixing-bound, like q104's). */
+  private[graft] def pprConverged(pairs: DataFrame,
+      cap: Int = PPR_CAP,
+      unroll: Int = ConvergeUnroll,
+      localMax: Int = LocalRank.LocalMaxPairs): DataFrame =
+    seededWalk(pairs, Some(PPR_SEED_MOD), cap, unroll, localMax, "ppr")
+
+  /** The damped walk (d = 0.85) with restart into a seed set S, run to
+    * convergence: q104 and q158 are this one walk. `seedMod` is the seed
+    * rule — Some(m) seeds doc_id ≡ 0 mod m and keeps the `seed` and `ns`
+    * columns in the output; None seeds every node (|S| = n) and drops
+    * them. Both tiers take their seeds from the rule (the in-process
+    * mask and the distributed `seed` column), so they cannot drift.
+    *
+    * Arithmetic, in EXACT INTEGER QUANTA of 10⁻¹² (the `q` column;
+    * score = q / 10¹²): init PR_Q div |S| on each seed and 0 elsewhere;
+    * each round q' = (PR_TELEPORT_Q div |S| on a seed, else 0) +
+    * (17·Σ(q div deg)) div 20 over the in-edges; stop at the first round
+    * whose max |q_k − q_{k−1}| ≤ max(1, PR_TOL_NUM_Q div |S|), fail loud
+    * past `cap`. Floor division on non-negative longs is bit-identical in
+    * every engine at ANY scale. This replaced the r8 round(double,12)
     * form after the round-9 sf1 oracle run caught it drifting ~7·10⁻¹²:
     * Spark's BigDecimal HALF_UP and DuckDB's multiply-round-divide
     * disagree on values an ulp from a .5 tie, and 50k nodes × ~20 rounds
     * of round() calls made a tie hit near-certain at sf1 while sf0.1
-    * stayed green. Integer floor has no ties to disagree on. */
-  private[graft] def prStepBody(pr: DataFrame, edges: DataFrame,
-      degn: DataFrame): DataFrame = {
-    val contrib = pr
-      .select(col("doc_id").as("src_id"), col("q"), col("deg"))
-      .join(edges, col("src_id") === edges("src"))
-      .select(edges("dst").as("doc_id"), expr("q div deg").as("c"))
-      .groupBy("doc_id").agg(sum("c").as("sc"))
-    degn.join(contrib, "doc_id")
-      .select(col("doc_id"), col("deg"), col("n"),
-        (expr(s"$PR_TELEPORT_Q div n")
-          + expr("(17 * sc) div 20")).as("q"))
-  }
-
-  /** The symmetrized graph: edge list + per-node degree/count table
-    * (symmetrizing means every node has degree ≥ 1 — no dangling-mass
-    * term).
-    *
-    * `p` is the pair list, already EAGERLY cut by the caller — the r11
-    * degreeAssortativity lesson: the union references the pairs twice
-    * inside the one job that materializes `edges`, so without the cut
-    * the whole upstream jaccardPairs build (scan → shingle window →
-    * pair self-join → aggregate) ran TWICE per q104/q158 invocation
-    * (round-16 StageProbe: two 7 s-cpuSum pair-agg stages). Eager, not
-    * lazy, because both branches sit in the same stage of the
-    * materializing job and a lazy persist lets their tasks race-compute
-    * the same source partitions (the measured degreeAssortativity A/B).
-    * The in-process tier's gate reads the same cut, so the pairs are
-    * materialized once whichever tier runs. */
-  private[graft] def prGraph(p: DataFrame): (DataFrame, DataFrame) = {
-    val edges = p.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(p.select(col("v").as("src"), col("u").as("dst")))
-      .cut(false)
-    val deg0 = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val degn = deg0
-      .crossJoin(broadcast(deg0.agg(count(lit(1)).as("n"))))
-      .select(col("src").as("doc_id"), col("deg"), col("n"))
-      .cut(false) // reused every iteration AND by the output
-    (edges, degn)
-  }
-
-  private[graft] def prInit(degn: DataFrame): DataFrame =
-    degn.select(col("doc_id"), col("deg"), col("n"),
-      expr(s"$PR_Q div n").as("q"))
-
-  /** Fixed-iteration damped PageRank — the unit-testable step semantics
-    * (PipelineOpsSpec pins it against an independent local model). */
-  private[graft] def pageRank(pairs: DataFrame, iters: Int): DataFrame = {
-    val (edges, degn) = prGraph(pairs.cut())
-    var pr = prInit(degn)
-    for (_ <- 1 to iters) pr = prStepBody(pr, edges, degn).cut(false)
-    pr
-  }
-
-  /** Convergence-based damped PageRank (VERDICT r7 #6): iterate until the
-    * max quanta movement drops under the integer tolerance
-    * PR_TOL_NUM_Q div n (~0.1% of the uniform score), fail loud at
-    * PR_CAP — the Components `sig()` fixpoint discipline (1-row driver
-    * check per round, a lazy cut keeps each round one job)
-    * instead of a blind unrolled count. The stop rule is a deterministic
-    * function of the (engine-identical) integer iterates, so the DuckDB
-    * oracle reaches the SAME iteration by computing every round's delta
-    * and selecting the first one under the same integer tolerance — no
-    * recursion. An EXACT fixpoint stop would not terminate: the
-    * quantized iteration settles into a few-quanta oscillation, which
-    * is why the tolerance is relative and ≫ 1 quantum (max(1, …) guards
-    * a pathological n > PR_TOL_NUM_Q where the floor would reach 0).
+    * stayed green. Integer floor has no ties to disagree on. The stop
+    * rule is a deterministic function of the (engine-identical) integer
+    * iterates, so the DuckDB oracle reaches the SAME round by computing
+    * every round's delta and selecting the first one under the same
+    * tolerance — no recursion. An EXACT fixpoint stop would not
+    * terminate: the quantized iteration settles into a few-quanta
+    * oscillation, which is why the tolerance is relative and ≫ 1 quantum
+    * (max(1, …) guards a pathological |S| > PR_TOL_NUM_Q).
     *
     * Two tiers behind one gate: the pair list is cut once, and one
     * bounded collect (`LocalRank.collectBounded`) reads at most
     * `localMax` + 1 rows of that cut. If the whole list came back, the
-    * loop runs in the driver and returns a LocalRelation (the in-process
-    * tier, [[LocalRank]]); otherwise `prGraph` + [[converge2]] run over
-    * the same cut (the distributed tier, one extra job for the gate).
-    * The tiers' iterates, stop round and cap failure are bit-identical;
-    * `localMax` = 0 forces the distributed tier. A LocalRelation pair
-    * list (the in-process `jaccardPairs` tier's) is neither cut nor read
-    * by a job, so q104 builds with the pair-list gate as its only job. */
-  private[graft] def pageRankConverged(pairs: DataFrame,
-      cap: Int = PR_CAP,
-      unroll: Int = ConvergeUnroll,
-      localMax: Int = LocalRank.LocalMaxPairs): DataFrame = {
+    * walk runs in the driver and returns a LocalRelation (the in-process
+    * tier, [[LocalRank]]); otherwise the symmetrized graph and
+    * [[converge2]] run over the same cut (the distributed tier, one
+    * extra job for the gate). The tiers' iterates, stop round and cap
+    * failure are bit-identical; `localMax` = 0 forces the distributed
+    * tier. A LocalRelation pair list (the in-process `jaccardPairs`
+    * tier's) is neither cut nor read by a job, so q104 builds with the
+    * pair-list gate as its only job.
+    *
+    * Distributed graph: both directions of every pair (symmetrizing
+    * means every node has degree ≥ 1 — no dangling-mass term) and one
+    * node table of doc_id, deg, n, seed and ns. The cut of `pairs` is
+    * what the union reads twice — the r11 degreeAssortativity lesson:
+    * without it the whole upstream jaccardPairs build ran TWICE per
+    * q104/q158 invocation (round-16 StageProbe: two 7 s-cpuSum pair-agg
+    * stages); eager, not lazy, because both branches sit in the same
+    * stage of the materializing job and a lazy persist lets their tasks
+    * race-compute the same source partitions. Each round joins the
+    * contributions back to the node table with an INNER join, which
+    * drops no node: every node has a neighbor, and a neighbor still at
+    * q = 0 (before the seeds' wave reaches it) sends a 0 row, not none.
+    * An outer join would keep the node table from being the broadcast
+    * side: forced q104 at sf0.1 (local[4]) ran 48 more construction
+    * jobs with one.
+    * A seedless graph fails loud: with |S| = 0 the teleport vector is
+    * undefined, and the all-zero fixpoint would look like a result. */
+  private def seededWalk(pairs: DataFrame, seedMod: Option[Long], cap: Int,
+      unroll: Int, localMax: Int, tag: String): DataFrame = {
     val p = pairs.cut()
     LocalRank.collectBounded(p, localMax) match {
       case Some(rows) =>
         val g = new LocalRank.Graph(rows)
-        g.frame(p, g.converge(g.ids.map(_ => true), cap, "pr"))
+        val seed = g.ids.map(id => seedMod.forall(Math.floorMod(id, _) == 0L))
+        if (g.ids.nonEmpty && !seed.contains(true)) throw noSeeds()
+        g.frame(p, g.converge(seed, cap, tag), seedMod.map(_ => seed))
       case None =>
-        val (edges, degn) = prGraph(p)
-        val n = degn.select(col("n")).head().getLong(0) // p is non-empty
-        val tolQ = math.max(1L, PR_TOL_NUM_Q / n)
-        converge2(prInit(degn), prStepBody(_, edges, degn), tolQ, cap, "pr",
-          unroll, n)
+        val edges = p.select(col("u").as("src"), col("v").as("dst"))
+          .unionByName(p.select(col("v").as("src"), col("u").as("dst")))
+          .cut(false)
+        val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+          .select(col("src").as("doc_id"), col("deg"), seedMod.fold(lit(1L))(
+            m => (pmod(col("src"), lit(m)) === 0).cast("long")).as("seed"))
+        val nodes = deg
+          .crossJoin(broadcast(
+            deg.agg(count(lit(1)).as("n"), sum("seed").as("ns"))))
+          .select("doc_id", "deg", "n", "seed", "ns")
+          .cut(false) // reused every round AND by the output
+        val head = nodes.select(col("n"), col("ns")).head() // p is non-empty
+        val ns = head.getLong(1)
+        if (ns == 0L) throw noSeeds()
+        val init = nodes.withColumn("q",
+          expr(s"CASE WHEN seed = 1 THEN $PR_Q div ns ELSE 0L END"))
+        def step(pr: DataFrame): DataFrame = {
+          val contrib = pr
+            .select(col("doc_id").as("src_id"), col("q"), col("deg"))
+            .join(edges, col("src_id") === edges("src"))
+            .select(edges("dst").as("doc_id"), expr("q div deg").as("c"))
+            .groupBy("doc_id").agg(sum("c").as("sc"))
+          nodes.join(contrib, "doc_id")
+            .select(col("doc_id"), col("deg"), col("n"), col("seed"),
+              col("ns"),
+              (expr(s"CASE WHEN seed = 1 THEN $PR_TELEPORT_Q div ns ELSE 0 END")
+                + expr("(17 * sc) div 20")).as("q"))
+        }
+        val out = converge2(init, step, math.max(1L, PR_TOL_NUM_Q / ns), cap,
+          tag, unroll, head.getLong(0))
+        if (seedMod.isEmpty) out.drop("seed", "ns") else out
     }
   }
 
@@ -2199,12 +2213,12 @@ object TextOps {
     * threads checkpoints loop state; their clamped estimates keep each
     * job's plan the same size at any round depth.
     *
-    * This is the DISTRIBUTED tier of q104/q158: their builders run it
-    * only when the gate found more than `localMax` pairs; smaller graphs
-    * take the in-process twin `LocalRank.Graph.converge`, which repeats
-    * this loop's arithmetic, stop rule and cap failure in the driver.
-    * Both tiers log one INFO line per loop ([[logConverged]]), the only
-    * use of `nodes`. */
+    * Its one caller is the distributed tier of [[seededWalk]] (q104 and
+    * q158), which runs it only when the gate found more than `localMax`
+    * pairs; smaller graphs take the in-process tier,
+    * `LocalRank.Graph.converge`, the same walk over dense arrays with
+    * the same arithmetic, stop rule and cap failure. Both tiers log one
+    * INFO line per loop ([[logConverged]]), the only use of `nodes`. */
   private def converge2(init: DataFrame, stepBody: DataFrame => DataFrame,
       tolQ: Long, cap: Int, tag: String, unroll: Int,
       nodes: Long): DataFrame = {
@@ -2275,78 +2289,6 @@ object TextOps {
   private def noSeeds(): IllegalStateException = new IllegalStateException(
     s"personalized pagerank: no seed nodes (doc_id % $PPR_SEED_MOD == 0) " +
       "in the similarity graph — the teleport vector is undefined")
-
-  /** q158: the PPR node table — prGraph's degn extended with the seed
-    * indicator and the (broadcast) seed count. Fails loud on a seedless
-    * graph: with |S| = 0 the teleport vector is undefined, and silently
-    * returning the all-zero fixpoint would look like a result. */
-  private def pprGraph(p: DataFrame): (DataFrame, DataFrame) = {
-    val (edges, degn) = prGraph(p)
-    val seeded = degn.withColumn("seed",
-      (pmod(col("doc_id"), lit(PPR_SEED_MOD)) === 0).cast("long"))
-    val degns = seeded
-      .crossJoin(broadcast(seeded.agg(sum("seed").as("ns"))))
-      .cut(false) // reused every round AND by the output
-    (edges, degns)
-  }
-
-  /** One PPR iteration in the q104 integer quanta: teleport mass lands
-    * ONLY on seeds ((0.15·10¹²) div |S| each); the contribution term is
-    * identical to prStepBody except the join back to the node table is LEFT
-    * (pre-convergence, nodes beyond wave k have q = 0 and a node whose
-    * whole neighborhood is still at 0 receives no contribution rows —
-    * q104's uniform init never has this frontier). */
-  private def pprStepBody(pr: DataFrame, edges: DataFrame,
-      degns: DataFrame): DataFrame = {
-    val contrib = pr
-      .select(col("doc_id").as("src_id"), col("q"), col("deg"))
-      .join(edges, col("src_id") === edges("src"))
-      .select(edges("dst").as("doc_id"), expr("q div deg").as("c"))
-      .groupBy("doc_id").agg(sum("c").as("sc"))
-    degns.join(contrib, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("deg"), col("n"), col("seed"), col("ns"),
-        (expr(s"CASE WHEN seed = 1 THEN $PR_TELEPORT_Q div ns ELSE 0 END")
-          + expr("(17 * coalesce(sc, 0L)) div 20")).as("q"))
-  }
-
-  /** Convergence-based PPR — q104's loop discipline verbatim (carried
-    * prev, one action per job, lazy cuts, fail-loud cap), over the seeded teleport vector, behind the same
-    * two-tier gate as [[pageRankConverged]]. */
-  private[graft] def pprConverged(pairs: DataFrame,
-      cap: Int = PPR_CAP,
-      unroll: Int = ConvergeUnroll,
-      localMax: Int = LocalRank.LocalMaxPairs): DataFrame = {
-    val p = pairs.cut()
-    LocalRank.collectBounded(p, localMax) match {
-      case Some(rows) =>
-        val g = new LocalRank.Graph(rows)
-        val seed = g.ids.map(id => Math.floorMod(id, PPR_SEED_MOD) == 0L)
-        if (g.ids.nonEmpty && !seed.contains(true)) throw noSeeds()
-        g.frame(p, g.converge(seed, cap, "ppr"), Some(seed))
-      case None => pprDistributed(p, cap, unroll)
-    }
-  }
-
-  private def pprDistributed(p: DataFrame, cap: Int, unroll: Int): DataFrame = {
-    val (edges, degns) = pprGraph(p)
-    val head = degns.select(col("n"), col("ns")).head() // p is non-empty
-    val pr = degns.select(col("doc_id"), col("deg"), col("n"),
-      col("seed"), col("ns"),
-      expr(s"CASE WHEN seed = 1 THEN $PR_Q div ns ELSE 0L END").as("q"))
-    if (head.getLong(1) == 0L) throw noSeeds()
-    // Tolerance relative to the PER-SEED mass scale 1/|S|, not q104's
-    // uniform 1/n: PPR scores concentrate near the seed set (a typical
-    // seed holds ~0.15/|S| at the fixpoint), so 1/n-relative stopping
-    // would demand |S|/n× more precision than the scores carry — and
-    // since Δ₀ ≈ 1/|S| too, it would cost ~log(n/|S|)/log(1/0.85) EXTRA
-    // rounds at every scale (measured: 57 rounds vs 42 at sf0.01; ~99 —
-    // past any reasonable cap — at sf1's n/|S| ≈ 10 with n = 52k).
-    // 1/|S|-relative keeps both the relative precision AND the round
-    // count scale-stable (mixing-bound, like q104's).
-    val tolQ = math.max(1L, PR_TOL_NUM_Q / head.getLong(1))
-    converge2(pr, pprStepBody(_, edges, degns), tolQ, cap, "ppr",
-      unroll, head.getLong(0))
-  }
 
   /** q29/q65 shared CTE chain: df-capped exact-Jaccard pairs, ending in
     * `jpairs(da, db, jaccard)` — the SQL twin of `jaccardPairs`. */
@@ -3451,9 +3393,10 @@ object TextOps {
 
     // q104's unrolled-convergence oracle with the PPR deltas: the degn
     // CTE carries the seed flag and |S|, teleport is seed-gated, the
-    // per-round rejoin is LEFT (zero-frontier nodes receive no
-    // contribution rows pre-convergence), and the unroll depth is
-    // PPR_CAP — same first-round-under-tolerance selection.
+    // per-round rejoin is LEFT (the same rows as the engine's inner
+    // join: every node has a neighbor, so every node gets a contribution
+    // row), and the unroll depth is PPR_CAP — same
+    // first-round-under-tolerance selection.
     "q158_personalized_pagerank" -> {
       val iterCtes = (1 to PPR_CAP).map { i =>
         s"""c$i AS (

@@ -1,10 +1,11 @@
 package graft
 
+import java.io.File
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.BuildOnceMemo
+import graft.queries.{BuildOnceMemo, Sinks, TextOps}
 
 /** Pins the BuildOnceMemo concurrency contract (VERDICT r12 "what's
   * wrong" #3): a first-touch race must run the build EXACTLY once. The
@@ -16,33 +17,51 @@ import graft.queries.BuildOnceMemo
 class BuildOnceMemoSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
-  test("concurrent first touch builds exactly once, all callers share it") {
-    val memo = new BuildOnceMemo[String]("memospec")
-    val builds = new AtomicInteger(0)
-    val n = 8
+  /** `body` run on `n` threads released at once; their results. */
+  private def race[A](n: Int)(body: => A): Seq[A] = {
     val ready = new CountDownLatch(n)
     val go = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(n)
     try {
       val futs = (1 to n).map { _ =>
-        pool.submit(new java.util.concurrent.Callable[String] {
-          def call(): String = {
-            ready.countDown(); go.await()
-            memo.getOrBuild(s, "/dev/null/same-dir") {
-              // deliberately slow build so racers overlap the window
-              Thread.sleep(50)
-              s"artifact-${builds.incrementAndGet()}"
-            }
-          }
+        pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = { ready.countDown(); go.await(); body }
         })
       }
       assert(ready.await(10, TimeUnit.SECONDS))
       go.countDown()
-      val results = futs.map(_.get(30, TimeUnit.SECONDS))
-      assert(builds.get() === 1, "build ran more than once under the race")
-      assert(results.distinct === Seq("artifact-1"),
-        "some caller observed a non-winning artifact")
+      futs.map(_.get(30, TimeUnit.SECONDS))
     } finally pool.shutdownNow()
+  }
+
+  test("concurrent first touch builds exactly once, all callers share it") {
+    val memo = new BuildOnceMemo[String]("memospec")
+    val builds = new AtomicInteger(0)
+    val results = race(8) {
+      memo.getOrBuild(s, "/dev/null/same-dir") {
+        // deliberately slow build so racers overlap the window
+        Thread.sleep(50)
+        s"artifact-${builds.incrementAndGet()}"
+      }
+    }
+    assert(builds.get() === 1, "build ran more than once under the race")
+    assert(results.distinct === Seq("artifact-1"),
+      "some caller observed a non-winning artifact")
+  }
+
+  test("q114: eight concurrent first builds on one session write one index") {
+    // a fresh session: the memo has no index for it whatever ran before
+    val session = s.newSession()
+    val dir = "/root/testdata/sf0.001"
+    val base = new File(Sinks.runPaths.path("graft_simhash_index"))
+    val prefix = base.getName + "_" + Integer.toHexString(dir.hashCode) + "_"
+    def indexes(): Set[String] =
+      Option(base.getParentFile.list()).getOrElse(Array.empty[String])
+        .filter(_.startsWith(prefix)).toSet
+    val before = indexes()
+    race(8)(TextOps.queries("q114_incremental_dedup")(session, dir))
+    val made = indexes() -- before
+    assert(made.size === 1, s"index dirs written: $made")
   }
 
   test("distinct dirs build independently; repeat access hits the memo") {

@@ -12,7 +12,7 @@ import graft.queries.{Lineage, RunPaths, Sinks}
   * blocks, non-recoverable). The spec exercises the reliable path — cut
   * results equal the uncut frame, checkpoint files actually land in the
   * configured dir, and a real multi-cut query path (q104, plus its
-  * forced distributed tier's prGraph chain) runs green under the flag — and pins the default-off identity
+  * forced distributed tier's graph and walk) runs green under the flag — and pins the default-off identity
   * with localCheckpoint semantics (plan truncated to a LogicalRDD-backed
   * frame either way). */
 class LineageSpec extends AnyFunSuite {

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{EventOps, Relational, ScaleOps, TextOps}
+import graft.queries.{EventOps, LocalRank, Relational, ScaleOps, TextOps}
 
 /** Invariants and independent local models for the late-r6 pipeline
   * operators (q103–q108) — the properties the DuckDB oracles share code
@@ -49,22 +49,29 @@ class PipelineOpsSpec extends AnyFunSuite {
     * quanta the engine uses (q = pr·1e12; floor division — the r9 form
     * that replaced decimal rounding after the sf1 oracle caught its
     * cross-engine half-tie drift): symmetrize, then iterate
-    * q' = (0.15·1e12 div n) + (17·Σ(q div deg)) div 20. Exact, so the
-    * spec compares with ==, not a tolerance. */
-  private def localPageRank(pairs: Seq[(Long, Long)], iters: Int)
-      : Map[Long, Long] = {
+    * q' = (0.15·1e12 div n) + (17·Σ(q div deg)) div 20 up to the first
+    * round whose max |Δ| ≤ max(1, 1e9 div n). Exact, so the spec
+    * compares with ==, not a tolerance. */
+  private def localPageRank(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val edges = pairs.flatMap { case (u, v) => Seq(u -> v, v -> u) }
     val out = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val n = out.size
+    val tol = math.max(1L, 1000000000L / n)
     var q = out.keys.map(k => k -> 1000000000000L / n).toMap
-    for (_ <- 1 to iters) {
+    var delta = Long.MaxValue
+    var round = 0
+    while (delta > tol) {
+      round += 1
+      assert(round <= TextOps.PR_CAP, "the model did not converge")
       val contrib = edges
         .map { case (src, dst) => dst -> q(src) / out(src).size }
         .groupBy(_._1).view
         .mapValues(_.map(_._2).sum)
         .toMap
-      q = q.keys.map(k =>
+      val next = q.keys.map(k =>
         k -> (150000000000L / n + 17L * contrib(k) / 20L)).toMap
+      delta = q.keys.map(k => math.abs(next(k) - q(k))).max
+      q = next
     }
     q
   }
@@ -74,16 +81,19 @@ class PipelineOpsSpec extends AnyFunSuite {
     // triangle {1,2,3} with a pendant 4 — asymmetric degrees
     val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
     val df = pairs.toDF("u", "v")
-    val got = TextOps.pageRank(df, 6)
-      .select("doc_id", "q").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = localPageRank(pairs, 6)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (k, v) =>
-      assert(v == want(k), s"node $k: $v vs ${want(k)}")
+    val want = localPageRank(pairs)
+    // both tiers: 0 forces the distributed loop
+    for (localMax <- Seq(0, LocalRank.LocalMaxPairs)) {
+      val got = TextOps.pageRankConverged(df, localMax = localMax)
+        .select("doc_id", "q").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.keySet == want.keySet, s"localMax $localMax")
+      got.foreach { case (k, v) =>
+        assert(v == want(k), s"localMax $localMax, node $k: $v vs ${want(k)}")
+      }
+      // the pendant's sole neighbor is the hub
+      assert(got(3L) > got(1L) && got(1L) == got(2L) && got(4L) < got(1L))
     }
-    // the pendant's sole neighbor is the hub
-    assert(got(3L) > got(1L) && got(1L) == got(2L) && got(4L) < got(1L))
   }
 
   test("q104: probability mass is conserved across iterations") {
