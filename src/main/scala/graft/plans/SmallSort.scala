@@ -1,27 +1,44 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join,
+  LogicalPlan, Project, Repartition, ResolvedHint, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan,
   SparkStrategy}
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.internal.SQLConf
 
 /** Sorts a small batch result in one task. Spark plans every global
   * `orderBy` as a range exchange: a RangePartitioner sampling job (which
   * re-runs the child just to pick bounds), a map job writing the
   * exchange, then the sorting result job. On this catalog's tiny results
-  * (14 blob summaries, 37 kernel taps, a 55-row PageRank table) those
-  * jobs are the whole cost, not the data.
+  * (14 blob summaries, 37 kernel taps, a 55-row PageRank table, q45's
+  * 57,344 grid cells) those jobs are the whole cost, not the data.
   *
-  * A global Sort over a non-streaming child whose estimated size is at
-  * most `spark.sql.autoBroadcastJoinThreshold` — the conf Spark already
-  * uses to decide a relation is small enough to ship whole to one place
-  * (≤ 0 turns this off too) — plans as
+  * A global Sort over a non-streaming child that is small plans as
   * `SortExec(global) ← CoalesceExec(1) ← child`. SinglePartition
   * satisfies the sort's OrderedDistribution, so EnsureRequirements adds
   * no exchange and nothing samples. Every other sort falls through to
   * Spark's BasicOperators. The coalesce is narrow, so the child's last
-  * stage runs in that one task as well; under AQE the rule also sees the
-  * runtime sizes of materialized stages, as join selection does.
+  * stage runs in that one task as well.
+  *
+  * Small means at most `spark.sql.autoBroadcastJoinThreshold`, the conf
+  * Spark already uses to decide a relation is small enough to ship whole
+  * to one place (≤ 0 turns this off too), by either of two tests:
+  *  - the child's estimated size. Under AQE this is the runtime size of a
+  *    materialized stage, as join selection sees it.
+  *  - when the estimate carries no row count (Spark's guess, not a
+  *    measurement): an upper bound on the child's rows ([[rowBound]])
+  *    times the default width of its output row. Spark sizes a join as
+  *    the product of its sides' bytes, so q45's grid join (4,096 cells ×
+  *    14 blobs, joined to one row of vertex arrays per blob) estimates at
+  *    47 MB, then 11.9 TB once its two broadcasts have run; its bound is
+  *    57,344 rows × 33 B ≈ 1.9 MB. A runtime row count is not used this
+  *    way, because the default width of a string underestimates wide
+  *    rows.
   *
   * So a small result must not sit on heavy narrow work. A variant of q46
   * that folded its tiles per blob inside the tile tasks, with no shuffle
@@ -29,7 +46,8 @@ import org.apache.spark.sql.internal.SQLConf
   * instead of one per core (median warm execution on local[4]:
   * 0.26–0.27 s → 0.39–0.47 s). q46 keeps its shuffle fold, and
   * FullScaleGoldenSpec pins its tile stage at min(98,
-  * defaultParallelism) tasks.
+  * defaultParallelism) tasks. q45's 64² point-in-polygon pass is light
+  * enough to run in the sort's task.
   *
   * Injected via GraftExtensions (and ensureRegistered for sessions built
   * without the extensions conf). */
@@ -42,6 +60,41 @@ object SmallSortStrategy extends SparkStrategy {
 
   private def small(child: LogicalPlan): Boolean = {
     val threshold = SQLConf.get.autoBroadcastJoinThreshold
-    threshold > 0 && child.stats.sizeInBytes <= threshold
+    val stats = child.stats
+    threshold > 0 && (stats.sizeInBytes <= threshold ||
+      stats.rowCount.isEmpty && rowBound(child).exists(
+        _ * EstimationUtils.getSizePerRow(child.output) <= threshold))
+  }
+
+  /** An upper bound on the rows of `p`, if one is known: the least of
+    * Spark's `maxRows` and a bound that also sees through joins. A
+    * projection, filter, repartition, hint or aggregate has at most its
+    * child's rows; an inner or cross join at most the product of its
+    * sides'; an inner equi-join whose other side is unique on its join
+    * keys at most the first side's. */
+  private def rowBound(p: LogicalPlan): Option[BigInt] = {
+    val derived = p match {
+      case _: Project | _: Filter | _: Repartition | _: ResolvedHint |
+          _: Aggregate =>
+        rowBound(p.children.head)
+      case ExtractEquiJoinKeys(Inner, _, rk, _, _, l, r, _) if unique(r, rk) =>
+        rowBound(l)
+      case ExtractEquiJoinKeys(Inner, lk, _, _, _, l, r, _) if unique(l, lk) =>
+        rowBound(r)
+      case Join(l, r, Inner | Cross, _, _) =>
+        for (a <- rowBound(l); b <- rowBound(r)) yield a * b
+      case _ => None
+    }
+    (derived ++ p.maxRows.map(BigInt(_))).minOption
+  }
+
+  /** Whether no two rows of `side` share a value of `keys`. A query stage
+    * reports no distinct keys of its own, so read its logical plan's. */
+  private def unique(side: LogicalPlan, keys: Seq[Expression]): Boolean = {
+    val distinct = side match {
+      case q: LogicalQueryStage => q.logicalPlan.distinctKeys
+      case _ => side.distinctKeys
+    }
+    distinct.exists(_.subsetOf(ExpressionSet(keys)))
   }
 }

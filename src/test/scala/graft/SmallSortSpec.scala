@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.SmallSortStrategy
@@ -12,8 +15,10 @@ import graft.plans.SmallSortStrategy
 /** SmallSortStrategy: a global sort whose input Spark would broadcast
   * plans as one task (`Sort [...], true` over `Coalesce 1`), with no
   * range exchange and no sampling job, and returns the same rows in the
-  * same order as Spark's range-partitioned sort. Larger inputs, a
-  * disabled threshold and streaming sorts keep Spark's plan. */
+  * same order as Spark's range-partitioned sort. An input is small by
+  * its estimated size, or, when that estimate has no row count, by a
+  * bound on its rows that sees through joins. Larger inputs, a disabled
+  * threshold and streaming sorts keep Spark's plan. */
 class SmallSortSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
@@ -30,6 +35,15 @@ class SmallSortSpec extends AnyFunSuite {
 
   private def ranged(df: Dataset[_]): Boolean =
     plan(df).contains("rangepartitioning")
+
+  /** Whether the plan that ran, the final one of an adaptive plan that
+    * has been executed, sorts through a range exchange. */
+  private def ranRanged(df: Dataset[_]): Boolean = {
+    val p = plan(df)
+    assert(p.contains("isFinalPlan=true"), p)
+    df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+      .executedPlan.toString.contains("rangepartitioning")
+  }
 
   /** 700 rows over 7 partitions: `k` has many duplicates and nulls, `d`
     * some nulls, `id` is unique and breaks every tie. */
@@ -82,6 +96,79 @@ class SmallSortSpec extends AnyFunSuite {
       assert(ranged(s.range(0, 10000, 1, 7).orderBy(col("id").desc)))
       assert(!ranged(s.range(0, 100, 1, 7).orderBy(col("id").desc)))
     }
+  }
+
+  test("a cross join estimated over the threshold but bounded under it " +
+      "sorts in one task") {
+    import s.implicits._
+    // Spark sizes the join as 320000 B × 60 B = 19.2 MB; its rows are at
+    // most 20000 × 5 = 100000, × 28 B each = 2.8 MB.
+    def sorted = s.range(0, 20000, 1, 4)
+      .crossJoin(Seq(1, 2, 3, 4, 5).toDF("m"))
+      .select(col("id"), col("m"), (col("id") * col("m") % 7).as("r"))
+      .orderBy(col("r"), col("id").desc, col("m"))
+    val on = sorted
+    assert(on.queryExecution.optimizedPlan.stats.sizeInBytes >
+      s.sessionState.conf.autoBroadcastJoinThreshold)
+    assert(!ranged(on), plan(on))
+    val off = withThreshold("-1") {
+      val df = sorted
+      assert(ranged(df))
+      df.collect().toSeq
+    }
+    assert(on.collect().toSeq === off)
+  }
+
+  test("q45's shape: a grid joined to a grouped broadcast side sorts in " +
+      "one task, in 3 jobs") {
+    val dir = TestSpark.tempDir("smallsort_params").toString
+    s.range(0, 14, 1, 1).select(col("id").as("k"), (col("id") * 3).as("v"))
+      .write.mode("overwrite").parquet(dir)
+    // a file scan has no row bound until its broadcast stage has run
+    def params = s.read.schema("k long, v long").parquet(dir).coalesce(1)
+    val df = s.range(0, 4096, 1, 4)
+      .join(broadcast(params.select("k")))
+      .join(broadcast(params.groupBy("k").agg(sum("v").as("sv"))), "k")
+      .select(col("k"), col("id"), (col("id") + col("sv")).as("w"))
+      .orderBy("k", "id")
+    assert(ranged(df), "the first plan has no row bound")
+    var rows = Array.empty[Row]
+    assert(TestSpark.jobsOf { rows = df.collect() } === 3)
+    assert(!ranRanged(df), plan(df))
+    assert(plan(df).contains("Coalesce 1"), plan(df))
+    assert(rows.toSeq === (for (k <- 0L until 14L; id <- 0L until 4096L)
+      yield Row(k, id, id + 3 * k)))
+  }
+
+  test("a join whose other side repeats its keys keeps RangePartitioning") {
+    import s.implicits._
+    withThreshold("100000") {
+      // each k twice on the broadcast side, so the bound is the product:
+      // 2000 × 20 rows × 28 B = 1.1 MB
+      val dup = (0 until 20).map(i => (i % 10L, i)).toDF("k", "v")
+      val grid = s.range(0, 2000, 1, 4)
+        .select((col("id") % 10).as("k"), col("id"))
+      val df = grid.join(broadcast(dup), "k").orderBy("k", "id", "v")
+      assert(df.collect().length === 4000)
+      assert(ranRanged(df), plan(df))
+    }
+  }
+
+  test("a runtime size over the threshold keeps RangePartitioning") {
+    // 50000 rows of 1 KB strings: × 36 B of default row width they are
+    // 1.8 MB, but the repartition stage writes about 50 MB. An RDD source
+    // has no size estimate, so the first plan is ranged; once the stage
+    // has run, its runtime size decides, not its row count.
+    val rdd = s.sparkContext.range(0, 50000, 1, 4).map { i =>
+      val r = new scala.util.Random(i)
+      Row(i, r.alphanumeric.take(1024).mkString)
+    }
+    val schema = StructType(Seq(StructField("id", LongType, false),
+      StructField("s", StringType, false)))
+    val df = s.createDataFrame(rdd, schema).repartition(4)
+      .orderBy(col("s"), col("id")).select(col("id"))
+    assert(df.collect().length === 50000)
+    assert(ranRanged(df), plan(df))
   }
 
   test("a threshold of -1 disables the rule") {
