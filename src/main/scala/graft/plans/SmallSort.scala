@@ -15,8 +15,8 @@ import org.apache.spark.sql.internal.SQLConf
   * `orderBy` as a range exchange: a RangePartitioner sampling job (which
   * re-runs the child just to pick bounds), a map job writing the
   * exchange, then the sorting result job. On this catalog's tiny results
-  * (14 blob summaries, 37 kernel taps, a 55-row PageRank table, q45's
-  * 57,344 grid cells) those jobs are the whole cost, not the data.
+  * (14 blob summaries, 37 kernel taps, a 55-row PageRank table, q17's
+  * 57,344 parity-join cells) those jobs are the whole cost, not the data.
   *
   * A global Sort over a non-streaming child that is small plans as
   * `SortExec(global) ← CoalesceExec(1) ← child`. SinglePartition
@@ -33,12 +33,12 @@ import org.apache.spark.sql.internal.SQLConf
   *  - when the estimate carries no row count (Spark's guess, not a
   *    measurement): an upper bound on the child's rows ([[rowBound]])
   *    times the default width of its output row. Spark sizes a join as
-  *    the product of its sides' bytes, so q45's grid join (4,096 cells ×
-  *    14 blobs, joined to one row of vertex arrays per blob) estimates at
-  *    47 MB, then 11.9 TB once its two broadcasts have run; its bound is
-  *    57,344 rows × 33 B ≈ 1.9 MB. A runtime row count is not used this
-  *    way, because the default width of a string underestimates wide
-  *    rows.
+  *    the product of its sides' bytes, so a 4,096-row range crossed
+  *    with 14 broadcast rows, then joined to one row per key (the grid
+  *    shape SmallSortSpec pins, q45's former plan), estimates far over
+  *    the threshold once its broadcasts have run; its bound is 57,344
+  *    rows × 32 B ≈ 1.8 MB. A runtime row count is not used this way,
+  *    because the default width of a string underestimates wide rows.
   *
   * So a small result must not sit on heavy narrow work. A variant of q46
   * that folded its tiles per blob inside the tile tasks, with no shuffle
@@ -46,8 +46,12 @@ import org.apache.spark.sql.internal.SQLConf
   * instead of one per core (median warm execution on local[4]:
   * 0.26–0.27 s → 0.39–0.47 s). q46 keeps its shuffle fold, and
   * FullScaleGoldenSpec pins its tile stage at min(98,
-  * defaultParallelism) tasks. q45's 64² point-in-polygon pass is light
-  * enough to run in the sort's task.
+  * defaultParallelism) tasks. The 64-grid queries that sort their cells
+  * (q15, q18–q22, q45) run in one task with or without this rule:
+  * `Poster.grid` is one partition, so the sort's child is
+  * SinglePartition already and Spark's own sort adds no exchange. q17
+  * spreads its 16M-row parity join over the cores, and the rule then
+  * sorts its 57,344 aggregated cells in one task.
   *
   * Injected via GraftExtensions (and ensureRegistered for sessions built
   * without the extensions conf). */

@@ -22,12 +22,13 @@ import org.apache.spark.sql.types._
   * blur convolutions — where summation order differs between engines) are
   * rounded at the output boundary.
   *
-  * Scale stance (the 100 TB posture): the grid is a crossJoin of dimension
-  * ranges against a 14-row params table — at scale the params/edges side
-  * stays broadcastable (it is the "query", cells are the data); the parity
-  * join broadcasts 3,920 edges and partially aggregates map-side, so the
-  * only shuffle carries one row per output cell, never the 280× edge
-  * fan-out. Blur is the bounded-frame neighbor join (kernel dim table
+  * Scale stance (the 100 TB posture): the grid expands each of the 14
+  * params rows into its cells; q17's parity join streams them from a
+  * range against the broadcast params instead — at scale the params/edges
+  * side stays broadcastable (it is the "query", cells are the data); the
+  * parity join broadcasts 3,920 edges and partially aggregates map-side,
+  * so the only shuffle carries one row per output cell, never the 280×
+  * edge fan-out. Blur is the bounded-frame neighbor join (kernel dim table
   * broadcast, A6/J5); compositing is max_by, one shuffle on the canvas
   * cell key. Nothing collects to the driver.
   */
@@ -107,7 +108,14 @@ object Poster {
     * small file, so its scan is one input partition already; the
     * coalesce(1) only tells the planner so (SinglePartition). A group-by
     * or window over a fixture then plans no exchange (vertArrays, edges,
-    * q18's vertex stats), which saves the shuffle's map job. */
+    * q18's vertex stats), which saves the shuffle's map job.
+    *
+    * Nor does a join of two fixtures, or of a fixture and the grid built
+    * from one, need a broadcast: SinglePartition satisfies a shuffled
+    * join's clustering on both sides, so with a `shuffle_hash` hint the
+    * hash join runs inside their one task (q14, q45, q79). `broadcast(...)` there would add a job that only
+    * ships the small side. Broadcast a fixture only when the other side
+    * is spread over many partitions, as q17's grid and the canvas are. */
   private[queries] def fx(s: SparkSession, name: String,
       cfg: PosterCfg = Default): DataFrame = {
     // Defensive native-function registration — the session may not have
@@ -125,21 +133,46 @@ object Poster {
   /** J1: the grid constructor — per-blob padded-bbox raster, explicit-step
     * linspace `lo + i*step, step=(hi-lo)/(n-1)` (app.py:39-43 recast).
     *
-    * Partitioning: the n² range is the STREAMED side (spark.range splits
-    * it across all cores) and the 14-row params table is broadcast — the
-    * other way round would funnel every downstream cell computation
-    * through the params file's single input partition. */
+    * Each blob's bounds row expands to its n² cells (an explode of the
+    * row-major cell index), so the grid is one partition, like the
+    * fixture it comes from, and building it runs no job. */
   private[queries] def grid(s: SparkSession, n: Int,
       cfg: PosterCfg = Default): DataFrame =
+    bounds(s, cfg)
+      .select(col("*"), explode(sequence(lit(0L), lit(n.toLong * n - 1)))
+        .as("id"))
+      .select(col("*") +: cellXY(n): _*)
+      .select(cellCols(n): _*)
+
+  /** The cells of [[grid]], spread over every core: the n² range is the
+    * streamed side and the 14 bounds rows are broadcast, in a job of
+    * their own. Only q17 builds on it. Its parity join fans each cell out
+    * to its blob's ~280 edges (16M rows), which in the grid's one task
+    * runs about 1.7× slower per call on 4 cores. */
+  private def spreadGrid(s: SparkSession, n: Int): DataFrame =
     s.range(n.toLong * n)
-      .select((col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))
-      .join(broadcast(fx(s, "blob_params", cfg)
-        .select("blob_id", "xmin", "xmax", "ymin", "ymax")))
-      .select(col("blob_id"), col("y"), col("x"),
-        (col("xmin") + col("x").cast("double") *
-          ((col("xmax") - col("xmin")) / lit((n - 1).toDouble))).as("gx"),
-        (col("ymin") + col("y").cast("double") *
-          ((col("ymax") - col("ymin")) / lit((n - 1).toDouble))).as("gy"))
+      .select(cellXY(n): _*)
+      .join(broadcast(bounds(s)))
+      .select(cellCols(n): _*)
+
+  /** Each blob's padded bounding box, the grid's per-blob input. */
+  private def bounds(s: SparkSession, cfg: PosterCfg = Default): DataFrame =
+    fx(s, "blob_params", cfg).select("blob_id", "xmin", "xmax", "ymin", "ymax")
+
+  /** Cell (x, y) of an n×n raster at its row-major cell index `id`; both
+    * grid builders and the canvas index their cells through this. */
+  private def cellXY(n: Int): Seq[Column] =
+    Seq((col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))
+
+  /** A cell's (blob_id, y, x) and its linspace point (gx, gy) over its
+    * blob's [[bounds]]; both grid builders end in these columns, so they
+    * compute the same doubles. */
+  private def cellCols(n: Int): Seq[Column] = Seq(
+    col("blob_id"), col("y"), col("x"),
+    (col("xmin") + col("x").cast("double") *
+      ((col("xmax") - col("xmin")) / lit((n - 1).toDouble))).as("gx"),
+    (col("ymin") + col("y").cast("double") *
+      ((col("ymax") - col("ymin")) / lit((n - 1).toDouble))).as("gy"))
 
   /** W3: vertex list → closed edge list via lead() with wraparound
     * (app.py:62-64; the MOVETO/LINETO chain closes implicitly). */
@@ -272,7 +305,7 @@ object Poster {
   /** The common [0,1]² canvas raster (shared by compositing queries). */
   private def canvas(s: SparkSession): DataFrame =
     s.range(N.toLong * N)
-      .select((col("id") % N).as("x"), (col("id") / N).cast("long").as("y"))
+      .select(cellXY(N): _*)
       .select(col("y"), col("x"),
         (col("x").cast("double") / lit((N - 1).toDouble)).as("gx"),
         (col("y").cast("double") / lit((N - 1).toDouble)).as("gy"))
@@ -420,7 +453,8 @@ object Poster {
       val qq = col("v") * (lit(1.0) - col("s") * f)
       val tt = col("v") * (lit(1.0) - col("s") * (lit(1.0) - f))
       fx(s, "blob_params").select("blob_id")
-        .join(broadcast(fx(s, "palette")), pmod(col("blob_id"), lit(14)) === col("i"))
+        .join(fx(s, "palette").hint("shuffle_hash"),
+          pmod(col("blob_id"), lit(14)) === col("i"))
         .withColumn("sec", sector)
         .select(col("blob_id"), col("i"),
           when(col("sec") === 0, col("v")).when(col("sec") === 1, qq)
@@ -446,7 +480,7 @@ object Poster {
     // P18a: even-odd parity join — the reference's measured hot spot
     // (85% of its runtime, BASELINE.md).
     "q17_point_in_polygon" -> ((s, _) =>
-      inside(s, grid(s, N))
+      inside(s, spreadGrid(s, N))
         .select(col("blob_id"), col("y"), col("x"), col("inside"))
         .orderBy("blob_id", "y", "x")),
 
@@ -556,8 +590,8 @@ object Poster {
       val px = col("cx") + col("rr") * cos(col("angle"))
       val py = col("cy") + col("rr") * sin(col("angle"))
       fx(s, "blob_vertices")
-        .join(broadcast(fx(s, "blob_params").select("blob_id", "cx", "cy")),
-          "blob_id")
+        .join(fx(s, "blob_params").select("blob_id", "cx", "cy")
+          .hint("shuffle_hash"), "blob_id")
         .select(col("blob_id"), col("idx").cast("long").as("idx"),
           round(px, 6).as("px"), round(py, 6).as("py"),
           (round(px, 6) === round(col("x"), 6) &&

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark job budgets from `job_budget.tsv`, whose rows are the 18
   * poster-family queries (q13–q23, q45, q46, q52, q53, q138, q141,
-  * q186) and a few other catalog queries (q137, q184, q194): each
+  * q186), the fixture join q79 and a few other catalog queries (q137,
+  * q184, q194): each
   * query's construction jobs (building the DataFrame) and execution jobs
   * (a noop write, the sink Bench and `Explain stages` use) must not rise
   * above its row. The poster queries read only the fixtures, so their

@@ -121,6 +121,10 @@ class SmallSortSpec extends AnyFunSuite {
 
   test("q45's shape: a grid joined to a grouped broadcast side sorts in " +
       "one task, in 3 jobs") {
+    // q45's plan before its grid became one partition: the grid's range
+    // × broadcast params, joined to the broadcast vertex arrays grouped
+    // by blob. q45 no longer takes this shape, but the shape still
+    // guards rowBound's unique-side case.
     val dir = TestSpark.tempDir("smallsort_params").toString
     s.range(0, 14, 1, 1).select(col("id").as("k"), (col("id") * 3).as("v"))
       .write.mode("overwrite").parquet(dir)
