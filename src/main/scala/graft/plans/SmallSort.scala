@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet,
+  SortOrder}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join,
-  LogicalPlan, Project, Repartition, ResolvedHint, Sort}
+  LogicalPlan, Project, Range, Repartition, ResolvedHint, Sort}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan,
   SparkStrategy}
@@ -40,26 +41,48 @@ import org.apache.spark.sql.internal.SQLConf
   *    rows × 32 B ≈ 1.8 MB. A runtime row count is not used this way,
   *    because the default width of a string underestimates wide rows.
   *
-  * So a small result must not sit on heavy narrow work. A variant of q46
-  * that folded its tiles per blob inside the tile tasks, with no shuffle
-  * before the 14-row sort, ran the whole 400² rasterization in 1 task
-  * instead of one per core (median warm execution on local[4]:
-  * 0.26–0.27 s → 0.39–0.47 s). q46 keeps its shuffle fold, and
-  * FullScaleGoldenSpec pins its tile stage at min(98,
-  * defaultParallelism) tasks. The 64-grid queries that sort their cells
-  * (q15, q18–q22, q45) run in one task with or without this rule:
-  * `Poster.grid` is one partition, so the sort's child is
-  * SinglePartition already and Spark's own sort adds no exchange. q17
-  * spreads its 16M-row parity join over the cores, and the rule then
-  * sorts its 57,344 aggregated cells in one task.
+  * So a small result must not sit on heavy narrow work, and one kind is
+  * left to Spark: a child that is ordered globally by construction in
+  * the sort's order, a Range with a positive step seen through
+  * projections and filters ([[rangeOrdered]]). Spark's range reports
+  * range partitioning and ordering on its id, so its own sort adds no
+  * exchange and is dropped, and the range's slices stay parallel. q46
+  * is that shape: one slice per blob id, each rasterizing its blob's
+  * 400² cells; under `Coalesce 1` all 14 blobs ran in one task.
+  * FullScaleGoldenSpec pins its one task per blob id.
+  *
+  * The 64-grid queries that sort their cells (q15, q18–q22, q45) run in
+  * one task with or without this rule: `Poster.grid` is one partition,
+  * so the sort's child is SinglePartition already and Spark's own sort
+  * adds no exchange. q17 spreads its 16M-row parity join over the
+  * cores, and the rule then sorts its 57,344 aggregated cells in one
+  * task.
   *
   * Injected via GraftExtensions (and ensureRegistered for sessions built
   * without the extensions conf). */
 object SmallSortStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Sort(order, true, child, _) if !child.isStreaming && small(child) =>
+    case Sort(order, true, child, _) if !child.isStreaming && small(child) &&
+        !rangeOrdered(child, order) =>
       SortExec(order, global = true, CoalesceExec(1, planLater(child))) :: Nil
     case _ => Nil
+  }
+
+  /** Whether `child` is ordered globally by construction in `order`: a
+    * Range with a positive step, seen through projections and filters,
+    * whose ordering (aliases included) satisfies the sort. Spark's range
+    * reports range partitioning on that ordering, so Spark's own sort adds
+    * no exchange and drops the sort, and the range's slices stay parallel.
+    * The logical ordering alone is not enough: a `sortWithinPartitions`
+    * child reports one too, but only within each partition. */
+  private def rangeOrdered(child: LogicalPlan, order: Seq[SortOrder]): Boolean = {
+    def fromRange(p: LogicalPlan): Boolean = p match {
+      case r: Range => r.step > 0
+      case Project(_, c) => fromRange(c)
+      case Filter(_, c) => fromRange(c)
+      case _ => false
+    }
+    fromRange(child) && SortOrder.orderingSatisfies(child.outputOrdering, order)
   }
 
   private def small(child: LogicalPlan): Boolean = {

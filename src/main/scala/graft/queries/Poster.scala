@@ -113,9 +113,21 @@ object Poster {
     * Nor does a join of two fixtures, or of a fixture and the grid built
     * from one, need a broadcast: SinglePartition satisfies a shuffled
     * join's clustering on both sides, so with a `shuffle_hash` hint the
-    * hash join runs inside their one task (q14, q45, q79). `broadcast(...)` there would add a job that only
-    * ships the small side. Broadcast a fixture only when the other side
-    * is spread over many partitions, as q17's grid and the canvas are. */
+    * hash join runs inside their one task (q14, q45, q79, and the grid's
+    * 14-row sides in q18–q22). `broadcast(...)` there would add a job
+    * that only ships the small side. Broadcast a fixture only when the
+    * other side is spread over many partitions, as q17's grid and the
+    * canvas are.
+    *
+    * A hash join reports its sides' partitionings as a collection, and
+    * Spark joins two children without an exchange only when each
+    * reports SinglePartition itself (and is estimated under
+    * `spark.sql.maxSinglePartitionBytes`). So a frame built on such a
+    * join that a later join reads ends in a coalesce(1), narrow on one
+    * partition, which restores the label ([[shadeField]], [[shaded]],
+    * q18's stats). A coalesce ends the codegen stage and so materializes
+    * its rows: it goes after the frame's last projection, never between
+    * the vertex arrays' join and the projection that drops them. */
   private[queries] def fx(s: SparkSession, name: String,
       cfg: PosterCfg = Default): DataFrame = {
     // Defensive native-function registration — the session may not have
@@ -206,10 +218,14 @@ object Poster {
     * downstream consumer of the mask (stats/blur/poster/composite): the
     * cell-local loop replaces the 280× parity-join fan-out, so those
     * pipelines carry no 16 M-row intermediates. Bit-identical to
-    * `inside()` (proven by q45 passing q17's oracle). */
+    * `inside()` (proven by q45 passing q17's oracle). `side` plans the
+    * vertex arrays' join: inside the one task of grid cells by default
+    * (see [[fx]]); the canvas, spread over the cores, broadcasts them
+    * instead. */
   private def insideExpr(s: SparkSession, cells: DataFrame,
-      cfg: PosterCfg = Default): DataFrame =
-    cells.join(broadcast(vertArrays(s, cfg)), "blob_id")
+      cfg: PosterCfg = Default,
+      side: DataFrame => DataFrame = _.hint("shuffle_hash")): DataFrame =
+    cells.join(side(vertArrays(s, cfg)), "blob_id")
       .withColumn("inside", expr("point_in_polygon(gx, gy, xs, ys)"))
       .drop("xs", "ys")
 
@@ -228,8 +244,8 @@ object Poster {
   }
 
   /** P2–P5 + A3/A4 via J2: shade field with relational two-pass normalize —
-    * dist/light bounds are per-blob aggregates broadcast-rejoined onto the
-    * cells (the canonical normalize pattern, app.py:70-78). min/max are
+    * dist/light bounds are per-blob aggregates rejoined onto the cells
+    * (the canonical normalize pattern, app.py:70-78). min/max are
     * order-independent, so the rejoin stays bit-exact cross-engine. */
   /** The raw per-cell shade inputs (dist/light), before normalization —
     * shared by shaded() and q18 so the extrema are aggregated from ONE
@@ -238,14 +254,15 @@ object Poster {
   private def shadeField(s: SparkSession, n: Int,
       cfg: PosterCfg = Default): DataFrame =
     grid(s, n, cfg)
-      .join(broadcast(fx(s, "blob_params", cfg)
-        .select("blob_id", "cx_mean", "cy_mean")), "blob_id")
+      .join(fx(s, "blob_params", cfg).select("blob_id", "cx_mean", "cy_mean")
+        .hint("shuffle_hash"), "blob_id")
       .select(col("blob_id"), col("y"), col("x"), col("gx"), col("gy"),
         (col("gx") - col("cx_mean")).as("nx"),
         (col("gy") - col("cy_mean")).as("ny"))
       .withColumn("dist", sqrt(col("nx") * col("nx") + col("ny") * col("ny")))
       .withColumn("light",
         col("nx") * lit(cfg.lx) + col("ny") * lit(cfg.ly))
+      .coalesce(1) // one partition again for the rejoin (see fx)
 
   /** A1/A3/A4: per-blob normalizer bounds over the shade field. */
   private def shadeStats(g: DataFrame): DataFrame =
@@ -257,13 +274,14 @@ object Poster {
       cfg: PosterCfg = Default): DataFrame = {
     val g = shadeField(s, n, cfg)
     val stats = shadeStats(g)
-    g.join(broadcast(stats), "blob_id")
+    g.join(stats.hint("shuffle_hash"), "blob_id")
       .withColumn("radial", least(lit(1.0),
         greatest(lit(0.0), lit(1.0) - col("dist") / col("dist_max"))))
       .withColumn("lightn", (col("light") - col("light_min")) /
         (col("light_max") - col("light_min")))
       .withColumn("shade",
         lit(0.3) + lit(0.7) * (lit(0.5) * col("radial") + lit(0.5) * col("lightn")))
+      .coalesce(1) // one partition again for posterCells' join (see fx)
   }
 
   private def clip01(c: Column): Column = least(lit(1.0), greatest(lit(0.0), c))
@@ -315,7 +333,8 @@ object Poster {
   private def canvasInside(s: SparkSession,
       cfg: PosterCfg = Default): DataFrame =
     insideExpr(s, canvas(s)
-      .crossJoin(broadcast(fx(s, "blob_params", cfg).select("blob_id"))), cfg)
+      .crossJoin(broadcast(fx(s, "blob_params", cfg).select("blob_id"))), cfg,
+      broadcast(_))
 
   /** W2: the blob layer of the composite — per canvas cell, the visible
     * (painter's-order max_by) blob and its shaded rgba (app.py:93,137).
@@ -418,8 +437,9 @@ object Poster {
     * tables. */
   private[graft] def posterCells(s: SparkSession, cfg: PosterCfg): DataFrame = {
     val sh = shaded(s, N, cfg)
-      .join(broadcast(fx(s, "blob_params", cfg)
-        .select("blob_id", "base_r", "base_g", "base_b", "depth")), "blob_id")
+      .join(fx(s, "blob_params", cfg)
+        .select("blob_id", "base_r", "base_g", "base_b", "depth")
+        .hint("shuffle_hash"), "blob_id")
     val cells = insideExpr(s, grid(s, N, cfg), cfg)
       .select("blob_id", "y", "x", "inside")
     sh.join(cells, Seq("blob_id", "y", "x"))
@@ -498,7 +518,9 @@ object Poster {
       // widen to INT128 and break the dtype compare.
       val m = insideExpr(s, grid(s, N)).groupBy("blob_id")
         .agg(count(when(col("inside"), lit(1))).as("n_mask_cells"))
-      vstats.join(gstats, "blob_id").join(m, "blob_id")
+      // each side one partition again for the next join (see fx)
+      vstats.join(gstats.hint("shuffle_hash"), "blob_id").coalesce(1)
+        .join(m.coalesce(1).hint("shuffle_hash"), "blob_id")
         .orderBy("blob_id")
     }),
 

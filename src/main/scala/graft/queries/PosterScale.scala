@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,24 +24,21 @@ import graft.functions.PointInPolygon
   * q17 also checks that the two grid builders agree.
   *
   * q46 is the honest Spark-vs-reference benchmark: full default-parameter
-  * poster (14 blobs, 400×400, σ=6 shadow blur), rasterized by scanline
-  * inside each (blob, row-tile) task. The 14-row params, the 3,920
-  * vertices and the 37-tap kernel are the small "query" side, collected
-  * at construction in one job (see [[querySide]]); the data side is one
-  * row per (blob, tile), and each task computes its tile's mask, shade
-  * and blur with no shuffle in between (see [[tile]]). The only shuffle
-  * is the per-blob fold of ≤ 98 tile rows. Output is one summary row per
-  * blob, so result size is O(blobs) regardless of grid resolution.
+  * poster (14 blobs, 400×400, σ=6 shadow blur), rasterized by scanline.
+  * The 14-row params, the 3,920 vertices and the 37-tap kernel are the
+  * small "query" side, collected at construction in one job (see
+  * [[querySide]]); the data side is a range over the blob ids, one task
+  * per blob, and each task computes its blob's 7 row tiles' mask, shade
+  * and blur (see [[tile]]) and folds them (see [[summaries]]). Output is
+  * one summary row per blob, so result size is O(blobs) regardless of
+  * grid resolution.
   *
-  * q46 runs 3 Spark jobs: the query-side collect, the tile stage in
-  * min(98, defaultParallelism) tasks, and the one-task fold and sort. The
-  * fold stays behind its shuffle on purpose. Folding per blob inside the
-  * tile tasks saves that job, but the root sort is small, so
-  * SmallSortStrategy's `Coalesce 1` then pulls the tile stage into its
-  * one task (measured on local[4], median of 21 warm noop writes in
-  * each of two JVMs: 4 tasks and 0.26–0.27 s here, 1 task and
-  * 0.39–0.47 s folded). FullScaleGoldenSpec pins the tile stage's task
-  * count.
+  * q46 runs 2 Spark jobs: the query-side collect and one stage of one
+  * task per blob id. Nothing shuffles and nothing sorts: the range is
+  * already ordered by blob id, and SmallSortStrategy leaves such a sort
+  * to Spark rather than pulling the stage into one task.
+  * FullScaleGoldenSpec pins the job count, the task count and the number
+  * of tile calls.
   */
 object PosterScale {
 
@@ -255,13 +252,65 @@ object PosterScale {
     (blobs, rows(2).sortBy(_.getInt(2)).map(v(_).head))
   }
 
-  private val TileSchema = StructType(Seq(
-    StructField("blob_id", LongType, nullable = false),
-    StructField("tile", IntegerType, nullable = false),
-    StructField("cells", LongType, nullable = false),
-    StructField("shade", DecimalType(28, 12), nullable = false),
-    StructField("mass", DoubleType, nullable = false),
-    StructField("depth", DoubleType, nullable = false)))
+  /** The per-tile routine's shape: [[tile]]'s signature. */
+  private[graft] type Tiler = (Blob, Int, Int, Int, Array[Double]) => Option[Tile]
+
+  /** One blob's sums over its tiles, folded in tile order, and the depth
+    * its alpha sum reads. */
+  private[graft] final case class Summary(cells: Long,
+      shade: java.math.BigDecimal, mass: Double, depth: Double)
+
+  /** q46: the full default poster at 400×400. `tiler` is [[tile]]; a spec
+    * passes a wrapper that counts its calls. */
+  private[graft] def fullScale(s: SparkSession,
+      tiler: Tiler = tile): DataFrame = {
+    val n = 400
+    val (bs, kernel) = querySide(s, n)
+    require(kernel.length == 2 * R + 1,
+      s"kernel_sigma6 has ${kernel.length} taps, want ${2 * R + 1}")
+    summaries(s, bs, n, kernel, tiler)
+  }
+
+  /** One summary row per blob of `bs`, in blob_id order, over the n×n
+    * grid. One task per blob id: each task runs its blob's tiles in tile
+    * order and folds them in place, so the tile-order mass sum is
+    * deterministic and the shade sum exact (DECIMAL(28,12) units of
+    * 1e-12, summed as a long). An id between the least and the greatest
+    * with no blob, or a blob with no mask, gives no row.
+    *
+    * The tasks are the slices of a range over the blob ids. Spark's range
+    * reports range partitioning and ordering on its id, and the alias
+    * keeps both, so the root sort needs no exchange and is removed
+    * (SmallSortStrategy leaves a range's sort to Spark). The fold is
+    * marked nondeterministic so that the filter on its result is not
+    * pushed below it, which would run it twice per blob. */
+  private[graft] def summaries(s: SparkSession, bs: Array[Blob], n: Int,
+      kernel: Array[Double], tiler: Tiler = tile): DataFrame = {
+    val nTiles = (n - 1) / T + 1
+    val byId = bs.map(b => b.id -> b).toMap
+    val fold = udf { (id: Long) =>
+      byId.get(id).flatMap { b =>
+        val ts = (0 until nTiles).flatMap(k => tiler(b, k, n, T, kernel))
+        if (ts.isEmpty) None
+        else Some(Summary(ts.map(_.cells).sum,
+          java.math.BigDecimal.valueOf(
+            ts.foldLeft(0L)((u, c) => Math.addExact(u, c.shadeUnits)), 12),
+          ts.foldLeft(0.0)(_ + _.mass), b.depth))
+      }
+    }.asNondeterministic()
+    val ids = bs.map(_.id)
+    val (lo, hi) = if (ids.isEmpty) (0L, -1L) else (ids.min, ids.max)
+    s.range(lo, hi + 1, 1, math.max(1L, math.min(hi - lo + 1, ids.length)).toInt)
+      .select(col("id").as("blob_id"), fold(col("id")).as("b"))
+      .where(col("b").isNotNull)
+      .select(col("blob_id"), col("b.cells").as("n_mask_cells"),
+        round(col("b.shade").cast(DecimalType(38, 12)).cast("double"), 3)
+          .as("mask_shade_sum"),
+        round(lit(0.4) * col("b.cells")
+          + lit(0.6) * col("b.depth") * col("b.cells"), 3).as("alpha_sum"),
+        round(col("b.mass"), 3).as("shadow_mass"))
+      .orderBy("blob_id")
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -280,38 +329,7 @@ object PosterScale {
     // Oracle-checked (see oracles below: bbox-prefiltered PIP + the
     // algebraic blur-mass collapse make the 400-grid DuckDB side ~18 s),
     // on top of q45 ≡ q17 ≡ oracle at 64 and the golden-fixture suite.
-    "q46_poster_fullscale" -> ((s, _) => {
-      val n = 400
-      val (bs, kernel) = querySide(s, n)
-      require(kernel.length == 2 * R + 1,
-        s"kernel_sigma6 has ${kernel.length} taps, want ${2 * R + 1}")
-      val nTiles = (n - 1) / T + 1
-      val total = bs.length * nTiles
-      val tiles = s.range(0, total, 1,
-          math.max(1, math.min(total, s.sparkContext.defaultParallelism)))
-        .flatMap { (id: java.lang.Long) =>
-          val b = bs((id / nTiles).toInt)
-          val k = (id % nTiles).toInt
-          tile(b, k, n, T, kernel).map(c => Row(b.id, k, c.cells,
-            java.math.BigDecimal.valueOf(c.shadeUnits, 12), c.mass, b.depth))
-        }(Encoders.row(TileSchema))
-      // Tile masses fold in TILE ORDER (array_sort before aggregate), so
-      // the double summation is deterministic run-to-run. The shade sum is
-      // exact: DECIMAL(28,12) per cell, summed per tile on the executor
-      // and per blob here, so it is summation-order-free and hash-exact vs
-      // the oracle. A blob with no mask has no tile row, so it has no
-      // output row.
-      tiles.groupBy("blob_id").agg(
-          sum("cells").as("n_mask_cells"),
-          round(sum("shade").cast("double"), 3).as("mask_shade_sum"),
-          round(lit(0.4) * sum("cells")
-            + lit(0.6) * max("depth") * sum("cells"), 3).as("alpha_sum"),
-          round(aggregate(
-            transform(array_sort(collect_list(struct(col("tile"), col("mass")))),
-              v => v.getField("mass")),
-            lit(0.0), (acc, x) => acc + x), 3).as("shadow_mass"))
-        .orderBy("blob_id")
-    }),
+    "q46_poster_fullscale" -> ((s, _) => fullScale(s)),
   )
 
   def oracles: Map[String, String] = Map(

@@ -23,10 +23,10 @@ import graft.queries.PosterScale.{Blob, Tile}
   * equal n_mask_cells at 3 dp. A mis-normalized kernel or a tile halo
   * bug breaks conservation before it breaks anything visible.
   *
-  * Third, the structure: q46 stays one tile-local pass (a job budget)
-  * whose tiles run in parallel (a task count), and at a small grid its
-  * tile routine equals a per-cell point_in_polygon mask with a direct
-  * whole-grid dense blur.
+  * Third, the structure: q46 stays one pass over its blob ids (a job
+  * budget) whose blobs run in parallel (a task count), each blob's tiles
+  * run once, and at a small grid the tile routine equals a per-cell
+  * point_in_polygon mask with a direct whole-grid dense blur.
   */
 class FullScaleGoldenSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -59,10 +59,11 @@ class FullScaleGoldenSpec extends AnyFunSuite {
     }
   }
 
-  test("q46 builds and runs in at most 3 Spark jobs") {
-    // 1 to build (params, vertices and kernel taps in one union collect),
-    // the tile aggregate's map job, and the result job: the final 14-row
-    // sort is one task
+  test("q46 builds in 1 Spark job and runs in at most 2 in all") {
+    // 1 to build (params, vertices and kernel taps in one union collect)
+    // and the one stage over the blob ids: each task folds its blob's
+    // tiles, and the range is already sorted by blob_id, so nothing
+    // shuffles and nothing sorts
     var df: DataFrame = null
     val built = TestSpark.jobsOf {
       df = SparkEntry.queries("q46_poster_fullscale")(s, "unused")
@@ -70,18 +71,46 @@ class FullScaleGoldenSpec extends AnyFunSuite {
     val jobs = built + TestSpark.jobsOf(df.collect())
     info(s"q46 ran $jobs jobs, $built to build")
     assert(built === 1, s"q46 ran $built jobs to build")
-    assert(jobs <= 3, s"q46 ran $jobs jobs")
+    assert(jobs <= 2, s"q46 ran $jobs jobs")
   }
 
-  test("q46's tile stage runs in min(98, defaultParallelism) tasks") {
-    // 14 blobs × 7 row tiles. The tile stage is the run's one stage with
-    // no parent; its tasks must not collapse into the one-task sort
-    // (SmallSortStrategy's Coalesce 1 pulls in a child stage that ends
-    // in no exchange).
+  test("q46 runs one task per blob id, never 1") {
+    // blob ids 0…13 are the range's 14 slices. The stage must not
+    // collapse into one task (a Coalesce 1 under the sort would pull it
+    // in), and no stage may follow it.
     val df = SparkEntry.queries("q46_poster_fullscale")(s, "unused")
-    val leaves = TestSpark.stagesOf(df.collect()).filter(_.parentIds.isEmpty)
-    assert(leaves.map(_.numTasks) ===
-      Seq(math.min(98, s.sparkContext.defaultParallelism)))
+    val stages = TestSpark.stagesOf(df.collect())
+    assert(stages.map(_.numTasks) === Seq(14))
+    val p = df.queryExecution.executedPlan.toString
+    Seq("Exchange", "Coalesce", "Sort ").foreach(op =>
+      assert(!p.contains(op), s"$op in\n$p"))
+  }
+
+  test("q46 runs the tile routine exactly blobs × 7 times") {
+    // 400 rows in 64-row tiles: 7 per blob, each once, whatever the
+    // optimizer does with the filter on the fold's result
+    TileCalls.n.set(0)
+    val rows = PosterScale.fullScale(s, TileCalls.counting).collect()
+    assert(rows.length === 14)
+    assert(TileCalls.n.get === 14 * 7)
+  }
+
+  test("ids with no blob, and blobs with no mask, give no row") {
+    // ids 3, 5 and 9 on the 400 grid over [0, 399]²: blob 5 lies outside
+    // the grid, and 4 and 6…8 are not blobs
+    def at(id: Long, x0: Double, x1: Double, y0: Double, y1: Double) =
+      Blob(id, 0.0, 399.0, 0.0, 399.0, 200.0, 200.0, 0.1 * id, 300.0,
+        -300.0, 300.0, Array(x0, x1, x1, x0), Array(y0, y0, y1, y1))
+    val bs = Array(at(9, 150.5, 300.5, 20.5, 390.5),
+      at(3, 10.5, 120.5, 100.5, 200.5), at(5, 500.0, 600.0, 5.0, 15.0))
+    val w = (-18 to 18).map(o => math.exp(-o * o / 72.0))
+    TileCalls.n.set(0)
+    val got = PosterScale.summaries(s, bs, 400, w.map(_ / w.sum).toArray,
+      TileCalls.counting).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
+    assert(TileCalls.n.get === 3 * 7)
+    // 110 × 100 and 150 × 370 cells; alpha = (0.4 + 0.6 · depth) · cells
+    assert(got.toSeq === Seq((3L, 11000L, 6380.0), (9L, 55500L, 52170.0)))
   }
 
   test("shade units are Spark's CAST(shade AS DECIMAL(28,12)), both paths") {
@@ -173,5 +202,15 @@ class FullScaleGoldenSpec extends AnyFunSuite {
       // clipped at the edge: the blur loses mass beyond the grid
       assert(got.map(_.mass).sum < got.map(_.cells).sum.toDouble)
     }
+  }
+}
+
+/** Counts calls of [[PosterScale.tile]] made through `counting`. The
+  * session is local, so the tasks run in this JVM and share the count. */
+private object TileCalls {
+  val n = new java.util.concurrent.atomic.AtomicLong
+  val counting: PosterScale.Tiler = (b, k, gridN, t, kernel) => {
+    n.incrementAndGet()
+    PosterScale.tile(b, k, gridN, t, kernel)
   }
 }

@@ -175,6 +175,51 @@ class SmallSortSpec extends AnyFunSuite {
     assert(ranRanged(df), plan(df))
   }
 
+  test("a sorted range's sort is left to Spark: one job, a task a slice") {
+    // q46's shape: a 14-slice range, aliased and filtered. Spark's range
+    // reports range partitioning and ordering on its id, so its own sort
+    // needs no exchange and keeps all 14 slices.
+    def rows = s.range(0, 140, 1, 14)
+      .select(col("id").as("k"), (col("id") * 7 % 11).as("v"))
+      .where(col("v") =!= 3)
+    val df = rows.orderBy("k")
+    var got = Array.empty[Row]
+    var leaves = Seq.empty[Int]
+    val jobs = TestSpark.jobsOf {
+      leaves = TestSpark.stagesOf { got = df.collect() }
+        .filter(_.parentIds.isEmpty).map(_.numTasks)
+    }
+    assert(jobs === 1)
+    assert(leaves === Seq(14))
+    val p = plan(df)
+    assert(!ranRanged(df), p)
+    assert(!p.contains("Coalesce"), p)
+    val off = withThreshold("-1") {
+      val d = rows.repartition(3).orderBy("k")
+      assert(ranged(d))
+      d.collect().toSeq
+    }
+    assert(got.toSeq === off)
+    // an order the range does not have still sorts in one task
+    assert(plan(rows.orderBy(col("k").desc)).contains("Coalesce 1"))
+  }
+
+  test("a small sortWithinPartitions child still sorts in one task") {
+    // The local sort reports the order the global one asks for, but only
+    // within each of its 7 partitions. The nondeterministic column keeps
+    // the optimizer from dropping the local sort.
+    val df = s.range(0, 700, 1, 7)
+      .select((col("id") % 13).as("k"), col("id"))
+      .sortWithinPartitions("k", "id")
+      .select(col("k"), col("id"), rand(1).as("r"))
+      .orderBy("k", "id")
+    val p = plan(df)
+    assert(p.contains("Coalesce 1"), p)
+    assert(!ranged(df), p)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      (0L until 700L).map(i => (i % 13, i)).sorted)
+  }
+
   test("a threshold of -1 disables the rule") {
     import s.implicits._
     withThreshold("-1") {
