@@ -52,11 +52,11 @@ import org.apache.spark.sql.internal.SQLConf
   * FullScaleGoldenSpec pins its one task per blob id.
   *
   * The 64-grid queries that sort their cells (q15, q18–q22, q45) run in
-  * one task with or without this rule: `Poster.grid` is one partition,
-  * so the sort's child is SinglePartition already and Spark's own sort
-  * adds no exchange. q17 spreads its 16M-row parity join over the
-  * cores, and the rule then sorts its 57,344 aggregated cells in one
-  * task.
+  * one task with or without this rule: `Poster.grid` (q15) and
+  * `Poster.cells` (the others) are one partition, so the sort's child is
+  * SinglePartition already and Spark's own sort adds no exchange. q17
+  * spreads its 16M-row parity join over the cores, and the rule then
+  * sorts its 57,344 aggregated cells in one task.
   *
   * Injected via GraftExtensions (and ensureRegistered for sessions built
   * without the extensions conf). */

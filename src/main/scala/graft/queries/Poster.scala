@@ -30,7 +30,8 @@ import org.apache.spark.sql.types._
   * so the only shuffle carries one row per output cell, never the 280×
   * edge fan-out. Blur is the bounded-frame neighbor join (kernel dim table
   * broadcast, A6/J5); compositing is max_by, one shuffle on the canvas
-  * cell key. Nothing collects to the driver.
+  * cell key. No query here collects to the driver; the 400-grid q46
+  * (PosterScale) collects only its small query side, in one job.
   */
 object Poster {
 
@@ -110,24 +111,23 @@ object Poster {
     * or window over a fixture then plans no exchange (vertArrays, edges,
     * q18's vertex stats), which saves the shuffle's map job.
     *
-    * Nor does a join of two fixtures, or of a fixture and the grid built
-    * from one, need a broadcast: SinglePartition satisfies a shuffled
-    * join's clustering on both sides, so with a `shuffle_hash` hint the
-    * hash join runs inside their one task (q14, q45, q79, and the grid's
-    * 14-row sides in q18–q22). `broadcast(...)` there would add a job
-    * that only ships the small side. Broadcast a fixture only when the
-    * other side is spread over many partitions, as q17's grid and the
-    * canvas are.
+    * Nor does a join of two fixtures need a broadcast: SinglePartition
+    * satisfies a shuffled join's clustering on both sides, so with a
+    * `shuffle_hash` hint the hash join runs inside their one task (q14,
+    * q79, and the params ⋈ vertex arrays of [[cells]]). `broadcast(...)`
+    * there would add a job that only ships the small side. Broadcast a
+    * fixture only when the other side is spread over many partitions, as
+    * q17's grid and the canvas are.
     *
     * A hash join reports its sides' partitionings as a collection, and
     * Spark joins two children without an exchange only when each
     * reports SinglePartition itself (and is estimated under
     * `spark.sql.maxSinglePartitionBytes`). So a frame built on such a
     * join that a later join reads ends in a coalesce(1), narrow on one
-    * partition, which restores the label ([[shadeField]], [[shaded]],
-    * q18's stats). A coalesce ends the codegen stage and so materializes
-    * its rows: it goes after the frame's last projection, never between
-    * the vertex arrays' join and the projection that drops them. */
+    * partition, which restores the label; only q18's per-blob stats,
+    * joined to its vertex stats, need it. A coalesce ends the codegen
+    * stage and so materializes its rows: it goes after the frame's last
+    * projection. */
   private[queries] def fx(s: SparkSession, name: String,
       cfg: PosterCfg = Default): DataFrame = {
     // Defensive native-function registration — the session may not have
@@ -148,13 +148,17 @@ object Poster {
     * Each blob's bounds row expands to its n² cells (an explode of the
     * row-major cell index), so the grid is one partition, like the
     * fixture it comes from, and building it runs no job. */
-  private[queries] def grid(s: SparkSession, n: Int,
+  private def grid(s: SparkSession, n: Int,
       cfg: PosterCfg = Default): DataFrame =
-    bounds(s, cfg)
+    explodeCells(bounds(s, cfg), n).select(cellCols(n): _*)
+
+  /** Each of `perBlob`'s rows once per cell of its blob's n×n raster, with
+    * the cell's (x, y); [[grid]] and [[cells]] build on it. */
+  private def explodeCells(perBlob: DataFrame, n: Int): DataFrame =
+    perBlob
       .select(col("*"), explode(sequence(lit(0L), lit(n.toLong * n - 1)))
         .as("id"))
       .select(col("*") +: cellXY(n): _*)
-      .select(cellCols(n): _*)
 
   /** The cells of [[grid]], spread over every core: the n² range is the
     * streamed side and the 14 bounds rows are broadcast, in a job of
@@ -171,13 +175,13 @@ object Poster {
   private def bounds(s: SparkSession, cfg: PosterCfg = Default): DataFrame =
     fx(s, "blob_params", cfg).select("blob_id", "xmin", "xmax", "ymin", "ymax")
 
-  /** Cell (x, y) of an n×n raster at its row-major cell index `id`; both
-    * grid builders and the canvas index their cells through this. */
+  /** Cell (x, y) of an n×n raster at its row-major cell index `id`; every
+    * grid builder and the canvas index their cells through this. */
   private def cellXY(n: Int): Seq[Column] =
     Seq((col("id") % n).as("x"), (col("id") / n).cast("long").as("y"))
 
   /** A cell's (blob_id, y, x) and its linspace point (gx, gy) over its
-    * blob's [[bounds]]; both grid builders end in these columns, so they
+    * blob's [[bounds]]; every grid builder ends in these columns, so they
     * compute the same doubles. */
   private def cellCols(n: Int): Seq[Column] = Seq(
     col("blob_id"), col("y"), col("x"),
@@ -203,35 +207,69 @@ object Poster {
     * The coalesce pins the element type to `double NOT NULL` — the
     * expression rejects nullable elements (a null would silently read as
     * 0.0 inside the codegen loop); fixture vertices are never null, so
-    * the NaN arm is unreachable and exists only to carry nullability. */
-  private[queries] def vertArrays(s: SparkSession,
+    * the NaN arm is unreachable and exists only to carry nullability.
+    * One aggregate sorts each blob's (idx, x, y) by idx; both arrays are
+    * read off it. */
+  private def vertArrays(s: SparkSession,
       cfg: PosterCfg = Default): DataFrame =
     fx(s, "blob_vertices", cfg)
       .groupBy("blob_id")
-      .agg(
-        transform(array_sort(collect_list(struct(col("idx"), col("x")))),
-          v => coalesce(v.getField("x"), lit(Double.NaN))).as("xs"),
-        transform(array_sort(collect_list(struct(col("idx"), col("y")))),
-          v => coalesce(v.getField("y"), lit(Double.NaN))).as("ys"))
+      .agg(array_sort(collect_list(struct(col("idx"), col("x"), col("y"))))
+        .as("v"))
+      .select(col("blob_id"),
+        transform(col("v"), v => coalesce(v.getField("x"), lit(Double.NaN)))
+          .as("xs"),
+        transform(col("v"), v => coalesce(v.getField("y"), lit(Double.NaN)))
+          .as("ys"))
 
-  /** Mask via the codegen point_in_polygon expression — used by every
-    * downstream consumer of the mask (stats/blur/poster/composite): the
-    * cell-local loop replaces the 280× parity-join fan-out, so those
-    * pipelines carry no 16 M-row intermediates. Bit-identical to
-    * `inside()` (proven by q45 passing q17's oracle). `side` plans the
-    * vertex arrays' join: inside the one task of grid cells by default
-    * (see [[fx]]); the canvas, spread over the cores, broadcasts them
-    * instead. */
-  private def insideExpr(s: SparkSession, cells: DataFrame,
-      cfg: PosterCfg = Default,
-      side: DataFrame => DataFrame = _.hint("shuffle_hash")): DataFrame =
-    cells.join(side(vertArrays(s, cfg)), "blob_id")
-      .withColumn("inside", expr("point_in_polygon(gx, gy, xs, ys)"))
-      .drop("xs", "ys")
+  /** The codegen point_in_polygon expression over a cell's (gx, gy) and
+    * its blob's vertex arrays: the cell-local loop replaces the 280×
+    * parity-join fan-out, so no mask carries a 16 M-row intermediate.
+    * Bit-identical to `inside()` (proven by q45 passing q17's oracle). */
+  private def pip: Column = expr("point_in_polygon(gx, gy, xs, ys)")
+
+  /** A cell's raw shade inputs (app.py:70-76): its distance from its
+    * blob's vertex centroid and its light term. */
+  private def distLight(cfg: PosterCfg): Seq[Column] = {
+    val nx = col("gx") - col("cx_mean")
+    val ny = col("gy") - col("cy_mean")
+    Seq(sqrt(nx * nx + ny * ny).as("dist"),
+      (nx * lit(cfg.lx) + ny * lit(cfg.ly)).as("light"))
+  }
+
+  /** A cell's `radial`, `lightn` and `shade` (app.py:77-81): its dist and
+    * light normalized by its blob's bounds. */
+  private def shadeCols(distMax: Column, lightMin: Column,
+      lightMax: Column): Seq[Column] = {
+    val radial = clip01(lit(1.0) - col("dist") / distMax)
+    val lightn = (col("light") - lightMin) / (lightMax - lightMin)
+    Seq(radial.as("radial"), lightn.as("lightn"),
+      (lit(0.3) + lit(0.7) * (lit(0.5) * radial + lit(0.5) * lightn))
+        .as("shade"))
+  }
+
+  /** Every cell of each blob's n-grid with what the grid queries read of
+    * it, in one pass (q18–q22, q45): its (blob_id, y, x, gx, gy) as in
+    * [[grid]], its mask bit `inside`, its raw shade inputs (`dist`,
+    * `light`), and its blob's `base_r/g/b` and `depth`. One read of the
+    * params joins the vertex arrays (a `shuffle_hash` join of two
+    * one-partition sides, inside their one task; see [[fx]]) before the
+    * explode, so the cells are one partition and building them runs no
+    * job. Columns a query does not read are pruned, down to the params
+    * scan; the vertex join is inner, so it stays. */
+  private[queries] def cells(s: SparkSession, n: Int,
+      cfg: PosterCfg = Default): DataFrame =
+    explodeCells(fx(s, "blob_params", cfg)
+        .join(vertArrays(s, cfg).hint("shuffle_hash"), "blob_id"), n)
+      .select(cellCols(n) ++ Seq("cx_mean", "cy_mean", "xs", "ys", "base_r",
+        "base_g", "base_b", "depth").map(col): _*)
+      .select(Seq(col("blob_id"), col("y"), col("x"), col("gx"), col("gy"),
+        pip.as("inside")) ++ distLight(cfg) ++
+        Seq("base_r", "base_g", "base_b", "depth").map(col): _*)
 
   /** P18a: even-odd ray cast of cells against edges — the crossing count
     * parity join (app.py:44 recast; formula identical in all engines).
-    * The oracle-facing relational form (q17); insideExpr is the hot path. */
+    * The oracle-facing relational form (q17); [[pip]] is the hot path. */
   private def inside(s: SparkSession, cells: DataFrame): DataFrame = {
     val straddle = (col("y1") > col("gy")) =!= (col("y2") > col("gy"))
     val xint = col("x1") + (col("x2") - col("x1")) *
@@ -243,45 +281,20 @@ object Poster {
       .agg((sum("c") % 2 === 1).as("inside"))
   }
 
-  /** P2–P5 + A3/A4 via J2: shade field with relational two-pass normalize —
-    * dist/light bounds are per-blob aggregates rejoined onto the cells
-    * (the canonical normalize pattern, app.py:70-78). min/max are
-    * order-independent, so the rejoin stays bit-exact cross-engine. */
-  /** The raw per-cell shade inputs (dist/light), before normalization —
-    * shared by shaded() and q18 so the extrema are aggregated from ONE
-    * definition (and, in q18, aggregated only once, not rebuilt through
-    * the rejoin). */
-  private def shadeField(s: SparkSession, n: Int,
-      cfg: PosterCfg = Default): DataFrame =
-    grid(s, n, cfg)
-      .join(fx(s, "blob_params", cfg).select("blob_id", "cx_mean", "cy_mean")
-        .hint("shuffle_hash"), "blob_id")
-      .select(col("blob_id"), col("y"), col("x"), col("gx"), col("gy"),
-        (col("gx") - col("cx_mean")).as("nx"),
-        (col("gy") - col("cy_mean")).as("ny"))
-      .withColumn("dist", sqrt(col("nx") * col("nx") + col("ny") * col("ny")))
-      .withColumn("light",
-        col("nx") * lit(cfg.lx) + col("ny") * lit(cfg.ly))
-      .coalesce(1) // one partition again for the rejoin (see fx)
-
-  /** A1/A3/A4: per-blob normalizer bounds over the shade field. */
-  private def shadeStats(g: DataFrame): DataFrame =
-    g.groupBy("blob_id").agg(
-      max("dist").as("dist_max"), min("light").as("light_min"),
-      max("light").as("light_max"))
-
+  /** P2–P5 + A3/A4 via J2: the shade field with its two-pass normalize
+    * (app.py:70-81) — each cell's dist/light divided by its blob's
+    * extrema, taken over a window per blob. The cells are one partition,
+    * so the window plans no exchange, only a local sort; min/max are
+    * order-independent, so the result stays bit-exact cross-engine. */
   private def shaded(s: SparkSession, n: Int,
       cfg: PosterCfg = Default): DataFrame = {
-    val g = shadeField(s, n, cfg)
-    val stats = shadeStats(g)
-    g.join(stats.hint("shuffle_hash"), "blob_id")
-      .withColumn("radial", least(lit(1.0),
-        greatest(lit(0.0), lit(1.0) - col("dist") / col("dist_max"))))
-      .withColumn("lightn", (col("light") - col("light_min")) /
-        (col("light_max") - col("light_min")))
-      .withColumn("shade",
-        lit(0.3) + lit(0.7) * (lit(0.5) * col("radial") + lit(0.5) * col("lightn")))
-      .coalesce(1) // one partition again for posterCells' join (see fx)
+    val w = Window.partitionBy("blob_id")
+    cells(s, n, cfg)
+      .select(col("*"), max("dist").over(w).as("dist_max"),
+        min("light").over(w).as("light_min"),
+        max("light").over(w).as("light_max"))
+      .select(col("*") +: shadeCols(col("dist_max"), col("light_min"),
+        col("light_max")): _*)
   }
 
   private def clip01(c: Column): Column = least(lit(1.0), greatest(lit(0.0), c))
@@ -329,12 +342,15 @@ object Poster {
         (col("y").cast("double") / lit((N - 1).toDouble)).as("gy"))
 
   /** Every (blob, canvas cell) with its inside-mask bit — the shared
-    * front half of the compositing queries. */
+    * front half of the compositing queries. The canvas is spread over the
+    * cores, so the blob ids and the vertex arrays are broadcast. */
   private def canvasInside(s: SparkSession,
       cfg: PosterCfg = Default): DataFrame =
-    insideExpr(s, canvas(s)
-      .crossJoin(broadcast(fx(s, "blob_params", cfg).select("blob_id"))), cfg,
-      broadcast(_))
+    canvas(s)
+      .crossJoin(broadcast(fx(s, "blob_params", cfg).select("blob_id")))
+      .join(broadcast(vertArrays(s, cfg)), "blob_id")
+      .withColumn("inside", pip)
+      .drop("xs", "ys")
 
   /** W2: the blob layer of the composite — per canvas cell, the visible
     * (painter's-order max_by) blob and its shaded rgba (app.py:93,137).
@@ -345,17 +361,9 @@ object Poster {
     val p = fx(s, "blob_params", cfg)
     val in = canvasInside(s, cfg).where(col("inside"))
     val lit01 = in.join(broadcast(p), "blob_id")
-      .withColumn("nx", col("gx") - col("cx_mean"))
-      .withColumn("ny", col("gy") - col("cy_mean"))
-      .withColumn("dist", sqrt(col("nx") * col("nx") + col("ny") * col("ny")))
-      .withColumn("light",
-        col("nx") * lit(cfg.lx) + col("ny") * lit(cfg.ly))
-      .withColumn("radial", least(lit(1.0),
-        greatest(lit(0.0), lit(1.0) - col("dist") / col("dist_max64"))))
-      .withColumn("lightn", (col("light") - col("light_min64")) /
-        (col("light_max64") - col("light_min64")))
-      .withColumn("shade",
-        lit(0.3) + lit(0.7) * (lit(0.5) * col("radial") + lit(0.5) * col("lightn")))
+      .select(col("*") +: distLight(cfg): _*)
+      .select(col("*") +: shadeCols(col("dist_max64"), col("light_min64"),
+        col("light_max64")): _*)
     lit01.groupBy("y", "x").agg(
       max("blob_id").as("top_blob"),
       max_by(clip01(col("base_r") * col("shade")), col("blob_id")).as("r"),
@@ -431,18 +439,12 @@ object Poster {
       .orderBy("y", "x")
   }
 
-  /** The full per-cell pipeline (q22 body): mask ⨝ shade → rgba, as a
+  /** The full per-cell pipeline (q22 body): mask and shade → rgba, as a
     * function of the parameter point — golden-checked at BOTH points
     * (GoldenPosterSpec / PosterAltSpec) against their numpy-frozen cell
-    * tables. */
-  private[graft] def posterCells(s: SparkSession, cfg: PosterCfg): DataFrame = {
-    val sh = shaded(s, N, cfg)
-      .join(fx(s, "blob_params", cfg)
-        .select("blob_id", "base_r", "base_g", "base_b", "depth")
-        .hint("shuffle_hash"), "blob_id")
-    val cells = insideExpr(s, grid(s, N, cfg), cfg)
-      .select("blob_id", "y", "x", "inside")
-    sh.join(cells, Seq("blob_id", "y", "x"))
+    * tables. A projection of [[shaded]]: no join. */
+  private[graft] def posterCells(s: SparkSession, cfg: PosterCfg): DataFrame =
+    shaded(s, N, cfg)
       .select(col("blob_id"), col("y"), col("x"), col("inside").as("mask"),
         col("shade"),
         clip01(col("base_r") * col("shade")).as("r"),
@@ -451,7 +453,6 @@ object Poster {
         when(col("inside"), lit(0.4) + lit(0.6) * col("depth"))
           .otherwise(0.0).as("a"))
       .orderBy("blob_id", "y", "x")
-  }
 
   // ---------------------------------------------------------------- queries
 
@@ -513,18 +514,18 @@ object Poster {
         min("y").as("py_min"), max("y").as("py_max"),
         round(sum("x") / count(lit(1)), 9).as("cx_mean"),
         round(sum("y") / count(lit(1)), 9).as("cy_mean"))
-      val gstats = shadeStats(shadeField(s, N))
       // count(when…) keeps BIGINT on both sides — DuckDB's SUM(int) would
       // widen to INT128 and break the dtype compare.
-      val m = insideExpr(s, grid(s, N)).groupBy("blob_id")
-        .agg(count(when(col("inside"), lit(1))).as("n_mask_cells"))
-      // each side one partition again for the next join (see fx)
-      vstats.join(gstats.hint("shuffle_hash"), "blob_id").coalesce(1)
-        .join(m.coalesce(1).hint("shuffle_hash"), "blob_id")
+      val gstats = cells(s, N).groupBy("blob_id").agg(
+        max("dist").as("dist_max"), min("light").as("light_min"),
+        max("light").as("light_max"),
+        count(when(col("inside"), lit(1))).as("n_mask_cells"))
+      // one partition again for the join (see fx)
+      vstats.join(gstats.coalesce(1).hint("shuffle_hash"), "blob_id")
         .orderBy("blob_id")
     }),
 
-    // P2–P7+J2: the shade field with relational two-pass normalization.
+    // P2–P7+J2: the shade field, normalized by per-blob window extrema.
     "q19_shading" -> ((s, _) =>
       shaded(s, N)
         .select(col("blob_id"), col("y"), col("x"),
@@ -536,8 +537,7 @@ object Poster {
     // absent neighbors ≡ zero padding. σ=2 kernel (13 taps) at the 64 grid
     // per app.py:88 (max(2, 64·0.015)=2).
     "q20_blur_pass1" -> ((s, _) => {
-      val m = insideExpr(s, grid(s, N)).where(col("inside"))
-        .select("blob_id", "y", "x")
+      val m = cells(s, N).where(col("inside")).select("blob_id", "y", "x")
       blurPass(m, fx(s, "kernel_sigma2"), "x", col("weight"), "v1")
         .orderBy("blob_id", "y", "x")
     }),
@@ -546,11 +546,11 @@ object Poster {
     // reference's hand-rolled optimization preserved structurally. The
     // rounded pass-1 value is the deterministic cross-engine intermediate.
     "q21_blur_sep2d" -> ((s, _) =>
-      blur2d(s, insideExpr(s, grid(s, N)).where(col("inside"))
+      blur2d(s, cells(s, N).where(col("inside"))
         .select("blob_id", "y", "x"))
         .orderBy("blob_id", "y", "x")),
 
-    // The full per-cell pipeline (app.py:51-93): mask ⨝ shade → rgba.
+    // The full per-cell pipeline (app.py:51-93): mask and shade → rgba.
     // Golden-checked against fixtures/golden_cells_64.parquet in the test
     // suite AND oracle-checked against DuckDB — all elementwise, exact.
     "q22_poster_cells" -> ((s, _) => posterCells(s, Default)),

@@ -14,12 +14,14 @@ import graft.functions.PointInPolygon
   *
   * q45 runs the expression at the 64 grid and is checked against the SAME
   * DuckDB oracle as the relational q17 — proving expression ≡ parity join
-  * ≡ oracle bit-for-bit before the expression is trusted at scale. Its
-  * cells come from `Poster.grid`, one partition, and hash-join the 14
-  * vertex-array rows (a `shuffle_hash` hint, not a broadcast, since both
-  * sides are one partition; see `Poster.fx`). No exchange and no
-  * broadcast is planned, so the grid, the join, the 57,344
-  * point-in-polygon tests and the root sort run as 1 job of 1 task.
+  * ≡ oracle bit-for-bit before the expression is trusted at scale. It
+  * selects `inside` from `Poster.cells`, whose params rows hash-join the
+  * 14 vertex-array rows (a `shuffle_hash` hint, not a broadcast, since
+  * both sides are one partition; see `Poster.fx`) before they explode
+  * into cells; its scan of the params keeps only the bounds columns. No
+  * exchange and no broadcast is planned, so the join, the grid, the
+  * 57,344 point-in-polygon tests and the root sort run as 1 job of 1
+  * task.
   * q17 builds the same cells on a range spread over the cores, so q45 ≡
   * q17 also checks that the two grid builders agree.
   *
@@ -315,14 +317,11 @@ object PosterScale {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // P18b: the codegen expression at the oracle grid — same output (and
-    // same oracle) as the relational q17, zero join fan-out. The grid and
-    // the vertex arrays are both one partition, so the join, the
-    // expression and the sort run in one task and one job.
+    // same oracle) as the relational q17, zero join fan-out. The cells are
+    // one partition, so the vertex join, the expression and the sort run
+    // in one task and one job.
     "q45_pip_expr" -> ((s, _) =>
-      Poster.grid(s, 64)
-        .join(Poster.vertArrays(s).hint("shuffle_hash"), "blob_id")
-        .select(col("blob_id"), col("y"), col("x"),
-          expr("point_in_polygon(gx, gy, xs, ys)").as("inside"))
+      Poster.cells(s, 64).select("blob_id", "y", "x", "inside")
         .orderBy("blob_id", "y", "x")),
 
     // The reference's full default poster at 400×400 — per-blob summary.

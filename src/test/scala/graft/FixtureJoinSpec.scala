@@ -1,20 +1,24 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec,
+  SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Joins of two fixtures run inside the fixtures' one task. Every
-  * `Poster.fx` scan is one partition, and so is `Poster.grid`, which
-  * explodes each blob's params row into its cells. A `shuffle_hash` join
-  * of two of them needs no exchange and no broadcast: q45 (grid ⋈ vertex
-  * arrays, then the point-in-polygon expression and the root sort), q14
-  * (params ⋈ palette) and q79 (vertices ⋈ params) each run one job. q45
-  * stays row-for-row the relational parity join q17, whose cells come
-  * from a range spread over the cores, and keeps its one job whether or
-  * not AQE runs and whether or not a broadcast threshold is set. */
+  * `Poster.fx` scan is one partition, and so is `Poster.cells`, which
+  * joins each blob's params row to its vertex arrays and explodes it into
+  * its cells. A `shuffle_hash` join of two of them needs no exchange and
+  * no broadcast: q45 (`inside` of the cells, then the root sort), q14
+  * (params ⋈ palette) and q79 (vertices ⋈ params) each run one job. q18,
+  * q19 and q22 build on the cells too: one params scan and one explode
+  * each, with no exchange. q45 stays row-for-row the relational parity
+  * join q17, whose cells come from a range spread over the cores, and
+  * keeps its one job whether or not AQE runs and whether or not a
+  * broadcast threshold is set. */
 class FixtureJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val s = TestSpark.spark
 
@@ -35,15 +39,36 @@ class FixtureJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(q45Rows === rows)
   }
 
-  for (name <- Seq("q45_pip_expr", "q14_palette", "q79_polar_vertices"))
+  /** `name`'s final adaptive plan, after one collect. */
+  private def finalPlan(name: String): SparkPlan = {
+    val df = q(name)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(plan.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan, plan)
+    plan
+  }
+
+  for (name <- Seq("q45_pip_expr", "q14_palette", "q79_polar_vertices",
+      "q18_mask_stats", "q19_shading", "q22_poster_cells"))
     test(s"$name's final plan has no broadcast and no shuffle exchange") {
-      val df = q(name)
-      df.collect()
-      val plan = df.queryExecution.executedPlan
-      assert(plan.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan, plan)
+      val plan = finalPlan(name)
       // collect descends into the query stages of the final plan
       assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
     }
+
+  test("q18, q19 and q22 each scan blob_params once and explode once") {
+    for (name <- Seq("q18_mask_stats", "q19_shading", "q22_poster_cells")) {
+      val plan = finalPlan(name)
+      val scans = collect(plan) {
+        case f: FileSourceScanExec
+            if f.relation.location.rootPaths.exists(
+              _.getName == "blob_params.parquet") => f
+      }
+      assert(scans.length === 1, s"$name: $plan")
+      assert(collect(plan) { case g: GenerateExec => g }.length === 1,
+        s"$name: $plan")
+    }
+  }
 
   test("q45 runs 1 stage") {
     val df = q("q45_pip_expr")

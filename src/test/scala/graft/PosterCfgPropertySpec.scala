@@ -65,8 +65,8 @@ class PosterCfgPropertySpec extends AnyFunSuite {
   /** Write a complete synthetic fixture dir for one cfg point and return
     * the cfg. The frozen 64-grid shade bounds (dist_max64 etc.) are
     * recomputed here from their DEFINITIONS (app.py:70-78) — an
-    * independent twin of shadeField/shadeStats, driver-side over the
-    * tiny 64² bbox grid. */
+    * independent twin of the engine's per-blob shade extrema,
+    * driver-side over the tiny 64² bbox grid. */
   private def mkCfg(n: Int, sigma: Double, light: (Double, Double)): (PosterCfg, Seq[Blob]) = {
     import s.implicits._
     val dir = TestSpark.tempDir(s"graft_cfg_prop_${n}_").toString
@@ -77,7 +77,7 @@ class PosterCfgPropertySpec extends AnyFunSuite {
       val xmin = bl.vxmin - PAD * w; val xmax = bl.vxmax + PAD * w
       val ymin = bl.vymin - PAD * h; val ymax = bl.vymax + PAD * h
       // 64-grid shade bounds from the definition, independently of the
-      // engine's shadeField/shadeStats dataflow under test
+      // engine's shade window (`Poster.shaded`) under test
       var dmax = 0.0
       var lmin = Double.MaxValue; var lmax = Double.MinValue
       for (y <- 0 until N; x <- 0 until N) {
